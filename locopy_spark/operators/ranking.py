@@ -77,14 +77,12 @@ def global_row_number(
     ``bounded=True``: the domain-bounded arm (see
     :func:`global_running_sum`) — one plain window over a
     SinglePartition exchange, no range sampler, no offset join.  Pass
-    only with a boundedness argument in hand."""
+    only with a boundedness argument in hand (not combined with
+    ``_return_total``)."""
     if bounded:
-        out = df.withColumn(
+        return df.withColumn(
             out_col, F.row_number().over(Window.orderBy(*order_cols))
         )
-        if _return_total:
-            return out, df.agg(F.count(F.lit(1)).alias("__total"))
-        return out
     ranged = _ranged(df, order_cols, num_partitions)
     cnts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
     off = cnts.select(
@@ -252,7 +250,6 @@ def grouped_global_running_sum(
     out_col: str = "cumw",
     total_col: str | None = None,
     num_partitions: int | None = None,
-    bounded: bool = False,
 ) -> DataFrame:
     """Exact INCLUSIVE running sum of ``weight_col`` *within each
     group* under ``order_cols`` — :func:`grouped_global_row_number`
@@ -267,26 +264,7 @@ def grouped_global_running_sum(
     (broadcast G-row join) — together they power weighted quantiles /
     cumulative-share arithmetic without a one-task-per-group window.
     Weights must be bigint (exactness contract).
-
-    ``bounded=True``: the domain-bounded arm (see
-    :func:`global_running_sum`) — a plain per-group window (one hash
-    exchange on the group keys, no range sampler, no offset join).
-    Pass it only when every single group's rows are provably bounded
-    by a value domain, not data volume.
     """
-    if bounded:
-        w = (
-            Window.partitionBy(*group_cols)
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        out = df.withColumn(out_col, F.sum(weight_col).over(w))
-        if total_col:
-            tots = df.groupBy(*group_cols).agg(
-                F.sum(weight_col).alias(total_col)
-            )
-            out = out.join(F.broadcast(tots), group_cols)
-        return out
     ranged = _ranged(df, [*group_cols, *order_cols], num_partitions)
     sums = ranged.groupBy("__pid", *group_cols).agg(
         F.coalesce(F.sum(weight_col), F.lit(0)).alias("__s")

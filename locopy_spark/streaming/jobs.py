@@ -199,8 +199,8 @@ def stream_incr_rollup(
     query; read ``global_temp.<state_view>`` after stopping.
     """
     from locopy_spark.operators.merge import merge_upsert
+    from locopy_spark.streaming.stateful import _start
 
-    spark = events.sparkSession
     agg = (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window), "event_type")
@@ -217,11 +217,6 @@ def stream_incr_rollup(
             "sum_value_fix",
         )
     )
-    empty = spark.createDataFrame(
-        [],
-        "hour_us long, event_type string, n_events long, sum_value_fix long",
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -234,12 +229,11 @@ def stream_incr_rollup(
         ).localCheckpoint()
         merged.createOrReplaceGlobalTempView(state_view)
 
-    return (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .queryName(f"incr_rollup_{state_view}")
-        .start()
+    empty = events.sparkSession.createDataFrame(
+        [],
+        "hour_us long, event_type string, n_events long, sum_value_fix long",
     )
+    return _start(agg, upsert, {state_view: empty}, mode="update")
 
 
 DOC_SCHEMA = T.StructType(

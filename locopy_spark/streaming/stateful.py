@@ -1,5 +1,29 @@
 """Custom stateful streaming operators.
 
+Most twins here maintain a MONOID state: each micro-batch reduces to a
+partial state (the per-operator ``queries.*`` state function), and the
+merge re-aggregates the union of that partial with the running state.
+One combinator does this for all of them:
+
+- :func:`monoid_merge` is the pure merge. The state columns the
+  ``merge`` spec does not name are the group keys; each named column
+  merges with ``'sum'``, ``'min'``, ``'max'`` or ``'first'`` (or a
+  callable building the aggregate from the column name). An empty spec
+  is set union (``distinct``); a callable spec maps the unioned frame
+  to the merged one (top-K).
+- ``_stream_monoid`` runs that merge per micro-batch against a
+  ``global_temp`` state view (global, because ``foreachBatch`` runs in
+  a cloned session whose plain temp views are invisible), cutting the
+  lineage with ``localCheckpoint``. Each public ``stream_*`` twin is a
+  thin wrapper naming its partial function, state schema and spec.
+
+View ownership: every query here starts through one helper that names
+the query after the views it writes. Starting a query on a view that
+an active query of the same session already owns raises ``ValueError``
+before the view is touched, so a second start can neither wipe a live
+query's state nor interleave two writers on one view. A stopped
+query's view can be reused; the restart resets it.
+
 ``stream_user_totals`` is the pattern for operators Spark's built-in
 windowed aggregations can't express: arbitrary per-key state carried
 across micro-batches via ``applyInPandasWithState`` (Arrow-batched —
@@ -15,7 +39,7 @@ out instead of growing forever.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 import pandas as pd
 
@@ -23,6 +47,123 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+_AGGS = {"sum": F.sum, "min": F.min, "max": F.max, "first": F.first}
+
+
+def monoid_merge(state: DataFrame, part: DataFrame, merge) -> DataFrame:
+    """Merge a batch's partial state into the running state: union,
+    then re-aggregate by the state columns ``merge`` does not name.
+
+    ``merge`` maps each merged column to ``'sum'``, ``'min'``,
+    ``'max'``, ``'first'`` (keep-any, for values that are a function
+    of the key) or a callable ``column name -> aggregate Column``. An
+    empty ``merge`` is set union; a callable ``merge`` receives the
+    union and returns the merged frame. The result keeps the state's
+    column order."""
+    both = state.unionByName(part)
+    if callable(merge):
+        return merge(both)
+    if not merge:
+        return both.distinct()
+    keys = [c for c in state.columns if c not in merge]
+    aggs = [
+        (_AGGS[fn](c) if isinstance(fn, str) else fn(c)).alias(c)
+        for c, fn in merge.items()
+    ]
+    return both.groupBy(*keys).agg(*aggs).select(*state.columns)
+
+
+def _start(df: DataFrame, step, views: dict, mode: str = "append"):
+    """Start ``step`` as the ``foreachBatch`` query that owns ``views``
+    ({global_temp view: initial DataFrame, or None for a view the step
+    publishes itself}). Refuses, before publishing anything, a view an
+    active query of this session already owns."""
+    active = {
+        v
+        for q in df.sparkSession.streams.active
+        for v in (q.name or "").split(",")
+    }
+    taken = sorted(set(views) & active)
+    if taken:
+        raise ValueError(
+            f"global_temp view {', '.join(taken)} is owned by an active "
+            "streaming query; stop it first or choose another view name"
+        )
+    for view, init in views.items():
+        if init is not None:
+            init.createOrReplaceGlobalTempView(view)
+    return (
+        df.writeStream.outputMode(mode)
+        .foreachBatch(step)
+        .queryName(",".join(views))
+        .start()
+    )
+
+
+def _stream_monoid(
+    df: DataFrame,
+    partial_fn: Callable[[DataFrame], DataFrame],
+    schema: str,
+    merge,
+    view: str,
+    init=(),
+):
+    """Maintain ``global_temp.<view>`` (DDL ``schema``, seeded with the
+    ``init`` rows) as the :func:`monoid_merge` of every micro-batch's
+    ``partial_fn`` output. Returns the started query."""
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        state = batch_df.sparkSession.table(f"global_temp.{view}")
+        merged = monoid_merge(state, partial_fn(batch_df), merge)
+        merged.localCheckpoint().createOrReplaceGlobalTempView(view)
+
+    seed = df.sparkSession.createDataFrame(list(init), schema)
+    return _start(df, step, {view: seed})
+
+
+def _sums(cols: list[str]) -> tuple[str, dict]:
+    """(schema, spec) of a keyless all-sum state from ``name type``
+    column declarations."""
+    return ", ".join(cols), dict.fromkeys((c.split()[0] for c in cols), "sum")
+
+
+# Merge specs shared by several twins or pinned by property tests.
+LEVENE_GRID_SPEC = (
+    "o_orderpriority string, v bigint, cnt bigint",
+    {"cnt": "sum"},
+)
+NDR_SPEC = ("o_custkey long, yr int, rev_c bigint", {"rev_c": "sum"})
+ANN_POSTINGS_SPEC = (
+    "vec_id long, table int, bucket long",
+    {"bucket": "first"},
+)
+ANN_LISTS_SPEC = (
+    "centroid_id long, n_id long, n_emb array<float>, n_norm bigint",
+    {"centroid_id": "first", "n_emb": "first", "n_norm": "first"},
+)
+
+
+def first_touch_spec() -> tuple[str, dict]:
+    """Per-user first-touch MIN state of stream_shapley/stream_cochran_q."""
+    from locopy_spark.queries.events_ext import SHAPLEY_CHANNELS
+
+    mins = ["conv_us"] + [f"t{i}_us" for i in range(len(SHAPLEY_CHANNELS))]
+    schema = "user_id long, " + ", ".join(f"{c} bigint" for c in mins)
+    return schema, dict.fromkeys(mins, "min")
+
+
+def welch_spec() -> tuple[str, dict]:
+    """One-row all-sum state of stream_welch."""
+    from locopy_spark.queries.stats import ANOVA_GROUPS
+
+    cols = ["n bigint"]
+    for i in range(1, len(ANOVA_GROUPS) + 1):
+        cols += [f"n{i} bigint", f"s{i} decimal(38,0)", f"sq{i} decimal(38,0)"]
+    return _sums(cols)
+
 
 USER_TOTALS_SCHEMA = T.StructType(
     [
@@ -112,17 +253,9 @@ def stream_near_dedup(
     lives in a keyed table with TTL rather than a global temp view.
     Returns the started query; read ``global_temp.<out_view>``.
     """
-    from pyspark.sql import functions as F
-
     from locopy_spark.operators.dedup import minhash_bands
 
     spark = docs.sparkSession
-    empty_state = spark.createDataFrame(
-        [], "band int, bh string, owner long"
-    )
-    empty_state.createOrReplaceGlobalTempView(state_view)
-    empty_out = spark.createDataFrame([], "doc_id long, is_dup boolean")
-    empty_out.createOrReplaceGlobalTempView(out_view)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -164,11 +297,15 @@ def stream_near_dedup(
         out.createOrReplaceGlobalTempView(out_view)
         merged.createOrReplaceGlobalTempView(state_view)
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"near_dedup_{out_view}")
-        .start()
+    return _start(
+        docs,
+        step,
+        {
+            state_view: spark.createDataFrame(
+                [], "band int, bh string, owner long"
+            ),
+            out_view: spark.createDataFrame([], "doc_id long, is_dup boolean"),
+        },
     )
 
 
@@ -199,7 +336,6 @@ def stream_asof_enrich(
     """
     from locopy_spark.operators.asof import asof_join
 
-    spark = events.sparkSession
     holder = {"first": True}
 
     def enrich(batch_df: DataFrame, batch_id: int) -> None:
@@ -220,12 +356,7 @@ def stream_asof_enrich(
             out = s.table(f"global_temp.{out_view}").unionByName(joined)
         out.createOrReplaceGlobalTempView(out_view)
 
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(enrich)
-        .queryName(f"asof_enrich_{out_view}")
-        .start()
-    )
+    return _start(events, enrich, {out_view: None})
 
 
 def stream_cdc_apply(
@@ -261,14 +392,12 @@ def stream_cdc_apply(
     """
     from pyspark.sql import Window
 
-    spark = changes.sparkSession
     cols = snapshot.columns
     base = snapshot.select(
         "*",
         F.lit(0).cast("long").alias("__seq"),
         F.lit(False).alias("__deleted"),
     ).localCheckpoint()
-    base.createOrReplaceGlobalTempView(state_view)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -314,19 +443,11 @@ def stream_cdc_apply(
         merged = kept.unionByName(upserts).localCheckpoint()
         merged.createOrReplaceGlobalTempView(state_view)
 
-    return (
-        changes.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"cdc_apply_{state_view}")
-        .start()
-    )
+    return _start(changes, step, {state_view: base})
 
 
 def stream_topk(
-    docs: DataFrame,
-    score_col,
-    k: int = 50,
-    state_view: str = "topk_state",
+    docs: DataFrame, score_col, k: int = 50, state_view: str = "topk_state"
 ):
     """Continuously-maintained global top-K: keep the K highest-scoring
     documents seen so far on the stream.
@@ -340,40 +461,16 @@ def stream_topk(
     same data (the test asserts it). Returns the started query; read
     ``global_temp.<state_view>`` after stopping.
     """
-    spark = docs.sparkSession
-
     def top(df: DataFrame) -> DataFrame:
-        return df.orderBy(
-            F.col("score").desc(), F.col("doc_id")
-        ).limit(k)
+        return df.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k)
 
-    scored_schema = "doc_id long, score double"
-    empty = spark.createDataFrame([], scored_schema)
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        scored = batch_df.select(
-            "doc_id", score_col.alias("score")
-        )
-        state = s.table(f"global_temp.{state_view}")
-        merged = top(state.unionByName(top(scored))).localCheckpoint()
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"topk_{state_view}")
-        .start()
+    return _stream_monoid(
+        docs, lambda b: top(b.select("doc_id", score_col.alias("score"))),
+        "doc_id long, score double", top, state_view,
     )
 
 
-def stream_profile(
-    docs: DataFrame,
-    state_view: str = "profile_state",
-):
+def stream_profile(docs: DataFrame, state_view: str = "profile_state"):
     """Continuously-maintained data profile of a document stream:
     row/null counts and doc_id / n_chars min-max, merged additively
     across micro-batches.
@@ -386,46 +483,23 @@ def stream_profile(
     is one row forever; the test checks the streamed profile equals
     the batch aggregate over the same data.
     """
-    spark = docs.sparkSession
-    schema = (
-        "n_rows long, n_null_text long, min_doc_id long, max_doc_id long,"
-        " min_chars long, max_chars long"
-    )
-    empty = spark.createDataFrame([], schema)
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        row = batch_df.agg(
+    return _stream_monoid(
+        docs,
+        lambda b: b.agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.expr("COUNT(*) - COUNT(text)").alias("n_null_text"),
             F.min("doc_id").alias("min_doc_id"),
             F.max("doc_id").alias("max_doc_id"),
             F.min("n_chars").alias("min_chars"),
             F.max("n_chars").alias("max_chars"),
-        )
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(row)
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("n_null_text").alias("n_null_text"),
-                F.min("min_doc_id").alias("min_doc_id"),
-                F.max("max_doc_id").alias("max_doc_id"),
-                F.min("min_chars").alias("min_chars"),
-                F.max("max_chars").alias("max_chars"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"profile_{state_view}")
-        .start()
+        ),
+        "n_rows long, n_null_text long, min_doc_id long, max_doc_id long,"
+        " min_chars long, max_chars long",
+        {
+            "n_rows": "sum", "n_null_text": "sum", "min_doc_id": "min",
+            "max_doc_id": "max", "min_chars": "min", "max_chars": "max",
+        },
+        state_view,
     )
 
 
@@ -467,8 +541,7 @@ def score_daily_anomalies(daily: DataFrame) -> DataFrame:
 
 
 def stream_daily_anomaly(
-    events: DataFrame,
-    state_view: str = "daily_anomaly_state",
+    events: DataFrame, state_view: str = "daily_anomaly_state"
 ):
     """Incrementally-maintained daily value series for anomaly
     scoring: each micro-batch contributes per-day exact scaled sums
@@ -482,47 +555,25 @@ def stream_daily_anomaly(
     batch (the series is the expensive part at 100 TB, not the
     scan-free scoring pass).
     """
-    spark = events.sparkSession
-    empty = spark.createDataFrame([], "day long, x_fix long")
-    empty.createOrReplaceGlobalTempView(state_view)
+    from locopy_spark.functions.numeric import sql_epoch_day
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.functions.numeric import sql_epoch_day
-
-        # type-robust epoch day: the stream source may deliver TIMESTAMP
-        # or TIMESTAMP_NTZ (Spark 4 reads plain parquet µs as NTZ, where
-        # bare unix_micros() fails analysis); sql_epoch_day floors toward
-        # -inf so pre-1970 rows don't collapse into a wide day-0 bin
-        rows = batch_df.select(
-            F.expr(sql_epoch_day(batch_df, "ts")).alias("day"),
-            F.expr("cast(floor(value * 1000 + 0.5) as bigint)").alias(
-                "x_fix"
-            ),
+    # type-robust epoch day: the stream source may deliver TIMESTAMP
+    # or TIMESTAMP_NTZ (Spark 4 reads plain parquet µs as NTZ, where
+    # bare unix_micros() fails analysis); sql_epoch_day floors toward
+    # -inf so pre-1970 rows don't collapse into a wide day-0 bin
+    def daily(b: DataFrame) -> DataFrame:
+        return b.select(
+            F.expr(sql_epoch_day(b, "ts")).alias("day"),
+            F.expr("cast(floor(value * 1000 + 0.5) as bigint)").alias("x_fix"),
         ).groupBy("day").agg(F.sum("x_fix").alias("x_fix"))
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(rows)
-            .groupBy("day")
-            .agg(F.sum("x_fix").alias("x_fix"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
 
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"daily_anomaly_{state_view}")
-        .start()
+    return _stream_monoid(
+        events, daily, "day long, x_fix long", {"x_fix": "sum"}, state_view
     )
 
 
 def stream_kmv_sketch(
-    docs: DataFrame,
-    k: int = 64,
-    shingle_k: int = 3,
+    docs: DataFrame, k: int = 64, shingle_k: int = 3,
     state_view: str = "kmv_state",
 ):
     """Continuously-maintained per-source KMV shingle sketches — the
@@ -542,50 +593,23 @@ def stream_kmv_sketch(
     """
     from locopy_spark.functions.text import shingles_expr, tokens_expr
 
-    spark = docs.sparkSession
-    empty = spark.createDataFrame([], "source string, kmv array<string>")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        batch_sk = (
-            batch_df.select(
-                "source", F.expr(tokens_expr("text")).alias("toks")
-            )
-            .select(
-                "source",
-                F.explode(F.expr(shingles_expr("toks", shingle_k))).alias(
-                    "sh"
-                ),
-            )
+    def sketch(b: DataFrame) -> DataFrame:
+        shingles = F.explode(F.expr(shingles_expr("toks", shingle_k)))
+        return (
+            b.select("source", F.expr(tokens_expr("text")).alias("toks"))
+            .select("source", shingles.alias("sh"))
             .select("source", F.md5("sh").alias("h"))
             .groupBy("source")
             .agg(F.slice(F.sort_array(F.collect_set("h")), 1, k).alias("kmv"))
         )
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(batch_sk)
-            .groupBy("source")
-            .agg(
-                F.slice(
-                    F.array_sort(
-                        F.array_distinct(F.flatten(F.collect_list("kmv")))
-                    ),
-                    1,
-                    k,
-                ).alias("kmv")
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"kmv_{state_view}")
-        .start()
+    def k_smallest(c: str):
+        union = F.array_distinct(F.flatten(F.collect_list(c)))
+        return F.slice(F.array_sort(union), 1, k)
+
+    return _stream_monoid(
+        docs, sketch, "source string, kmv array<string>", {"kmv": k_smallest},
+        state_view,
     )
 
 
@@ -654,10 +678,7 @@ def histogram_quantiles(bins: DataFrame) -> DataFrame:
     return out
 
 
-def stream_quantiles(
-    events: DataFrame,
-    state_view: str = "quantile_state",
-):
+def stream_quantiles(events: DataFrame, state_view: str = "quantile_state"):
     """Continuously-maintained value quantiles: each micro-batch adds
     its exact per-bin counts into the histogram state (additive
     commutative merge — batching and arrival order cannot change the
@@ -667,28 +688,8 @@ def stream_quantiles(
     merge, which no quantile SKETCH with per-batch compaction
     guarantees. Batch twin: ``histogram_quantiles(binned_counts(e))``
     — the test asserts exact equality."""
-    spark = events.sparkSession
-    empty = spark.createDataFrame([], "bin long, n long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(binned_counts(batch_df))
-            .groupBy("bin")
-            .agg(F.sum("n").alias("n"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"quantiles_{state_view}")
-        .start()
+    return _stream_monoid(
+        events, binned_counts, "bin long, n long", {"n": "sum"}, state_view
     )
 
 
@@ -725,11 +726,6 @@ def stream_triangle_count(
     compaction. Expects batch columns ``(a, b)`` with ``a < b``.
     """
     spark = edges.sparkSession
-    empty = spark.createDataFrame([], "a long, b long")
-    empty.createOrReplaceGlobalTempView(state_view)
-    spark.createDataFrame(
-        [(0, -1)], "n_triangles long, last_batch long"
-    ).createOrReplaceGlobalTempView(count_view)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -797,18 +793,19 @@ def stream_triangle_count(
         merged = state.unionByName(new.select("a", "b")).localCheckpoint()
         merged.createOrReplaceGlobalTempView(state_view)
 
-    return (
-        edges.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"triangles_{state_view}")
-        .start()
+    return _start(
+        edges,
+        step,
+        {
+            state_view: spark.createDataFrame([], "a long, b long"),
+            count_view: spark.createDataFrame(
+                [(0, -1)], "n_triangles long, last_batch long"
+            ),
+        },
     )
 
 
-def stream_fertility(
-    docs: DataFrame,
-    state_view: str = "fertility_state",
-):
+def stream_fertility(docs: DataFrame, state_view: str = "fertility_state"):
     """Continuously-maintained tokenizer-fertility counts per
     (source, lang): each micro-batch reduces to its own additive
     count rows (``queries.corpus.fertility_counts`` — a commutative
@@ -822,43 +819,17 @@ def stream_fertility(
     """
     from locopy_spark.queries.corpus import fertility_counts
 
-    spark = docs.sparkSession
-    schema = (
+    return _stream_monoid(
+        docs, fertility_counts,
         "source string, lang string, n_docs long, chars long,"
-        " bpe_tokens long, ws_tokens long"
-    )
-    empty = spark.createDataFrame([], schema)
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(fertility_counts(batch_df))
-            .groupBy("source", "lang")
-            .agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("chars").alias("chars"),
-                F.sum("bpe_tokens").alias("bpe_tokens"),
-                F.sum("ws_tokens").alias("ws_tokens"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"fertility_{state_view}")
-        .start()
+        " bpe_tokens long, ws_tokens long",
+        dict.fromkeys(["n_docs", "chars", "bpe_tokens", "ws_tokens"], "sum"),
+        state_view,
     )
 
 
 def stream_length_histogram(
-    docs: DataFrame,
-    state_view: str = "length_hist_state",
+    docs: DataFrame, state_view: str = "length_hist_state"
 ):
     """Continuously-maintained sequence-length histogram: per-batch
     per-bin (n_docs, tokens) counts (``queries.corpus.length_bins`` —
@@ -870,38 +841,13 @@ def stream_length_histogram(
     """
     from locopy_spark.queries.corpus import length_bins
 
-    spark = docs.sparkSession
-    empty = spark.createDataFrame([], "bin int, n_docs long, tokens long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(length_bins(batch_df))
-            .groupBy("bin")
-            .agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("tokens").alias("tokens"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"length_hist_{state_view}")
-        .start()
+    return _stream_monoid(
+        docs, length_bins, "bin int, n_docs long, tokens long",
+        {"n_docs": "sum", "tokens": "sum"}, state_view,
     )
 
 
-def stream_bloom(
-    orders: DataFrame,
-    state_view: str = "bloom_state",
-):
+def stream_bloom(orders: DataFrame, state_view: str = "bloom_state"):
     """Continuously-maintained bloom-filter build over a key stream:
     each micro-batch contributes its DISTINCT md5 bit positions
     (``queries.tpch_ext._bloom_pos_spark`` — the same expression the
@@ -916,37 +862,14 @@ def stream_bloom(
     """
     from locopy_spark.queries.tpch_ext import _bloom_pos_spark
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame([], "pos long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        delta = batch_df.select(
-            F.explode(F.expr(_bloom_pos_spark("o_custkey"))).alias("pos")
-        ).distinct()
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(delta)
-            .distinct()
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"bloom_{state_view}")
-        .start()
+    pos = F.explode(F.expr(_bloom_pos_spark("o_custkey"))).alias("pos")
+    return _stream_monoid(
+        orders, lambda b: b.select(pos).distinct(), "pos long", {}, state_view
     )
 
 
 def stream_benford(
-    orders: DataFrame,
-    customer: DataFrame,
-    state_view: str = "benford_state",
+    orders: DataFrame, customer: DataFrame, state_view: str = "benford_state"
 ):
     """Continuously-maintained Benford conformance state: each
     micro-batch stream-static joins the customer dimension (the
@@ -960,37 +883,13 @@ def stream_benford(
     """
     from locopy_spark.queries.trends import benford_counts
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame(
-        [], "c_mktsegment string, digit long, n long"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(benford_counts(batch_df, customer))
-            .groupBy("c_mktsegment", "digit")
-            .agg(F.sum("n").alias("n"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"benford_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, lambda b: benford_counts(b, customer),
+        "c_mktsegment string, digit long, n long", {"n": "sum"}, state_view,
     )
 
 
-def stream_ols_trend(
-    orders: DataFrame,
-    state_view: str = "ols_daily_state",
-):
+def stream_ols_trend(orders: DataFrame, state_view: str = "ols_daily_state"):
     """Continuously-maintained OLS regression state: each micro-batch
     reduces to per-(priority, day) exact revenue cents
     (``queries.trends.ols_daily`` — additive in y; the day index is a
@@ -1004,38 +903,14 @@ def stream_ols_trend(
     """
     from locopy_spark.queries.trends import ols_daily
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame(
-        [], "o_orderpriority string, day date, y long"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(ols_daily(batch_df))
-            .groupBy("o_orderpriority", "day")
-            .agg(F.sum("y").alias("y"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"ols_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, ols_daily, "o_orderpriority string, day date, y long",
+        {"y": "sum"}, state_view,
     )
 
 
 
-def stream_cms(
-    docs: DataFrame,
-    state_view: str = "cms_state",
-):
+def stream_cms(docs: DataFrame, state_view: str = "cms_state"):
     """Continuously-maintained count-min sketch over a document
     stream: each micro-batch reduces to its own CMS_DEPTH×CMS_WIDTH
     cell counts (``queries.corpus.cms_cells`` — additive monoid:
@@ -1047,28 +922,8 @@ def stream_cms(
     """
     from locopy_spark.queries.corpus import cms_cells
 
-    spark = docs.sparkSession
-    empty = spark.createDataFrame([], "r int, col long, v long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(cms_cells(batch_df))
-            .groupBy("r", "col")
-            .agg(F.sum("v").alias("v"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"cms_{state_view}")
-        .start()
+    return _stream_monoid(
+        docs, cms_cells, "r int, col long, v long", {"v": "sum"}, state_view
     )
 
 
@@ -1096,8 +951,7 @@ def stream_acf(events: DataFrame, state_view: str = "acf_state"):
 
 
 def stream_weekday_uplift(
-    orders: DataFrame,
-    state_view: str = "weekday_state",
+    orders: DataFrame, state_view: str = "weekday_state"
 ):
     """Continuously-maintained day-of-week revenue index: each
     micro-batch reduces to the additive 7-row
@@ -1107,37 +961,13 @@ def stream_weekday_uplift(
     ``q_weekday_uplift``)."""
     from locopy_spark.queries.tpch_ext import weekday_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame([], "dow int, n_orders long, s long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(weekday_state(batch_df))
-            .groupBy("dow")
-            .agg(
-                F.sum("n_orders").alias("n_orders"), F.sum("s").alias("s")
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"weekday_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, weekday_state, "dow int, n_orders long, s long",
+        {"n_orders": "sum", "s": "sum"}, state_view,
     )
 
 
-def stream_vocab(
-    docs: DataFrame,
-    state_view: str = "vocab_state",
-):
+def stream_vocab(docs: DataFrame, state_view: str = "vocab_state"):
     """Continuously-maintained corpus vocabulary counts
     (``queries.corpus.vocab_counts`` — additive by token, vocabulary-
     sized state forever): the feed for the on-demand
@@ -1145,35 +975,12 @@ def stream_vocab(
     ``p_vocab_coverage``)."""
     from locopy_spark.queries.corpus import vocab_counts
 
-    spark = docs.sparkSession
-    empty = spark.createDataFrame([], "tok string, c long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(vocab_counts(batch_df))
-            .groupBy("tok")
-            .agg(F.sum("c").alias("c"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"vocab_{state_view}")
-        .start()
+    return _stream_monoid(
+        docs, vocab_counts, "tok string, c long", {"c": "sum"}, state_view
     )
 
 
-def stream_xcorr(
-    events: DataFrame,
-    state_view: str = "xcorr_state",
-):
+def stream_xcorr(events: DataFrame, state_view: str = "xcorr_state"):
     """Continuously-maintained view→purchase lead-lag state: per-
     (hour, side) counts (``queries.events_ext.xcorr_state`` —
     additive, |hours|×2 rows, late events just add to their hour),
@@ -1181,35 +988,14 @@ def stream_xcorr(
     ``xcorr_report`` (batch twin: ``q_xcorr``)."""
     from locopy_spark.queries.events_ext import xcorr_state
 
-    spark = events.sparkSession
-    empty = spark.createDataFrame([], "hour long, is_a boolean, c long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(xcorr_state(batch_df))
-            .groupBy("hour", "is_a")
-            .agg(F.sum("c").alias("c"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"xcorr_{state_view}")
-        .start()
+    return _stream_monoid(
+        events, xcorr_state, "hour long, is_a boolean, c long", {"c": "sum"},
+        state_view,
     )
 
 
 def stream_cramers(
-    orders: DataFrame,
-    customer: DataFrame,
-    state_view: str = "cramers_state",
+    orders: DataFrame, customer: DataFrame, state_view: str = "cramers_state"
 ):
     """Continuously-maintained categorical-association state: each
     micro-batch stream-static joins the customer dim and reduces to
@@ -1220,35 +1006,14 @@ def stream_cramers(
     continuously-refreshed independence screen."""
     from locopy_spark.queries.assoc import contingency_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame([], "pri string, seg string, n_ij long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(contingency_state(batch_df, customer))
-            .groupBy("pri", "seg")
-            .agg(F.sum("n_ij").alias("n_ij"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"cramers_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, lambda b: contingency_state(b, customer),
+        "pri string, seg string, n_ij long", {"n_ij": "sum"}, state_view,
     )
 
 
 def stream_hhi(
-    lineitem: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
+    lineitem: DataFrame, supplier: DataFrame, nation: DataFrame,
     state_view: str = "hhi_state",
 ):
     """Continuously-maintained market-concentration state: per-batch
@@ -1259,28 +1024,9 @@ def stream_hhi(
     ``q_hhi``)."""
     from locopy_spark.queries.assoc import hhi_state
 
-    spark = lineitem.sparkSession
-    empty = spark.createDataFrame([], "n_name string, suppkey long, s long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(hhi_state(batch_df, supplier, nation))
-            .groupBy("n_name", "suppkey")
-            .agg(F.sum("s").alias("s"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        lineitem.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"hhi_{state_view}")
-        .start()
+    return _stream_monoid(
+        lineitem, lambda b: hhi_state(b, supplier, nation),
+        "n_name string, suppkey long, s long", {"s": "sum"}, state_view,
     )
 
 
@@ -1353,15 +1099,7 @@ def stream_boilerplate(
     from locopy_spark.queries.docs_ext import boiler_doc_counts, boiler_spans
 
     spark = docs.sparkSession
-    empty_spans = spark.createDataFrame(
-        [], "source string, doc_id long, span string"
-    )
-    empty_spans.createOrReplaceGlobalTempView(span_view)
-    empty_counts = spark.createDataFrame([], "source string, n_docs long")
-    empty_counts.createOrReplaceGlobalTempView(count_view)
     seen_view = f"{count_view}_seen"
-    empty_seen = spark.createDataFrame([], "doc_id long")
-    empty_seen.createOrReplaceGlobalTempView(seen_view)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1401,11 +1139,18 @@ def stream_boilerplate(
         merged_counts.createOrReplaceGlobalTempView(count_view)
         merged_seen.createOrReplaceGlobalTempView(seen_view)
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"boiler_{span_view}")
-        .start()
+    return _start(
+        docs,
+        step,
+        {
+            span_view: spark.createDataFrame(
+                [], "source string, doc_id long, span string"
+            ),
+            count_view: spark.createDataFrame(
+                [], "source string, n_docs long"
+            ),
+            seen_view: spark.createDataFrame([], "doc_id long"),
+        },
     )
 
 
@@ -1433,14 +1178,7 @@ def stream_lexical_index(
     from locopy_spark.queries.docs_ext import doc_postings
 
     spark = docs.sparkSession
-    empty_tok = spark.createDataFrame([], "doc_id long, term string")
-    empty_tok.createOrReplaceGlobalTempView(tok_view)
-    empty_counts = spark.createDataFrame([], "n_docs long")
-    empty_counts.createOrReplaceGlobalTempView(count_view)
     seen_view = f"{count_view}_seen"
-    spark.createDataFrame([], "doc_id long").createOrReplaceGlobalTempView(
-        seen_view
-    )
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1473,18 +1211,18 @@ def stream_lexical_index(
         merged_counts.createOrReplaceGlobalTempView(count_view)
         merged_seen.createOrReplaceGlobalTempView(seen_view)
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"lexindex_{tok_view}")
-        .start()
+    return _start(
+        docs,
+        step,
+        {
+            tok_view: spark.createDataFrame([], "doc_id long, term string"),
+            count_view: spark.createDataFrame([], "n_docs long"),
+            seen_view: spark.createDataFrame([], "doc_id long"),
+        },
     )
 
 
-def stream_co_engagement(
-    events: DataFrame,
-    state_view: str = "coeng_state",
-):
+def stream_co_engagement(events: DataFrame, state_view: str = "coeng_state"):
     """Continuously-maintained weekly co-engagement state: each
     micro-batch contributes its distinct (user, week, type) rows
     (``queries.events_ext.co_engagement_state`` — a SET, so
@@ -1496,33 +1234,10 @@ def stream_co_engagement(
     """
     from locopy_spark.queries.events_ext import co_engagement_state
 
-    spark = events.sparkSession
-    empty = spark.createDataFrame(
-        [], "user_id long, wk bigint, event_type string"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(
-                co_engagement_state(batch_df).select(
-                    "user_id", "wk", "event_type"
-                )
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"coeng_{state_view}")
-        .start()
+    return _stream_monoid(
+        events,
+        lambda b: co_engagement_state(b).select("user_id", "wk", "event_type"),
+        "user_id long, wk bigint, event_type string", {}, state_view,
     )
 
 
@@ -1542,12 +1257,6 @@ def stream_dedup_yield(
     overlapping out-of-order chunks.
     """
     from locopy_spark.queries.corpus import dedup_yield_state
-
-    spark = docs.sparkSession
-    empty = spark.createDataFrame(
-        [], "source string, doc_id long, h string, n_tok int"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1569,18 +1278,13 @@ def stream_dedup_yield(
         )
         merged.createOrReplaceGlobalTempView(state_view)
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"dedupyield_{state_view}")
-        .start()
+    empty = docs.sparkSession.createDataFrame(
+        [], "source string, doc_id long, h string, n_tok int"
     )
+    return _start(docs, step, {state_view: empty})
 
 
-def stream_ca_trend(
-    events: DataFrame,
-    state_view: str = "ca_state",
-):
+def stream_ca_trend(events: DataFrame, state_view: str = "ca_state"):
     """Continuously-maintained Cochran–Armitage conversion-trend
     state: each micro-batch reduces to per-day (t, trials,
     purchases) counters (``queries.trends.ca_daily`` — all three
@@ -1594,35 +1298,13 @@ def stream_ca_trend(
     """
     from locopy_spark.queries.trends import ca_daily
 
-    spark = events.sparkSession
-    empty = spark.createDataFrame([], "t long, n long, r long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(ca_daily(batch_df))
-            .groupBy("t")
-            .agg(F.sum("n").alias("n"), F.sum("r").alias("r"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"ca_{state_view}")
-        .start()
+    return _stream_monoid(
+        events, ca_daily, "t long, n long, r long", {"n": "sum", "r": "sum"},
+        state_view,
     )
 
 
-def stream_filter_funnel(
-    docs: DataFrame,
-    state_view: str = "funnel_state",
-):
+def stream_filter_funnel(docs: DataFrame, state_view: str = "funnel_state"):
     """Continuously-maintained quality-gate funnel: each micro-batch
     reduces to the 1-row 10-counter cumulative-gate state
     (``queries.quality.funnel_counts`` — a pure additive monoid, the
@@ -1635,37 +1317,16 @@ def stream_filter_funnel(
     """
     from locopy_spark.queries.quality import funnel_counts
 
-    spark = docs.sparkSession
     cols = ["n0", "tok0"] + [
         f"{p}{i}" for i in range(1, 5) for p in ("n", "tok")
     ]
-    empty = spark.createDataFrame([], ", ".join(f"{c} long" for c in cols))
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(funnel_counts(batch_df))
-            .agg(*[F.sum(c).alias(c) for c in cols])
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"funnel_{state_view}")
-        .start()
+    return _stream_monoid(
+        docs, funnel_counts, ", ".join(f"{c} long" for c in cols),
+        dict.fromkeys(cols, "sum"), state_view,
     )
 
 
-def stream_centroids(
-    emb: DataFrame,
-    state_view: str = "centroid_state",
-):
+def stream_centroids(emb: DataFrame, state_view: str = "centroid_state"):
     """Continuously-maintained per-label embedding centroids: each
     micro-batch reduces to its (label, dim) exact DECIMAL(38)
     component sums + counts (``queries.docs_ext.centroid_state`` —
@@ -1680,37 +1341,13 @@ def stream_centroids(
     """
     from locopy_spark.queries.docs_ext import centroid_state
 
-    spark = emb.sparkSession
-    empty = spark.createDataFrame(
-        [], "label int, dim_idx int, s decimal(38,0), n long"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(centroid_state(batch_df))
-            .groupBy("label", "dim_idx")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        emb.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"centroids_{state_view}")
-        .start()
+    return _stream_monoid(
+        emb, centroid_state, "label int, dim_idx int, s decimal(38,0), n long",
+        {"s": "sum", "n": "sum"}, state_view,
     )
 
 
-def stream_mix_drift(
-    orders: DataFrame,
-    state_view: str = "mix_state",
-):
+def stream_mix_drift(orders: DataFrame, state_view: str = "mix_state"):
     """Continuously-maintained composition-drift state: each
     micro-batch reduces to its |months × priorities| cell counts
     (``queries.trends.mix_cells`` — additive monoid), merged by
@@ -1722,28 +1359,9 @@ def stream_mix_drift(
     """
     from locopy_spark.queries.trends import mix_cells
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame([], "m long, pri string, c long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(mix_cells(batch_df))
-            .groupBy("m", "pri")
-            .agg(F.sum("c").alias("c"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"mix_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, mix_cells, "m long, pri string, c long", {"c": "sum"},
+        state_view,
     )
 
 
@@ -1824,10 +1442,7 @@ def stream_user_totals_tws(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_simpson(
-    docs: DataFrame,
-    state_view: str = "simpson_state",
-):
+def stream_simpson(docs: DataFrame, state_view: str = "simpson_state"):
     """Continuously-maintained per-source unigram counts
     (``queries.corpus.source_token_counts`` — additive by
     (source, token), vocabulary-per-source-sized state forever): the
@@ -1838,35 +1453,13 @@ def stream_simpson(
     batch counts exactly."""
     from locopy_spark.queries.corpus import source_token_counts
 
-    spark = docs.sparkSession
-    empty = spark.createDataFrame([], "source string, tok string, c long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(source_token_counts(batch_df))
-            .groupBy("source", "tok")
-            .agg(F.sum("c").alias("c"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"simpson_{state_view}")
-        .start()
+    return _stream_monoid(
+        docs, source_token_counts, "source string, tok string, c long",
+        {"c": "sum"}, state_view,
     )
 
 
-def stream_norm_hist(
-    emb: DataFrame,
-    state_view: str = "norm_hist_state",
-):
+def stream_norm_hist(emb: DataFrame, state_view: str = "norm_hist_state"):
     """Continuously-maintained embedding-norm² histogram: per-batch
     per-band counts (the ``d_norm_histogram`` banding — additive
     monoid, ≤ 30-row state forever) merged by band — the live
@@ -1875,52 +1468,30 @@ def stream_norm_hist(
     ``queries.docs_ext.d_norm_histogram``."""
     from locopy_spark.queries.docs_ext import NORM_BAND_FIX, NORM_BANDS
 
-    spark = emb.sparkSession
-    empty = spark.createDataFrame([], "band long, n_vecs long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
     norm2 = (
         "aggregate(transform(embedding,"
         " v -> cast(floor(cast(v as double) * cast(v as double)"
         " * 1000000000000 + 0.5) as bigint)),"
         " 0L, (a, x) -> a + x)"
     )
+    band = (
+        f"CAST(LEAST({NORM_BANDS - 1}, ({norm2}) div {NORM_BAND_FIX})"
+        " AS BIGINT)"
+    )
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        delta = (
-            batch_df.select(
-                F.expr(
-                    f"CAST(LEAST({NORM_BANDS - 1},"
-                    f" ({norm2}) div {NORM_BAND_FIX}) AS BIGINT)"
-                ).alias("band")
-            )
+    def bands(b: DataFrame) -> DataFrame:
+        return (
+            b.select(F.expr(band).alias("band"))
             .groupBy("band")
             .agg(F.count(F.lit(1)).alias("n_vecs"))
         )
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(delta)
-            .groupBy("band")
-            .agg(F.sum("n_vecs").alias("n_vecs"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
 
-    return (
-        emb.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"norm_hist_{state_view}")
-        .start()
+    return _stream_monoid(
+        emb, bands, "band long, n_vecs long", {"n_vecs": "sum"}, state_view
     )
 
 
-def stream_heatmap(
-    events: DataFrame,
-    state_view: str = "heatmap_state",
-):
+def stream_heatmap(events: DataFrame, state_view: str = "heatmap_state"):
     """Continuously-maintained day-of-week × hour workload heatmap:
     per-batch |7 × 24| cell counts (``queries.timeseries.heat_cells``
     — additive monoid, ≤168-row state forever) merged by cell; the
@@ -1929,35 +1500,13 @@ def stream_heatmap(
     ``q_calendar_heatmap``."""
     from locopy_spark.queries.timeseries import heat_cells
 
-    spark = events.sparkSession
-    empty = spark.createDataFrame([], "dow long, hour long, c long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(heat_cells(batch_df))
-            .groupBy("dow", "hour")
-            .agg(F.sum("c").alias("c"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"heatmap_{state_view}")
-        .start()
+    return _stream_monoid(
+        events, heat_cells, "dow long, hour long, c long", {"c": "sum"},
+        state_view,
     )
 
 
-def stream_dormancy(
-    events: DataFrame,
-    state_view: str = "dormancy_state",
-):
+def stream_dormancy(events: DataFrame, state_view: str = "dormancy_state"):
     """Continuously-maintained per-user recency state
     (``queries.timeseries.dormancy_state`` — a MAX monoid: merge is
     max per user, so ANY batching or arrival order reproduces the
@@ -1967,35 +1516,13 @@ def stream_dormancy(
     ``q_dormancy_curve``."""
     from locopy_spark.queries.timeseries import dormancy_state
 
-    spark = events.sparkSession
-    empty = spark.createDataFrame([], "user_id long, last_day long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(dormancy_state(batch_df))
-            .groupBy("user_id")
-            .agg(F.max("last_day").alias("last_day"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"dormancy_{state_view}")
-        .start()
+    return _stream_monoid(
+        events, dormancy_state, "user_id long, last_day long",
+        {"last_day": "max"}, state_view,
     )
 
 
-def stream_centroid_purity(
-    emb: DataFrame,
-    state_view: str = "purity_state",
-):
+def stream_centroid_purity(emb: DataFrame, state_view: str = "purity_state"):
     """Continuously-maintained label-purity centroid state: each
     micro-batch reduces to its (label, dim) exact DECIMAL(38)
     fixed-point sums + counts at the purity quantization
@@ -2011,37 +1538,13 @@ def stream_centroid_purity(
     """
     from locopy_spark.queries.docs_ext import purity_state
 
-    spark = emb.sparkSession
-    empty = spark.createDataFrame(
-        [], "label int, dim_idx int, s decimal(38,0), n long"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(purity_state(batch_df))
-            .groupBy("label", "dim_idx")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        emb.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"purity_{state_view}")
-        .start()
+    return _stream_monoid(
+        emb, purity_state, "label int, dim_idx int, s decimal(38,0), n long",
+        {"s": "sum", "n": "sum"}, state_view,
     )
 
 
-def stream_anova(
-    orders: DataFrame,
-    state_view: str = "anova_state",
-):
+def stream_anova(orders: DataFrame, state_view: str = "anova_state"):
     """Continuously-maintained one-way-ANOVA state: each micro-batch
     reduces to ONE additive row (n, Σv², per-priority n_g/Σv_g —
     ``queries.stats.anova_state``; every column a plain sum), merged
@@ -2059,38 +1562,13 @@ def stream_anova(
     """
     from locopy_spark.queries.stats import ANOVA_GROUPS, anova_state
 
-    spark = orders.sparkSession
     cols = ["n bigint", "sq decimal(38,0)"]
     for i in range(1, len(ANOVA_GROUPS) + 1):
         cols += [f"n{i} bigint", f"s{i} decimal(38,0)"]
-    empty = spark.createDataFrame([], ", ".join(cols))
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        sums = [F.sum(c.split(" ")[0]).alias(c.split(" ")[0]) for c in cols]
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(anova_state(batch_df))
-            .agg(*sums)
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"anova_{state_view}")
-        .start()
-    )
+    return _stream_monoid(orders, anova_state, *_sums(cols), state_view)
 
 
-def stream_backlog(
-    orders: DataFrame,
-    state_view: str = "backlog_state",
-):
+def stream_backlog(orders: DataFrame, state_view: str = "backlog_state"):
     """Continuously-maintained open-order backlog state: each
     micro-batch reduces to its (status, order-day) open counts +
     exact scaled value (``queries.tpch_ext.backlog_state`` — both
@@ -2107,41 +1585,14 @@ def stream_backlog(
     batch twin: ``q_backlog_aging``."""
     from locopy_spark.queries.tpch_ext import backlog_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame(
-        [], "o_orderstatus string, order_day int, n_orders bigint,"
-        " value_c bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(backlog_state(batch_df))
-            .groupBy("o_orderstatus", "order_day")
-            .agg(
-                F.sum("n_orders").alias("n_orders"),
-                F.sum("value_c").alias("value_c"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"backlog_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, backlog_state,
+        "o_orderstatus string, order_day int, n_orders bigint, value_c bigint",
+        {"n_orders": "sum", "value_c": "sum"}, state_view,
     )
 
 
-def stream_survival(
-    orders: DataFrame,
-    state_view: str = "span_state",
-):
+def stream_survival(orders: DataFrame, state_view: str = "span_state"):
     """Continuously-maintained per-customer span state
     (``queries.assoc.span_state`` — a (MIN, MAX) monoid per key, so
     ANY batching or arrival order reproduces the batch spans;
@@ -2153,38 +1604,13 @@ def stream_survival(
     ``na_from_risk`` == batch q_nelson_aalen bit-exactly."""
     from locopy_spark.queries.assoc import span_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame([], "o_custkey long, first_d date, last_d date")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(span_state(batch_df))
-            .groupBy("o_custkey")
-            .agg(
-                F.min("first_d").alias("first_d"),
-                F.max("last_d").alias("last_d"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"survival_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, span_state, "o_custkey long, first_d date, last_d date",
+        {"first_d": "min", "last_d": "max"}, state_view,
     )
 
 
-def stream_inequality(
-    orders: DataFrame,
-    state_view: str = "inequality_state",
-):
+def stream_inequality(orders: DataFrame, state_view: str = "inequality_state"):
     """Continuously-maintained per-customer revenue state
     (``queries.stats.inequality_state`` — exact scaled cents, a
     plain-sum monoid; |customers| rows forever). The ranked finisher
@@ -2196,35 +1622,13 @@ def stream_inequality(
     stream_survival convention: one state, every finisher asserted)."""
     from locopy_spark.queries.stats import inequality_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame([], "o_custkey long, x bigint")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(inequality_state(batch_df))
-            .groupBy("o_custkey")
-            .agg(F.sum("x").alias("x"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"inequality_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, inequality_state, "o_custkey long, x bigint", {"x": "sum"},
+        state_view,
     )
 
 
-def stream_peaks(
-    orders: DataFrame,
-    state_view: str = "peaks_state",
-):
+def stream_peaks(orders: DataFrame, state_view: str = "peaks_state"):
     """Continuously-maintained daily-revenue state
     (``queries.timeseries.peaks_state`` — exact scaled cents per
     epoch day, a plain-sum monoid; |calendar days| rows forever).
@@ -2236,34 +1640,14 @@ def stream_peaks(
     live spike-localization dashboard; batch twin: ``q_peak_days``."""
     from locopy_spark.queries.timeseries import peaks_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame([], "day int, rev_c bigint")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(peaks_state(batch_df))
-            .groupBy("day")
-            .agg(F.sum("rev_c").alias("rev_c"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"peaks_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, peaks_state, "day int, rev_c bigint", {"rev_c": "sum"},
+        state_view,
     )
 
 
 def stream_fulfillment(
-    lineitem: DataFrame,
-    orders: DataFrame,
+    lineitem: DataFrame, orders: DataFrame,
     state_view: str = "fulfillment_state",
 ):
     """Continuously-maintained per-order fulfillment state: each
@@ -2275,41 +1659,16 @@ def stream_fulfillment(
     still arrive in a later batch). The per-priority lag histogram
     (``fulfillment_report``) closes on demand — the live SLA
     dashboard; batch twin: ``q_fulfillment_lag``."""
-    spark = lineitem.sparkSession
-    empty = spark.createDataFrame(
-        [],
+    from locopy_spark.queries.tpch_ext import fulfillment_state
+
+    return _stream_monoid(
+        lineitem, lambda b: fulfillment_state(orders, b),
         "o_orderkey long, o_orderpriority string, od_day int, fs_day int",
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.tpch_ext import fulfillment_state
-
-        rows = fulfillment_state(orders, batch_df)
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(rows)
-            .groupBy("o_orderkey", "o_orderpriority", "od_day")
-            .agg(F.min("fs_day").alias("fs_day"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        lineitem.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"fulfillment_{state_view}")
-        .start()
+        {"fs_day": "min"}, state_view,
     )
 
 
-def stream_basket_size(
-    lineitem: DataFrame,
-    state_view: str = "basket_state",
-):
+def stream_basket_size(lineitem: DataFrame, state_view: str = "basket_state"):
     """Continuously-maintained per-order line-count state
     (``queries.tpch.basket_state`` — a plain-sum monoid per order
     key; |orders| rows forever). The histogram finisher
@@ -2320,34 +1679,14 @@ def stream_basket_size(
     twin: ``q_basket_size_dist``."""
     from locopy_spark.queries.tpch import basket_state
 
-    spark = lineitem.sparkSession
-    empty = spark.createDataFrame([], "l_orderkey long, n_items bigint")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(basket_state(batch_df))
-            .groupBy("l_orderkey")
-            .agg(F.sum("n_items").alias("n_items"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        lineitem.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"basket_{state_view}")
-        .start()
+    return _stream_monoid(
+        lineitem, basket_state, "l_orderkey long, n_items bigint",
+        {"n_items": "sum"}, state_view,
     )
 
 
 def stream_value_migration(
-    orders: DataFrame,
-    state_view: str = "migration_state",
+    orders: DataFrame, state_view: str = "migration_state"
 ):
     """Continuously-maintained per-(customer, year) revenue state
     (``queries.tpch_ext.migration_state`` — exact scaled cents, a
@@ -2360,37 +1699,14 @@ def stream_value_migration(
     ``q_value_migration``."""
     from locopy_spark.queries.tpch_ext import migration_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame(
-        [], "o_custkey long, yr int, rev_c bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(migration_state(batch_df))
-            .groupBy("o_custkey", "yr")
-            .agg(F.sum("rev_c").alias("rev_c"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"migration_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, migration_state, "o_custkey long, yr int, rev_c bigint",
+        {"rev_c": "sum"}, state_view,
     )
 
 
 def stream_street_vs_list(
-    lineitem: DataFrame,
-    part: DataFrame,
-    state_view: str = "svl_state",
+    lineitem: DataFrame, part: DataFrame, state_view: str = "svl_state"
 ):
     """Continuously-maintained street-vs-list pricing state: banding
     is ROW-LOCAL (each line against its own part's broadcast list
@@ -2401,36 +1717,15 @@ def stream_street_vs_list(
     ``q_street_vs_list``."""
     from locopy_spark.queries.tpch_ext import svl_state
 
-    spark = lineitem.sparkSession
-    empty = spark.createDataFrame(
-        [], "p_brand string, band bigint, n_lines bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(svl_state(batch_df, part))
-            .groupBy("p_brand", "band")
-            .agg(F.sum("n_lines").alias("n_lines"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        lineitem.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"svl_{state_view}")
-        .start()
+    return _stream_monoid(
+        lineitem, lambda b: svl_state(b, part),
+        "p_brand string, band bigint, n_lines bigint", {"n_lines": "sum"},
+        state_view,
     )
 
 
 def stream_price_index(
-    lineitem: DataFrame,
-    state_view: str = "price_index_state",
+    lineitem: DataFrame, state_view: str = "price_index_state"
 ):
     """Continuously-maintained per-(part, year) pricing state
     (``queries.tpch_ext.price_index_state`` — exact discounted cents
@@ -2443,40 +1738,14 @@ def stream_price_index(
     ``q_price_index``."""
     from locopy_spark.queries.tpch_ext import price_index_state
 
-    spark = lineitem.sparkSession
-    empty = spark.createDataFrame(
-        [], "l_partkey long, yr int, rev_c bigint, qty bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(price_index_state(batch_df))
-            .groupBy("l_partkey", "yr")
-            .agg(
-                F.sum("rev_c").alias("rev_c"),
-                F.sum("qty").alias("qty"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        lineitem.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"price_index_{state_view}")
-        .start()
+    return _stream_monoid(
+        lineitem, price_index_state,
+        "l_partkey long, yr int, rev_c bigint, qty bigint",
+        {"rev_c": "sum", "qty": "sum"}, state_view,
     )
 
 
-def stream_stickiness(
-    events: DataFrame,
-    state_view: str = "stickiness_state",
-):
+def stream_stickiness(events: DataFrame, state_view: str = "stickiness_state"):
     """Continuously-maintained distinct (day, user) activity grid
     (``queries.timeseries.stickiness_grid`` — an idempotent SET
     monoid: merge is union+distinct, so re-delivered and out-of-order
@@ -2486,34 +1755,12 @@ def stream_stickiness(
     ``q_stickiness``."""
     from locopy_spark.queries.timeseries import stickiness_grid
 
-    spark = events.sparkSession
-    empty = spark.createDataFrame([], "day bigint, user_id long")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(stickiness_grid(batch_df))
-            .distinct()
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"stickiness_{state_view}")
-        .start()
+    return _stream_monoid(
+        events, stickiness_grid, "day bigint, user_id long", {}, state_view
     )
 
 
-def stream_abc_xyz(
-    lineitem: DataFrame,
-    state_view: str = "abc_xyz_state",
-):
+def stream_abc_xyz(lineitem: DataFrame, state_view: str = "abc_xyz_state"):
     """Continuously-maintained (part, month) demand grid
     (``queries.tpch_ext.abc_xyz_state`` — quantity AND revenue, both
     plain-sum monoids; |parts × months| rows forever). The ABC × XYZ
@@ -2524,37 +1771,13 @@ def stream_abc_xyz(
     grid; batch twin: ``q_abc_xyz``."""
     from locopy_spark.queries.tpch_ext import abc_xyz_state
 
-    spark = lineitem.sparkSession
-    empty = spark.createDataFrame(
-        [], "l_partkey long, ym int, q bigint, r bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(abc_xyz_state(batch_df))
-            .groupBy("l_partkey", "ym")
-            .agg(F.sum("q").alias("q"), F.sum("r").alias("r"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        lineitem.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"abc_xyz_{state_view}")
-        .start()
+    return _stream_monoid(
+        lineitem, abc_xyz_state, "l_partkey long, ym int, q bigint, r bigint",
+        {"q": "sum", "r": "sum"}, state_view,
     )
 
 
-def stream_odds_ratio(
-    lineitem: DataFrame,
-    state_view: str = "odds_state",
-):
+def stream_odds_ratio(lineitem: DataFrame, state_view: str = "odds_state"):
     """Continuously-maintained 2×2 exposure/outcome state
     (``queries.tpch_ext.odds_state`` — ONE row of four additive
     counters, the stream_anova shape). OR/RR close row-locally on
@@ -2562,41 +1785,15 @@ def stream_odds_ratio(
     returns" monitor; batch twin: ``q_odds_ratio``."""
     from locopy_spark.queries.tpch_ext import odds_state
 
-    spark = lineitem.sparkSession
-    empty = spark.createDataFrame(
-        [(0, 0, 0, 0)], "a bigint, b bigint, c bigint, d bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(odds_state(batch_df))
-            .agg(
-                F.sum("a").alias("a"),
-                F.sum("b").alias("b"),
-                F.sum("c").alias("c"),
-                F.sum("d").alias("d"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        lineitem.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"odds_{state_view}")
-        .start()
+    return _stream_monoid(
+        lineitem, odds_state,
+        *_sums(["a bigint", "b bigint", "c bigint", "d bigint"]), state_view,
+        init=[(0, 0, 0, 0)],
     )
 
 
 def stream_cycle_time(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    state_view: str = "cycle_state",
+    lineitem: DataFrame, orders: DataFrame, state_view: str = "cycle_state"
 ):
     """Continuously-maintained per-order flow state: each micro-batch's
     lines reduce to per-order MAX ship days, join the static orders
@@ -2609,40 +1806,17 @@ def stream_cycle_time(
     line can still EXTEND an order's interval and move every month it
     spans. The live flow-conservation dashboard; batch twin:
     ``q_little_law``."""
-    spark = lineitem.sparkSession
-    empty = spark.createDataFrame(
-        [], "o_orderkey long, open_date date, close_date date"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
+    from locopy_spark.queries.tpch_ext import cycle_state
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.tpch_ext import cycle_state
-
-        rows = cycle_state(orders, batch_df)
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(rows)
-            .groupBy("o_orderkey", "open_date")
-            .agg(F.max("close_date").alias("close_date"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        lineitem.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"cycle_time_{state_view}")
-        .start()
+    return _stream_monoid(
+        lineitem, lambda b: cycle_state(orders, b),
+        "o_orderkey long, open_date date, close_date date",
+        {"close_date": "max"}, state_view,
     )
 
 
 def stream_leadtime(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    state_view: str = "leadtime_state",
+    lineitem: DataFrame, orders: DataFrame, state_view: str = "leadtime_state"
 ):
     """Continuously-maintained (supplier, lag_days) lead-time grid:
     each micro-batch's lines join the static orders dim, band to
@@ -2654,40 +1828,17 @@ def stream_leadtime(
     read time because a supplier's quantiles keep moving as lines
     arrive. The live vendor-review dashboard; batch twin:
     ``q_supplier_leadtime``."""
-    spark = lineitem.sparkSession
-    empty = spark.createDataFrame(
-        [], "l_suppkey long, lag int, n bigint, nr bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
+    from locopy_spark.queries.tpch_ext import leadtime_state
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.tpch_ext import leadtime_state
-
-        rows = leadtime_state(orders, batch_df)
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(rows)
-            .groupBy("l_suppkey", "lag")
-            .agg(F.sum("n").alias("n"), F.sum("nr").alias("nr"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        lineitem.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"leadtime_{state_view}")
-        .start()
+    return _stream_monoid(
+        lineitem, lambda b: leadtime_state(orders, b),
+        "l_suppkey long, lag int, n bigint, nr bigint",
+        {"n": "sum", "nr": "sum"}, state_view,
     )
 
 
 def stream_sla(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    state_view: str = "sla_state",
+    lineitem: DataFrame, orders: DataFrame, state_view: str = "sla_state"
 ):
     """Continuously-maintained (ship-month, order-priority) SLA grid:
     each micro-batch's lines join the static orders dim, band to
@@ -2700,47 +1851,18 @@ def stream_sla(
     (``stats.friedman_report``, batch twin ``q_friedman``) — rates and
     within-month ranks both keep moving as lines arrive, so neither
     would be a monoid in-state."""
-    spark = lineitem.sparkSession
-    empty = spark.createDataFrame(
-        [],
+    from locopy_spark.queries.tpch_ext import sla_state
+
+    return _stream_monoid(
+        lineitem, lambda b: sla_state(orders, b),
         "ym int, prio string, n bigint, n_ontime bigint,"
         " late_days bigint, rev_c bigint",
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.tpch_ext import sla_state
-
-        rows = sla_state(orders, batch_df)
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(rows)
-            .groupBy("ym", "prio")
-            .agg(
-                F.sum("n").alias("n"),
-                F.sum("n_ontime").alias("n_ontime"),
-                F.sum("late_days").alias("late_days"),
-                F.sum("rev_c").alias("rev_c"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        lineitem.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"sla_{state_view}")
-        .start()
+        dict.fromkeys(["n", "n_ontime", "late_days", "rev_c"], "sum"),
+        state_view,
     )
 
 
-def stream_mcnemar(
-    orders: DataFrame,
-    state_view: str = "mcnemar_state",
-):
+def stream_mcnemar(orders: DataFrame, state_view: str = "mcnemar_state"):
     """Continuously-maintained per-customer paired-activity flags
     (``queries.trends.mcnemar_state`` — each flag an OR monoid, so
     OVERLAPPING or re-delivered chunks are absorbed idempotently;
@@ -2751,38 +1873,13 @@ def stream_mcnemar(
     ``q_mcnemar``."""
     from locopy_spark.queries.trends import mcnemar_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame([], "o_custkey long, in1 int, in2 int")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(mcnemar_state(batch_df))
-            .groupBy("o_custkey")
-            .agg(
-                F.max("in1").alias("in1"),
-                F.max("in2").alias("in2"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"mcnemar_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, mcnemar_state, "o_custkey long, in1 int, in2 int",
+        {"in1": "max", "in2": "max"}, state_view,
     )
 
 
-def stream_growth(
-    events: DataFrame,
-    state_view: str = "growth_state",
-):
+def stream_growth(events: DataFrame, state_view: str = "growth_state"):
     """Continuously-maintained distinct (user, week) activity grid
     (``queries.timeseries.growth_grid`` — an idempotent SET monoid:
     merge is union+distinct, so OVERLAPPING or re-delivered chunks are
@@ -2793,34 +1890,13 @@ def stream_growth(
     flow dashboard; batch twin: ``q_growth_accounting``."""
     from locopy_spark.queries.timeseries import growth_grid
 
-    spark = events.sparkSession
-    empty = spark.createDataFrame([], "user_id long, wi int")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(growth_grid(batch_df))
-            .distinct()
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"growth_{state_view}")
-        .start()
+    return _stream_monoid(
+        events, growth_grid, "user_id long, wi int", {}, state_view
     )
 
 
 def stream_did(
-    lineitem: DataFrame,
-    part: DataFrame,
-    state_view: str = "did_state",
+    lineitem: DataFrame, part: DataFrame, state_view: str = "did_state"
 ):
     """Continuously-maintained difference-in-differences cell grid:
     each micro-batch's lines join the static part dim for the
@@ -2830,39 +1906,17 @@ def stream_did(
     panel (``did_report``) closes at read time — cell means and the
     DiD keep moving as lines arrive. The live experiment dashboard;
     batch twin: ``q_did``."""
-    spark = lineitem.sparkSession
-    empty = spark.createDataFrame(
-        [], "treat int, post int, n bigint, s bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
+    from locopy_spark.queries.trends import did_state
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.trends import did_state
-
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(did_state(batch_df, part))
-            .groupBy("treat", "post")
-            .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        lineitem.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"did_{state_view}")
-        .start()
+    return _stream_monoid(
+        lineitem, lambda b: did_state(b, part),
+        "treat int, post int, n bigint, s bigint", {"n": "sum", "s": "sum"},
+        state_view,
     )
 
 
 def stream_dispersion(
-    lineitem: DataFrame,
-    part: DataFrame,
-    state_view: str = "dispersion_state",
+    lineitem: DataFrame, part: DataFrame, state_view: str = "dispersion_state"
 ):
     """Continuously-maintained per-part price power sums
     (``queries.tpch_ext.dispersion_state`` — n, Σx, Σx² all plain-sum
@@ -2872,43 +1926,17 @@ def stream_dispersion(
     lines arrive, and single-line parts only become scoreable when
     their second line lands. The live pricing-discipline dashboard;
     batch twin: ``q_price_dispersion``."""
-    spark = lineitem.sparkSession
-    empty = spark.createDataFrame(
-        [], "l_partkey long, n bigint, s bigint, s2 decimal(38,0)"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
+    from locopy_spark.queries.tpch_ext import dispersion_state
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.tpch_ext import dispersion_state
-
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(dispersion_state(batch_df))
-            .groupBy("l_partkey")
-            .agg(
-                F.sum("n").alias("n"),
-                F.sum("s").alias("s"),
-                F.sum("s2").cast("decimal(38,0)").alias("s2"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        lineitem.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"dispersion_{state_view}")
-        .start()
+    return _stream_monoid(
+        lineitem, dispersion_state,
+        "l_partkey long, n bigint, s bigint, s2 decimal(38,0)",
+        {"n": "sum", "s": "sum", "s2": "sum"}, state_view,
     )
 
 
 def stream_logrank(
-    orders: DataFrame,
-    customer: DataFrame,
-    state_view: str = "logrank_state",
+    orders: DataFrame, customer: DataFrame, state_view: str = "logrank_state"
 ):
     """Continuously-maintained grouped per-customer span state
     (``queries.assoc.grouped_span_state`` — a (MIN, MAX) monoid per
@@ -2920,41 +1948,15 @@ def stream_logrank(
     segment-survival significance read; batch twin: ``q_logrank``."""
     from locopy_spark.queries.assoc import grouped_span_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame(
-        [], "o_custkey long, g1 int, first_d date, last_d date"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(grouped_span_state(batch_df, customer))
-            .groupBy("o_custkey", "g1")
-            .agg(
-                F.min("first_d").alias("first_d"),
-                F.max("last_d").alias("last_d"),
-            )
-            .select("o_custkey", "g1", "first_d", "last_d")
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"logrank_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, lambda b: grouped_span_state(b, customer),
+        "o_custkey long, g1 int, first_d date, last_d date",
+        {"first_d": "min", "last_d": "max"}, state_view,
     )
 
 
 def stream_cliffs(
-    orders: DataFrame,
-    customer: DataFrame,
-    state_view: str = "cliffs_state",
+    orders: DataFrame, customer: DataFrame, state_view: str = "cliffs_state"
 ):
     """Continuously-maintained per-value segment grid
     (``queries.stats.cliffs_state`` — counts of each segment's order
@@ -2967,35 +1969,14 @@ def stream_cliffs(
     batch twin: ``q_cliffs_delta``."""
     from locopy_spark.queries.stats import cliffs_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame([], "v bigint, d_a bigint, d_b bigint")
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(cliffs_state(batch_df, customer))
-            .groupBy("v")
-            .agg(F.sum("d_a").alias("d_a"), F.sum("d_b").alias("d_b"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"cliffs_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, lambda b: cliffs_state(b, customer),
+        "v bigint, d_a bigint, d_b bigint", {"d_a": "sum", "d_b": "sum"},
+        state_view,
     )
 
 
-def stream_levene(
-    orders: DataFrame,
-    state_view: str = "levene_state",
-):
+def stream_levene(orders: DataFrame, state_view: str = "levene_state"):
     """Continuously-maintained (priority, whole-dollar value) grid
     (``queries.stats.levene_state`` — a plain-sum monoid, bounded by
     |priorities|·|dollar values| regardless of volume). The
@@ -3006,37 +1987,10 @@ def stream_levene(
     (stream_anova); batch twin: ``q_levene``."""
     from locopy_spark.queries.stats import levene_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame(
-        [], "o_orderpriority string, v bigint, cnt bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(levene_state(batch_df))
-            .groupBy("o_orderpriority", "v")
-            .agg(F.sum("cnt").alias("cnt"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"levene_{state_view}")
-        .start()
-    )
+    return _stream_monoid(orders, levene_state, *LEVENE_GRID_SPEC, state_view)
 
 
-def stream_welch(
-    orders: DataFrame,
-    state_view: str = "welch_state",
-):
+def stream_welch(orders: DataFrame, state_view: str = "welch_state"):
     """Continuously-maintained Welch-ANOVA state: each micro-batch
     reduces to ONE additive row (n, per-priority n_g/Σv_g/Σv²_g —
     ``queries.stats.welch_state``; every column a plain sum), merged
@@ -3046,44 +2000,12 @@ def stream_welch(
     demand: the live heteroscedasticity-robust companion that stays
     valid when stream_levene's guard rejects variance homogeneity.
     Batch twin: ``q_welch_anova``."""
-    from locopy_spark.queries.stats import ANOVA_GROUPS, welch_state
+    from locopy_spark.queries.stats import welch_state
 
-    spark = orders.sparkSession
-    cols = ["n bigint"]
-    for i in range(1, len(ANOVA_GROUPS) + 1):
-        cols += [
-            f"n{i} bigint",
-            f"s{i} decimal(38,0)",
-            f"sq{i} decimal(38,0)",
-        ]
-    empty = spark.createDataFrame([], ", ".join(cols))
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        sums = [F.sum(c.split(" ")[0]).alias(c.split(" ")[0]) for c in cols]
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(welch_state(batch_df))
-            .agg(*sums)
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"welch_{state_view}")
-        .start()
-    )
+    return _stream_monoid(orders, welch_state, *welch_spec(), state_view)
 
 
-def stream_moods(
-    orders: DataFrame,
-    state_view: str = "moods_state",
-):
+def stream_moods(orders: DataFrame, state_view: str = "moods_state"):
     """Continuously-maintained value grid for Mood's median test —
     the SAME (priority, whole-dollar value) grid monoid stream_levene
     maintains (``queries.stats.levene_state``), kept under its own
@@ -3094,37 +2016,10 @@ def stream_moods(
     ``q_moods_median``."""
     from locopy_spark.queries.stats import levene_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame(
-        [], "o_orderpriority string, v bigint, cnt bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(levene_state(batch_df))
-            .groupBy("o_orderpriority", "v")
-            .agg(F.sum("cnt").alias("cnt"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"moods_{state_view}")
-        .start()
-    )
+    return _stream_monoid(orders, levene_state, *LEVENE_GRID_SPEC, state_view)
 
 
-def stream_cuped(
-    orders: DataFrame,
-    state_view: str = "cuped_state",
-):
+def stream_cuped(orders: DataFrame, state_view: str = "cuped_state"):
     """Continuously-maintained CUPED customer grid: each micro-batch's
     orders collapse to per-customer (pre_c, post_c) cent sums
     (``queries.trends.cuped_grid`` — plain-sum monoids keyed by
@@ -3133,42 +2028,15 @@ def stream_cuped(
     closes at read time — θ and the adjusted difference keep moving
     as orders arrive. The live experiment dashboard; batch twin:
     ``q_cuped``."""
-    spark = orders.sparkSession
-    empty = spark.createDataFrame(
-        [], "o_custkey long, pre_c bigint, post_c bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
+    from locopy_spark.queries.trends import cuped_grid
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.trends import cuped_grid
-
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(cuped_grid(batch_df))
-            .groupBy("o_custkey")
-            .agg(
-                F.sum("pre_c").alias("pre_c"),
-                F.sum("post_c").alias("post_c"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"cuped_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, cuped_grid, "o_custkey long, pre_c bigint, post_c bigint",
+        {"pre_c": "sum", "post_c": "sum"}, state_view,
     )
 
 
-def stream_loyalty(
-    orders: DataFrame,
-    state_view: str = "loyalty_state",
-):
+def stream_loyalty(orders: DataFrame, state_view: str = "loyalty_state"):
     """Continuously-maintained loyalty year-pair grid: per-customer
     (n1, rev1_c, n2, rev2_c) plain-sum monoids
     (``queries.tpch_ext.loyalty_state``) merged by customer each
@@ -3177,85 +2045,28 @@ def stream_loyalty(
     customer silently upgrades tier as late orders land. The live
     customer-base flow dashboard; batch twin:
     ``q_loyalty_migration``."""
-    spark = orders.sparkSession
-    empty = spark.createDataFrame(
-        [],
-        "o_custkey long, n1 bigint, rev1_c bigint,"
-        " n2 bigint, rev2_c bigint",
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
+    from locopy_spark.queries.tpch_ext import loyalty_state
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.tpch_ext import loyalty_state
-
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(loyalty_state(batch_df))
-            .groupBy("o_custkey")
-            .agg(
-                F.sum("n1").alias("n1"),
-                F.sum("rev1_c").alias("rev1_c"),
-                F.sum("n2").alias("n2"),
-                F.sum("rev2_c").alias("rev2_c"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"loyalty_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, loyalty_state,
+        "o_custkey long, n1 bigint, rev1_c bigint, n2 bigint, rev2_c bigint",
+        dict.fromkeys(["n1", "rev1_c", "n2", "rev2_c"], "sum"), state_view,
     )
 
 
-def stream_ndr(
-    orders: DataFrame,
-    state_view: str = "ndr_state",
-):
+def stream_ndr(orders: DataFrame, state_view: str = "ndr_state"):
     """Continuously-maintained per-(customer, year) revenue grid
     (``queries.timeseries.ndr_state`` — a plain-sum monoid). The NDR
     panel (``ndr_report``) closes at read time: the grid self-join on
     (customer, year+1) happens at close, so a cohort's NDR keeps
     moving as its next-year orders arrive. The live retention
     dashboard; batch twin: ``q_ndr``."""
-    spark = orders.sparkSession
-    empty = spark.createDataFrame(
-        [], "o_custkey long, yr int, rev_c bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
+    from locopy_spark.queries.timeseries import ndr_state
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.timeseries import ndr_state
-
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(ndr_state(batch_df))
-            .groupBy("o_custkey", "yr")
-            .agg(F.sum("rev_c").alias("rev_c"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"ndr_{state_view}")
-        .start()
-    )
+    return _stream_monoid(orders, ndr_state, *NDR_SPEC, state_view)
 
 
-def stream_bass(
-    orders: DataFrame,
-    state_view: str = "bass_state",
-):
+def stream_bass(orders: DataFrame, state_view: str = "bass_state"):
     """Continuously-maintained first-purchase state: per-customer
     first order week (``queries.timeseries.bass_firsts`` — an
     IDEMPOTENT MIN monoid, so replays and out-of-order chunks merge
@@ -3263,37 +2074,15 @@ def stream_bass(
     closes at read time — p/q/m̂ keep re-fitting as adopters arrive.
     The live product-diffusion dashboard; batch twin:
     ``q_bass_diffusion``."""
-    spark = orders.sparkSession
-    empty = spark.createDataFrame([], "o_custkey long, first_wi int")
-    empty.createOrReplaceGlobalTempView(state_view)
+    from locopy_spark.queries.timeseries import bass_firsts
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.timeseries import bass_firsts
-
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(bass_firsts(batch_df))
-            .groupBy("o_custkey")
-            .agg(F.min("first_wi").alias("first_wi"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"bass_{state_view}")
-        .start()
+    return _stream_monoid(
+        orders, bass_firsts, "o_custkey long, first_wi int",
+        {"first_wi": "min"}, state_view,
     )
 
 
-def stream_shapley(
-    events: DataFrame,
-    state_view: str = "shapley_state",
-):
+def stream_shapley(events: DataFrame, state_view: str = "shapley_state"):
     """Continuously-maintained Shapley attribution state: per-user
     first-touch times (``queries.events_ext.shapley_user_state`` —
     every column an IDEMPOTENT MIN monoid; a user's mask can only
@@ -3302,48 +2091,14 @@ def stream_shapley(
     and exact φ panel (``shapley_grid`` + ``shapley_report``) close
     at read time. The live attribution dashboard; batch twin:
     ``q_attribution_shapley``."""
-    from locopy_spark.queries.events_ext import SHAPLEY_CHANNELS
+    from locopy_spark.queries.events_ext import shapley_user_state
 
-    spark = events.sparkSession
-    cols = ", ".join(
-        f"t{i}_us bigint" for i in range(len(SHAPLEY_CHANNELS))
-    )
-    empty = spark.createDataFrame(
-        [], f"user_id long, conv_us bigint, {cols}"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.events_ext import shapley_user_state
-
-        mins = [F.min("conv_us").alias("conv_us")] + [
-            F.min(f"t{i}_us").alias(f"t{i}_us")
-            for i in range(len(SHAPLEY_CHANNELS))
-        ]
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(shapley_user_state(batch_df))
-            .groupBy("user_id")
-            .agg(*mins)
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"shapley_{state_view}")
-        .start()
+    return _stream_monoid(
+        events, shapley_user_state, *first_touch_spec(), state_view
     )
 
 
-def stream_sprt(
-    events: DataFrame,
-    state_view: str = "sprt_state",
-):
+def stream_sprt(events: DataFrame, state_view: str = "sprt_state"):
     """Continuously-maintained SPRT observation grid: the variant
     arm's per-(day, user) activity rows with an OR-monoid converted
     flag (``queries.trends.sprt_state`` — idempotent, so replays
@@ -3351,39 +2106,15 @@ def stream_sprt(
     at read time — the cumulative LLR trajectory and its Wald
     decision re-derive from exact integers as days fill in. The live
     always-valid experiment monitor; batch twin: ``q_sprt``."""
-    spark = events.sparkSession
-    empty = spark.createDataFrame(
-        [], "day int, user_id long, conv int"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
+    from locopy_spark.queries.trends import sprt_state
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.trends import sprt_state
-
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(sprt_state(batch_df))
-            .groupBy("day", "user_id")
-            .agg(F.max("conv").alias("conv"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"sprt_{state_view}")
-        .start()
+    return _stream_monoid(
+        events, sprt_state, "day int, user_id long, conv int", {"conv": "max"},
+        state_view,
     )
 
 
-def stream_funnel_sig(
-    events: DataFrame,
-    state_view: str = "funnel_sig_state",
-):
+def stream_funnel_sig(events: DataFrame, state_view: str = "funnel_sig_state"):
     """Continuously-maintained funnel-significance state: per-user
     (variant, first-view, first-click, first-purchase) conditional
     mins (``queries.events_ext.funnel_sig_state`` — idempotent MIN
@@ -3392,45 +2123,17 @@ def stream_funnel_sig(
     time — a user's ordered-stage flags can flip as earlier events
     arrive, exactly as in batch. The live per-stage experiment
     dashboard; batch twin: ``q_funnel_sig``."""
-    spark = events.sparkSession
-    empty = spark.createDataFrame(
-        [],
+    from locopy_spark.queries.events_ext import funnel_sig_state
+
+    return _stream_monoid(
+        events, funnel_sig_state,
         "user_id long, variant int, v_us bigint, c_us bigint, p_us bigint",
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.events_ext import funnel_sig_state
-
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(funnel_sig_state(batch_df))
-            .groupBy("user_id")
-            .agg(
-                F.max("variant").alias("variant"),
-                F.min("v_us").alias("v_us"),
-                F.min("c_us").alias("c_us"),
-                F.min("p_us").alias("p_us"),
-            )
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"funnel_sig_{state_view}")
-        .start()
+        {"variant": "max", "v_us": "min", "c_us": "min", "p_us": "min"},
+        state_view,
     )
 
 
-def stream_phash(
-    docs: DataFrame,
-    state_view: str = "phash_state",
-):
+def stream_phash(docs: DataFrame, state_view: str = "phash_state"):
     """Continuously-maintained perceptual-hash table: each
     micro-batch's documents project row-locally to their aHash band
     arrays (``queries.docs_ext.phash_bands`` — an IDEMPOTENT per-key
@@ -3440,37 +2143,15 @@ def stream_phash(
     document's near-dup pairs appear the moment its bands land in a
     shared bucket.  The live media-dedup index; batch twin:
     ``m_phash_near_dup``."""
-    spark = docs.sparkSession
-    empty = spark.createDataFrame([], "doc_id long, bands array<int>")
-    empty.createOrReplaceGlobalTempView(state_view)
+    from locopy_spark.queries.docs_ext import phash_bands
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        from locopy_spark.queries.docs_ext import phash_bands
-
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(phash_bands(batch_df))
-            .groupBy("doc_id")
-            .agg(F.first("bands").alias("bands"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"phash_{state_view}")
-        .start()
+    return _stream_monoid(
+        docs, phash_bands, "doc_id long, bands array<int>", {"bands": "first"},
+        state_view,
     )
 
 
-def stream_jarque_bera(
-    orders: DataFrame,
-    state_view: str = "jb_state",
-):
+def stream_jarque_bera(orders: DataFrame, state_view: str = "jb_state"):
     """Continuously-maintained (priority, whole-dollar value) grid
     (``queries.stats.levene_state`` — the SAME plain-sum monoid
     stream_levene keeps, bounded by |priorities|·|dollar values|).
@@ -3481,37 +2162,10 @@ def stream_jarque_bera(
     ``q_jarque_bera``."""
     from locopy_spark.queries.stats import levene_state
 
-    spark = orders.sparkSession
-    empty = spark.createDataFrame(
-        [], "o_orderpriority string, v bigint, cnt bigint"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(levene_state(batch_df))
-            .groupBy("o_orderpriority", "v")
-            .agg(F.sum("cnt").alias("cnt"))
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        orders.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"jb_{state_view}")
-        .start()
-    )
+    return _stream_monoid(orders, levene_state, *LEVENE_GRID_SPEC, state_view)
 
 
-def stream_cochran_q(
-    events: DataFrame,
-    state_view: str = "cochran_state",
-):
+def stream_cochran_q(events: DataFrame, state_view: str = "cochran_state"):
     """Continuously-maintained per-user first-touch state
     (``queries.events_ext.shapley_user_state`` — the SAME idempotent
     MIN monoid stream_shapley keeps; an early purchase retroactively
@@ -3520,48 +2174,15 @@ def stream_cochran_q(
     the live coalition grid — the channel-balance significance read
     next to the live Shapley attribution.  Batch twin:
     ``q_cochran_q``."""
-    from locopy_spark.queries.events_ext import (
-        SHAPLEY_CHANNELS,
-        shapley_user_state,
-    )
+    from locopy_spark.queries.events_ext import shapley_user_state
 
-    spark = events.sparkSession
-    cols = ", ".join(
-        f"t{i}_us bigint" for i in range(len(SHAPLEY_CHANNELS))
-    )
-    empty = spark.createDataFrame(
-        [], f"user_id long, conv_us bigint, {cols}"
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        mins = [F.min("conv_us").alias("conv_us")] + [
-            F.min(f"t{i}_us").alias(f"t{i}_us")
-            for i in range(len(SHAPLEY_CHANNELS))
-        ]
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(shapley_user_state(batch_df))
-            .groupBy("user_id")
-            .agg(*mins)
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"cochran_{state_view}")
-        .start()
+    return _stream_monoid(
+        events, shapley_user_state, *first_touch_spec(), state_view
     )
 
 
 def stream_ann_postings(
-    emb: DataFrame,
-    state_view: str = "ann_postings_state",
+    emb: DataFrame, state_view: str = "ann_postings_state",
     signatures: str = "arrow",
 ):
     """Continuously-maintained LSH postings table — the INCREMENTAL arm
@@ -3587,35 +2208,12 @@ def stream_ann_postings(
         lsh_signatures_arrow,
     )
 
-    spark = emb.sparkSession
-    empty = spark.createDataFrame([], "vec_id long, table int, bucket long")
-    empty.createOrReplaceGlobalTempView(state_view)
     sig_fn = lsh_signatures_arrow if signatures == "arrow" else lsh_signatures
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(sig_fn(batch_df))
-            .dropDuplicates(["vec_id", "table"])
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
-
-    return (
-        emb.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"ann_postings_{state_view}")
-        .start()
-    )
+    return _stream_monoid(emb, sig_fn, *ANN_POSTINGS_SPEC, state_view)
 
 
 def stream_ann_lists(
-    emb: DataFrame,
-    centroids: DataFrame,
-    state_view: str = "ann_lists_state",
+    emb: DataFrame, centroids: DataFrame, state_view: str = "ann_lists_state"
 ):
     """Continuously-maintained IVF inverted lists against a FROZEN
     coarse quantizer — the other incremental arm of the materialized
@@ -3636,35 +2234,14 @@ def stream_ann_lists(
         with_fixed_norm,
     )
 
-    spark = emb.sparkSession
-    empty = spark.createDataFrame(
-        [],
-        "centroid_id long, n_id long, n_emb array<float>, n_norm bigint",
-    )
-    empty.createOrReplaceGlobalTempView(state_view)
     cent = centroids.localCheckpoint()
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        base = with_fixed_norm(batch_df)
-        vecs = base.select(
+    def assign(b: DataFrame) -> DataFrame:
+        vecs = with_fixed_norm(b).select(
             F.col("vec_id").alias("n_id"),
             F.col("embedding").alias("n_emb"),
             F.col("norm_fix").alias("n_norm"),
         )
-        merged = (
-            s.table(f"global_temp.{state_view}")
-            .unionByName(_ivf_assign(vecs, "n", 1, cent))
-            .dropDuplicates(["n_id"])
-            .localCheckpoint()
-        )
-        merged.createOrReplaceGlobalTempView(state_view)
+        return _ivf_assign(vecs, "n", 1, cent)
 
-    return (
-        emb.writeStream.outputMode("append")
-        .foreachBatch(step)
-        .queryName(f"ann_lists_{state_view}")
-        .start()
-    )
+    return _stream_monoid(emb, assign, *ANN_LISTS_SPEC, state_view)

@@ -13,6 +13,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from conftest import fast_window  # noqa: E402
 
 
 def _norm(df):
@@ -33,12 +34,12 @@ QUERIES = sorted(entrymod.queries())
 
 # Fast default tier (r12): the full 303-key value gate is ~1/3 of the
 # suite's wall time and outgrew the driver's verify window.  By
-# default keep (a) the driver's CURRENT 50-key correctness window —
-# the keys actually gated this round — and (b) a deterministic
+# default keep (a) the CURRENT 50-key correctness window plus the keys
+# its last rotation moved out (conftest.fast_window) and (b) a deterministic
 # md5-based ~1/4 sample of the rest, so every operator family keeps
 # value coverage in every default run.  The full gate runs with
 # SPARK_GRAFT_FULL_TESTS=1 (builder's verify recipe, once per round).
-_WINDOW = set(list(entrymod.queries())[:50])
+_WINDOW = fast_window()
 
 
 def _fast_tier(name: str) -> bool:

@@ -665,7 +665,8 @@ def test_two_sample_panel_empty_side_yields_null_ratios(spark):
 # projection compares merged mins, so ordering must not matter), and
 # stream_ndr's plain-sum grid feeds a (customer, year+1) self-join at
 # close (a cohort's NDR keeps moving as next-year orders stream in).
-# These properties drive the REAL maintainer merge formula over
+# These properties drive the REAL maintainer merge (monoid_merge with
+# the twin's own shipped spec) over
 # hypothesis-random chunkings/orderings and assert that after EVERY
 # chunk prefix the merged state equals the batch state of exactly the
 # events seen so far — the definition of lockstep.
@@ -674,23 +675,18 @@ from datetime import datetime as _dt  # noqa: E402
 
 
 def _shapley_merge(spark, state, chunk_df):
-    from pyspark.sql import functions as F
+    from locopy_spark.queries.events_ext import shapley_user_state
+    from locopy_spark.streaming.stateful import first_touch_spec, monoid_merge
 
-    from locopy_spark.queries.events_ext import (
-        SHAPLEY_CHANNELS,
-        shapley_user_state,
-    )
+    return monoid_merge(
+        state, shapley_user_state(chunk_df), first_touch_spec()[1]
+    ).localCheckpoint()
 
-    mins = [F.min("conv_us").alias("conv_us")] + [
-        F.min(f"t{i}_us").alias(f"t{i}_us")
-        for i in range(len(SHAPLEY_CHANNELS))
-    ]
-    return (
-        state.unionByName(shapley_user_state(chunk_df))
-        .groupBy("user_id")
-        .agg(*mins)
-        .localCheckpoint()
-    )
+
+def _shapley_empty_state(spark):
+    from locopy_spark.streaming.stateful import first_touch_spec
+
+    return spark.createDataFrame([], first_touch_spec()[0])
 
 
 @given(
@@ -733,8 +729,7 @@ def test_stream_shapley_state_chunking_invariant(spark, evs, rnd):
     chunks = [rows[i::n_chunks] for i in range(n_chunks)]
     chunks = [c for c in chunks if c]
 
-    cols = ", ".join(f"t{i}_us bigint" for i in range(len(SHAPLEY_CHANNELS)))
-    state = spark.createDataFrame([], f"user_id long, conv_us bigint, {cols}")
+    state = _shapley_empty_state(spark)
     seen = []
     for c in chunks:
         seen.extend(c)
@@ -763,9 +758,8 @@ def test_stream_shapley_state_chunking_invariant(spark, evs, rnd):
 )
 @settings(max_examples=8, deadline=None)
 def test_stream_ndr_report_chunking_invariant(spark, ords, rnd):
-    from pyspark.sql import functions as F
-
     from locopy_spark.queries.timeseries import ndr_report, ndr_state
+    from locopy_spark.streaming.stateful import NDR_SPEC, monoid_merge
 
     rows = [
         (cust, _dt(1994 + yr, 6, 15), price / 100.0)
@@ -777,16 +771,13 @@ def test_stream_ndr_report_chunking_invariant(spark, ords, rnd):
     chunks = [rows[i::n_chunks] for i in range(n_chunks)]
     chunks = [c for c in chunks if c]
 
-    state = spark.createDataFrame([], "o_custkey long, yr int, rev_c bigint")
+    state = spark.createDataFrame([], NDR_SPEC[0])
     seen = []
     for c in chunks:
         seen.extend(c)
-        state = (
-            state.unionByName(ndr_state(spark.createDataFrame(c, schema)))
-            .groupBy("o_custkey", "yr")
-            .agg(F.sum("rev_c").alias("rev_c"))
-            .localCheckpoint()
-        )
+        state = monoid_merge(
+            state, ndr_state(spark.createDataFrame(c, schema)), NDR_SPEC[1]
+        ).localCheckpoint()
         # the close (grid self-join on year+1 + horizon guard) over the
         # merged state must equal batch over exactly the orders so far
         want = sorted(
@@ -821,8 +812,7 @@ def test_stream_shapley_purchase_first_retroactive_exclusion(spark):
     early_touch = (3, _dt(2000, 1, 3), 7, SHAPLEY_CHANNELS[1], 1.0, "{}")
     chunks = [[purchase], [late_touch, purchase], [early_touch]]
 
-    cols = ", ".join(f"t{i}_us bigint" for i in range(len(SHAPLEY_CHANNELS)))
-    state = spark.createDataFrame([], f"user_id long, conv_us bigint, {cols}")
+    state = _shapley_empty_state(spark)
     for c in chunks:
         state = _shapley_merge(spark, state, spark.createDataFrame(c, schema))
     allrows = [purchase, late_touch, early_touch]
@@ -870,9 +860,8 @@ def _ann_prop_vec(rnd_ints):
 )
 @settings(max_examples=6, deadline=None)
 def test_stream_ann_postings_chunking_invariant(spark, vecs, rnd):
-    from pyspark.sql import functions as F  # noqa: F401
-
     from locopy_spark.operators.similarity import lsh_signatures
+    from locopy_spark.streaming.stateful import ANN_POSTINGS_SPEC, monoid_merge
 
     schema = "vec_id long, embedding array<float>"
     rows = [(i, _ann_prop_vec(v)) for i, v in enumerate(vecs)]
@@ -891,17 +880,15 @@ def test_stream_ann_postings_chunking_invariant(spark, vecs, rnd):
             dim=_ANN_PROP_DIM,
         )
 
-    # the stream_ann_postings merge step, verbatim (union + dedup on
-    # the idempotence key), at the property's small geometry
-    state = spark.createDataFrame([], "vec_id long, table int, bucket long")
+    # the stream_ann_postings merge (keep-any per idempotence key), at
+    # the property's small geometry
+    state = spark.createDataFrame([], ANN_POSTINGS_SPEC[0])
     seen_ids = set()
     for c in chunks:
         seen_ids.update(i for i, _ in c)
-        state = (
-            state.unionByName(sigs(spark.createDataFrame(c, schema)))
-            .dropDuplicates(["vec_id", "table"])
-            .localCheckpoint()
-        )
+        state = monoid_merge(
+            state, sigs(spark.createDataFrame(c, schema)), ANN_POSTINGS_SPEC[1]
+        ).localCheckpoint()
         want = sorted(
             tuple(r)
             for r in sigs(
@@ -928,6 +915,7 @@ def test_stream_ann_lists_chunking_invariant(spark, vecs, rnd):
     from pyspark.sql import functions as F
 
     from locopy_spark.operators.similarity import _ivf_assign, with_fixed_norm
+    from locopy_spark.streaming.stateful import ANN_LISTS_SPEC, monoid_merge
 
     schema = "vec_id long, embedding array<float>"
     rows = [(i, _ann_prop_vec(v)) for i, v in enumerate(vecs)]
@@ -959,19 +947,15 @@ def test_stream_ann_lists_chunking_invariant(spark, vecs, rnd):
         )
         return _ivf_assign(vecs_df, "n", 1, cent)
 
-    # the stream_ann_lists merge step, verbatim (union + dedup per
-    # vector against the frozen quantizer)
-    state = spark.createDataFrame(
-        [], "centroid_id long, n_id long, n_emb array<float>, n_norm bigint"
-    )
+    # the stream_ann_lists merge (keep-any per vector against the
+    # frozen quantizer)
+    state = spark.createDataFrame([], ANN_LISTS_SPEC[0])
     seen_ids = set()
     for c in chunks:
         seen_ids.update(i for i, _ in c)
-        state = (
-            state.unionByName(assign(spark.createDataFrame(c, schema)))
-            .dropDuplicates(["n_id"])
-            .localCheckpoint()
-        )
+        state = monoid_merge(
+            state, assign(spark.createDataFrame(c, schema)), ANN_LISTS_SPEC[1]
+        ).localCheckpoint()
         want = sorted(
             (r.centroid_id, r.n_id, tuple(r.n_emb), r.n_norm)
             for r in assign(
@@ -1003,13 +987,12 @@ def test_stream_welch_state_chunking_invariant(spark, vals, rnd):
     """Welch's 1-row state is a plain-sum monoid: ANY shuffle/split of
     the orders merges to the batch state, and the layered F closure
     over the merged row equals the batch report bit-for-bit."""
-    from pyspark.sql import functions as F
-
     from locopy_spark.queries.stats import (
         ANOVA_GROUPS,
         welch_report,
         welch_state,
     )
+    from locopy_spark.streaming.stateful import monoid_merge, welch_spec
 
     rows = [
         (i, ANOVA_GROUPS[g], float(v), _dt(1995, 3, 1))
@@ -1022,17 +1005,13 @@ def test_stream_welch_state_chunking_invariant(spark, vals, rnd):
     rnd.shuffle(rows)
     n_chunks = rnd.randrange(1, 5)
     chunks = [c for c in (rows[i::n_chunks] for i in range(n_chunks)) if c]
-    state = None
+    schema_state, merge = welch_spec()
+    state = spark.createDataFrame([], schema_state)
     seen = []
     for c in chunks:
         seen.extend(c)
         part = welch_state(spark.createDataFrame(c, schema))
-        state = part if state is None else (
-            state.unionByName(part).agg(
-                *[F.sum(col).alias(col) for col in part.columns]
-            )
-        )
-        state = state.localCheckpoint()
+        state = monoid_merge(state, part, merge).localCheckpoint()
         got = [tuple(r) for r in welch_report(state).collect()]
         want = [
             tuple(r)
@@ -1059,13 +1038,12 @@ def test_stream_moods_grid_chunking_invariant(spark, vals, rnd):
     """The Mood's grid is a plain-sum monoid; the grand median (and
     every k×2 cell) moves between chunks, and the chi² finisher over
     the merged grid equals the batch report after every prefix."""
-    from pyspark.sql import functions as F
-
     from locopy_spark.queries.stats import (
         ANOVA_GROUPS,
         levene_state,
         moods_report,
     )
+    from locopy_spark.streaming.stateful import LEVENE_GRID_SPEC, monoid_merge
 
     rows = [
         (i, ANOVA_GROUPS[g], float(v), _dt(1995, 3, 1))
@@ -1078,17 +1056,12 @@ def test_stream_moods_grid_chunking_invariant(spark, vals, rnd):
     rnd.shuffle(rows)
     n_chunks = rnd.randrange(1, 5)
     chunks = [c for c in (rows[i::n_chunks] for i in range(n_chunks)) if c]
-    grid = None
+    grid = spark.createDataFrame([], LEVENE_GRID_SPEC[0])
     seen = []
     for c in chunks:
         seen.extend(c)
         part = levene_state(spark.createDataFrame(c, schema))
-        grid = part if grid is None else (
-            grid.unionByName(part)
-            .groupBy("o_orderpriority", "v")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        grid = grid.localCheckpoint()
+        grid = monoid_merge(grid, part, LEVENE_GRID_SPEC[1]).localCheckpoint()
         got = [tuple(r) for r in moods_report(grid).collect()]
         want = [
             tuple(r)

@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import functions as F
 
 from locopy_spark.queries.events import q_events_window
@@ -538,45 +539,6 @@ def test_stream_daily_anomaly_matches_batch(spark, sf_dir):
     assert got and got == want
 
 
-def test_stream_kmv_sketch_matches_batch(spark, sf_dir, tmp_path):
-    """KMV merge is a commutative idempotent monoid, so the sketch
-    maintained across 4 out-of-order micro-batches equals the batch
-    operator over the full corpus — exact array equality."""
-    from locopy_spark.functions.text import shingles_expr, tokens_expr
-    from locopy_spark.operators.sketches import kmv_sketch
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_kmv_sketch
-
-    docs = load_table(spark, sf_dir, "documents")
-    # 4 chunks, written out of doc_id order to exercise order-invariance
-    for i, pred in enumerate(["3", "1", "0", "2"]):
-        docs.filter(f"pmod(doc_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"chunk{i}"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "chunk*"))
-    )
-    q = stream_kmv_sketch(stream, k=64, state_view="kmv_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        r.source: list(r.kmv)
-        for r in spark.table("global_temp.kmv_t").collect()
-    }
-    sh = docs.select(
-        "source", F.expr(tokens_expr("text")).alias("toks")
-    ).select("source", F.explode(F.expr(shingles_expr("toks", 3))).alias("sh"))
-    want = {
-        r.source: list(r.kmv)
-        for r in kmv_sketch(sh, "source", "sh", k=64).collect()
-    }
-    assert got and got == want
-
-
 def test_stream_quantiles_matches_batch(spark, sf_dir):
     """The additively-merged histogram state yields the same quantiles
     as the batch binning over the full events table, and each quantile
@@ -678,179 +640,6 @@ def test_stream_triangle_count_matches_batch(spark, sf_dir, tmp_path):
     assert got_j and got_j == want_j
 
 
-def test_stream_fertility_matches_batch(spark, sf_dir, tmp_path):
-    """Per-(source,lang) fertility counts are an additive monoid, so
-    the state maintained across 4 out-of-order micro-batches + the
-    shared ratio finisher equals batch p_tokenizer_fertility exactly."""
-    from locopy_spark.queries.corpus import (
-        fertility_report,
-        p_tokenizer_fertility,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_fertility
-
-    docs = load_table(spark, sf_dir, "documents")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        docs.filter(f"pmod(doc_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"fchunk{i}"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "fchunk*"))
-    )
-    q = stream_fertility(stream, state_view="fertility_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in fertility_report(
-            spark.table("global_temp.fertility_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in p_tokenizer_fertility(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_length_histogram_matches_batch(spark, sf_dir, tmp_path):
-    """Per-bin histogram counts merge additively, so stream state +
-    the shared cumulative finisher equals batch p_length_histogram on
-    any batching/order."""
-    from locopy_spark.queries.corpus import length_report, p_length_histogram
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_length_histogram
-
-    docs = load_table(spark, sf_dir, "documents")
-    for i, pred in enumerate(["1", "3", "0", "2"]):
-        docs.filter(f"pmod(doc_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"lchunk{i}"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "lchunk*"))
-    )
-    q = stream_length_histogram(stream, state_view="length_hist_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in length_report(
-            spark.table("global_temp.length_hist_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in p_length_histogram(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_bloom_matches_batch(spark, sf_dir, tmp_path):
-    """Bit-set union is a commutative idempotent monoid: the filter
-    maintained across 4 out-of-order micro-batches (with overlapping
-    keys) equals the batch build's set-bit table exactly."""
-    from locopy_spark.queries.tpch_ext import _bloom_pos_spark
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_bloom
-
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey")
-    for i, pred in enumerate(["3", "0", "2", "1"]):
-        # modulo split of ORDERS (not keys): the same custkey lands in
-        # several chunks, exercising the idempotent merge
-        orders.filter(f"pmod(o_custkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"bchunk{i}"))
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "bchunk*"))
-    )
-    q = stream_bloom(stream, state_view="bloom_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        r.pos for r in spark.table("global_temp.bloom_t").collect()
-    }
-    want = {
-        r.pos
-        for r in orders.select("o_custkey")
-        .distinct()
-        .select(F.explode(F.expr(_bloom_pos_spark("o_custkey"))).alias("pos"))
-        .distinct()
-        .collect()
-    }
-    assert got and got == want
-
-
-def test_stream_ols_trend_matches_batch(spark, sf_dir, tmp_path):
-    """The per-(priority, day) cent state is additive in y, so the
-    state maintained across 4 out-of-order micro-batches + the shared
-    power-sum/formula finisher equals batch q_ols_trend exactly."""
-    from locopy_spark.queries.trends import ols_report, q_ols_trend
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_ols_trend
-
-    orders = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["3", "1", "0", "2"]):
-        orders.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"ochunk{i}"))
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "ochunk*"))
-    )
-    q = stream_ols_trend(stream, state_view="ols_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in ols_report(spark.table("global_temp.ols_t")).collect()
-    ]
-    want = [tuple(r) for r in q_ols_trend(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_benford_matches_batch(spark, sf_dir, tmp_path):
-    """Per-(segment, digit) counts merge additively across the
-    stream-static customer join, so stream state + the ppm/chi²
-    finisher equals batch q_benford on any batching/order."""
-    from locopy_spark.queries.trends import benford_report, q_benford
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_benford
-
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        orders.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"bchunk{i}"))
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "bchunk*"))
-    )
-    q = stream_benford(stream, customer, state_view="benford_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in benford_report(
-            spark.table("global_temp.benford_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_benford(spark, sf_dir).collect()]
-    assert got and got == want
-
-
 def test_stream_acf_matches_batch(spark, sf_dir):
     """ACF over the additively maintained daily series equals the
     batch scorer over the same events — same maintainer as the
@@ -880,183 +669,6 @@ def test_stream_acf_matches_batch(spark, sf_dir):
         F.sum(F.expr("cast(floor(value * 1000 + 0.5) as bigint)")).alias("x")
     )
     want = [tuple(r) for r in acf_over_daily(daily).orderBy("lag").collect()]
-    assert got and got == want
-
-
-def test_stream_weekday_uplift_matches_batch(spark, sf_dir, tmp_path):
-    """The 7-row per-DOW state merges additively, so stream state +
-    the shared uplift finisher equals batch q_weekday_uplift on any
-    batching/order."""
-    from locopy_spark.queries.tpch_ext import q_weekday_uplift, weekday_report
-    from locopy_spark.streaming.stateful import stream_weekday_uplift
-
-    orders = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["1", "3", "0", "2"]):
-        orders.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"wchunk{i}"))
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "wchunk*"))
-    )
-    q = stream_weekday_uplift(stream, state_view="weekday_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in weekday_report(
-            spark.table("global_temp.weekday_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_weekday_uplift(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_vocab_matches_batch(spark, sf_dir, tmp_path):
-    """Token counts merge additively across 4 out-of-order doc
-    chunks; stream state + the shared Zipf-head finisher equals batch
-    p_vocab_coverage exactly."""
-    from locopy_spark.queries.corpus import (
-        p_vocab_coverage,
-        vocab_coverage_report,
-    )
-    from locopy_spark.streaming.stateful import stream_vocab
-
-    docs = load_table(spark, sf_dir, "documents")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        docs.filter(f"pmod(doc_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"vchunk{i}"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "vchunk*"))
-    )
-    q = stream_vocab(stream, state_view="vocab_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in vocab_coverage_report(
-            spark.table("global_temp.vocab_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in p_vocab_coverage(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_xcorr_matches_batch(spark, sf_dir, tmp_path):
-    """Per-(hour, side) counts merge additively; stream state + the
-    shared dense-fill/lag-moment finisher equals batch q_xcorr on 4
-    out-of-order event chunks."""
-    from locopy_spark.queries.events_ext import q_xcorr, xcorr_report
-    from locopy_spark.streaming.stateful import stream_xcorr
-
-    ev = load_table(spark, sf_dir, "events")
-    for i, pred in enumerate(["3", "0", "2", "1"]):
-        ev.filter(f"pmod(event_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"xchunk{i}"))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "xchunk*"))
-    )
-    q = stream_xcorr(stream, state_view="xcorr_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in xcorr_report(spark.table("global_temp.xcorr_t")).collect()
-    ]
-    want = [tuple(r) for r in q_xcorr(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_cramers_matches_batch(spark, sf_dir, tmp_path):
-    """Contingency cells merge additively across the stream-static
-    customer join, so stream state + the shared chi²/V finisher
-    equals batch q_cramers_v on any batching/order."""
-    from locopy_spark.queries.assoc import cramers_report, q_cramers_v
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_cramers
-
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        orders.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"cvchunk{i}"))
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "cvchunk*"))
-    )
-    q = stream_cramers(stream, customer, state_view="cramers_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in cramers_report(
-            spark.table("global_temp.cramers_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_cramers_v(spark, sf_dir).collect()]
-    assert got and got == want
-    # second finisher over the SAME state (the stream_simpson
-    # convention: one state, every finisher asserted): Goodman–Kruskal
-    # λ closes from the identical contingency cells
-    from locopy_spark.queries.assoc import lambda_report, q_goodman_lambda
-
-    got_l = [
-        tuple(r)
-        for r in lambda_report(
-            spark.table("global_temp.cramers_t")
-        ).collect()
-    ]
-    want_l = [tuple(r) for r in q_goodman_lambda(spark, sf_dir).collect()]
-    assert got_l and got_l == want_l
-
-
-def test_stream_hhi_matches_batch(spark, sf_dir, tmp_path):
-    """Per-(nation, supplier) revenue cents merge additively across 4
-    out-of-order lineitem chunks; stream state + the shared HHI
-    finisher equals batch q_hhi exactly."""
-    from locopy_spark.queries.assoc import hhi_report, q_hhi
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_hhi
-
-    li = load_table(spark, sf_dir, "lineitem")
-    supplier = load_table(spark, sf_dir, "supplier")
-    nation = load_table(spark, sf_dir, "nation")
-    for i, pred in enumerate(["3", "1", "0", "2"]):
-        li.filter(f"pmod(l_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"hchunk{i}"))
-    stream = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "hchunk*"))
-    )
-    q = stream_hhi(stream, supplier, nation, state_view="hhi_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in hhi_report(spark.table("global_temp.hhi_t")).collect()
-    ]
-    want = [tuple(r) for r in q_hhi(spark, sf_dir).collect()]
     assert got and got == want
 
 
@@ -1218,44 +830,6 @@ def test_stream_lexical_index_matches_batch_prf(spark, sf_dir, tmp_path):
     assert got and got == want
 
 
-def test_stream_co_engagement_matches_batch(spark, sf_dir, tmp_path):
-    """(user, week, type) is a set, so stream state + the shared
-    lift finisher equals batch q_co_engagement on out-of-order
-    chunks with re-delivered rows."""
-    from locopy_spark.queries.events_ext import (
-        co_engagement_report,
-        q_co_engagement,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_co_engagement
-
-    ev = load_table(spark, sf_dir, "events")
-    for i, p in enumerate([2, 0, 3, 1]):
-        ev.filter(
-            f"pmod(event_id, 4) in ({p}, {(p + 1) % 4})"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"cechunk{i}")
-        )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "cechunk*"))
-    )
-    q = stream_co_engagement(stream, state_view="coeng_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in co_engagement_report(spark.table("global_temp.coeng_t"))
-        .orderBy("a", "b")
-        .collect()
-    ]
-    want = [tuple(r) for r in q_co_engagement(spark, sf_dir).collect()]
-    assert got and got == want
-
-
 def test_stream_dedup_yield_matches_batch(spark, sf_dir, tmp_path):
     """The fingerprint table is the honest state (late-arriving
     smaller ids change keepers), so stream state + the shared
@@ -1295,192 +869,6 @@ def test_stream_dedup_yield_matches_batch(spark, sf_dir, tmp_path):
     ]
     want = [tuple(r) for r in p_dedup_yield(spark, sf_dir).collect()]
     assert got and got == want
-
-
-def test_stream_ca_trend_matches_batch(spark, sf_dir, tmp_path):
-    """Per-day (trials, purchases) counters are additive monoids, so
-    the state maintained across 4 out-of-order micro-batches + the
-    shared z/verdict finisher equals batch q_cochran_armitage
-    exactly."""
-    from locopy_spark.queries.trends import ca_report, q_cochran_armitage
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_ca_trend
-
-    events = load_table(spark, sf_dir, "events")
-    for i, pred in enumerate(["3", "1", "0", "2"]):
-        events.filter(f"pmod(event_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"cachunk{i}"))
-    stream = (
-        spark.readStream.schema(
-            spark.read.parquet(str(tmp_path / "cachunk0")).schema
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "cachunk*"))
-    )
-    q = stream_ca_trend(stream, state_view="ca_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in ca_report(spark.table("global_temp.ca_t")).collect()
-    ]
-    want = [tuple(r) for r in q_cochran_armitage(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_filter_funnel_matches_batch(spark, sf_dir, tmp_path):
-    """The 10-counter cumulative-gate state is a pure additive
-    monoid, so the 1-row state summed across 4 out-of-order
-    micro-batches + the shared unpivot finisher equals batch
-    p_filter_funnel exactly."""
-    from locopy_spark.queries.quality import funnel_report, p_filter_funnel
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_filter_funnel
-
-    docs = load_table(spark, sf_dir, "documents")
-    for i, pred in enumerate(["1", "3", "2", "0"]):
-        docs.filter(f"pmod(doc_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"ffchunk{i}"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "ffchunk*"))
-    )
-    q = stream_filter_funnel(stream, state_view="funnel_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in funnel_report(
-            spark.table("global_temp.funnel_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in p_filter_funnel(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_centroids_matches_batch(spark, sf_dir, tmp_path):
-    """(label, dim) exact component sums + counts are additive
-    monoids, so the state maintained across 4 out-of-order
-    micro-batches + the shared mean finisher equals batch
-    d_embedding_centroids exactly (float-equal: same double close
-    over identical exact sums)."""
-    from locopy_spark.queries.docs_ext import (
-        centroid_report,
-        d_embedding_centroids,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_centroids
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        emb.filter(f"pmod(vec_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"cchunk{i}"))
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "cchunk*"))
-    )
-    q = stream_centroids(stream, state_view="centroid_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in centroid_report(
-            spark.table("global_temp.centroid_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in d_embedding_centroids(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_mix_drift_matches_batch(spark, sf_dir, tmp_path):
-    """|months × priorities| cell counts are additive monoids, so the
-    state maintained across 4 out-of-order micro-batches + the shared
-    grid/chi² finisher equals batch q_mix_drift exactly."""
-    from locopy_spark.queries.trends import mix_report, q_mix_drift
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_mix_drift
-
-    orders = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["1", "3", "0", "2"]):
-        orders.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"mchunk{i}"))
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "mchunk*"))
-    )
-    q = stream_mix_drift(stream, state_view="mix_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in mix_report(spark.table("global_temp.mix_t")).collect()
-    ]
-    want = [tuple(r) for r in q_mix_drift(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_cms_matches_batch(spark, sf_dir, tmp_path):
-    """CMS cells are exact occurrence sums (additive monoid), so the
-    d×w state maintained across 4 out-of-order micro-batches equals
-    the batch sketch exactly, and probing it through the shared
-    cms_estimate finisher reproduces batch t_cms_counts."""
-    from locopy_spark.functions.text import tokens_expr
-    from locopy_spark.queries.corpus import (
-        CMS_PROBE_K,
-        cms_cells,
-        cms_estimate,
-        t_cms_counts,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_cms
-
-    docs = load_table(spark, sf_dir, "documents")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        docs.filter(f"pmod(doc_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"cmschunk{i}"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "cmschunk*"))
-    )
-    q = stream_cms(stream, state_view="cms_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    state = spark.table("global_temp.cms_t")
-    got_cells = {(r.r, r.col): r.v for r in state.collect()}
-    want_cells = {(r.r, r.col): r.v for r in cms_cells(docs).collect()}
-    assert got_cells and got_cells == want_cells
-    vocab = (
-        docs.select(F.explode(F.expr(tokens_expr("text"))).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    probes = (
-        vocab.orderBy(F.desc("c"), "token")
-        .limit(CMS_PROBE_K)
-        .select("token", F.col("c").alias("true_c"))
-    )
-    got = [tuple(r) for r in cms_estimate(state, probes).collect()]
-    want = [tuple(r) for r in t_cms_counts(spark, sf_dir).collect()]
-    assert got == want
 
 
 def test_stream_user_totals_tws_matches_batch_and_v1(spark, sf_dir):
@@ -1542,1305 +930,6 @@ def test_stream_user_totals_tws_matches_batch_and_v1(spark, sf_dir):
     assert got == batch
 
 
-def test_stream_simpson_matches_batch(spark, sf_dir, tmp_path):
-    """Per-(source, token) counts merge additively across 4
-    out-of-order doc chunks; ONE stream state feeds BOTH shared
-    finishers (three after hapax_report), and each equals its batch
-    twin exactly (t_simpson_diversity, t_zipf_deviation,
-    t_hapax_ratio)."""
-    from locopy_spark.queries.corpus import (
-        hapax_report,
-        simpson_report,
-        t_hapax_ratio,
-        t_simpson_diversity,
-        t_zipf_deviation,
-        zipf_report,
-    )
-    from locopy_spark.streaming.stateful import stream_simpson
-
-    docs = load_table(spark, sf_dir, "documents")
-    for i, pred in enumerate(["1", "3", "0", "2"]):
-        docs.filter(f"pmod(doc_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"schunk{i}"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "schunk*"))
-    )
-    q = stream_simpson(stream, state_view="simpson_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    state = spark.table("global_temp.simpson_t")
-    got_s = [tuple(r) for r in simpson_report(state).collect()]
-    want_s = [tuple(r) for r in t_simpson_diversity(spark, sf_dir).collect()]
-    assert got_s and got_s == want_s
-    got_z = [tuple(r) for r in zipf_report(state).collect()]
-    want_z = [tuple(r) for r in t_zipf_deviation(spark, sf_dir).collect()]
-    assert got_z and got_z == want_z
-    got_h = [tuple(r) for r in hapax_report(state).collect()]
-    want_h = [tuple(r) for r in t_hapax_ratio(spark, sf_dir).collect()]
-    assert got_h and got_h == want_h
-    # fourth finisher on the same state: the source-overlap matrix
-    from locopy_spark.queries.corpus import (
-        source_overlap_report,
-        t_source_overlap,
-    )
-
-    got_o = [tuple(r) for r in source_overlap_report(state).collect()]
-    want_o = [tuple(r) for r in t_source_overlap(spark, sf_dir).collect()]
-    assert got_o and got_o == want_o
-
-
-def test_stream_norm_hist_matches_batch(spark, sf_dir, tmp_path):
-    """Per-band counts merge additively across 4 out-of-order vector
-    chunks; stream state == batch d_norm_histogram exactly."""
-    from locopy_spark.streaming.stateful import stream_norm_hist
-    from locopy_spark.queries.docs_ext import d_norm_histogram
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        emb.filter(f"pmod(vec_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"nchunk{i}"))
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "nchunk*"))
-    )
-    q = stream_norm_hist(stream, state_view="norm_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in spark.table("global_temp.norm_t").orderBy("band").collect()
-    ]
-    want = [tuple(r) for r in d_norm_histogram(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_heatmap_matches_batch(spark, sf_dir, tmp_path):
-    """Per-cell counts merge additively across 4 out-of-order event
-    chunks; stream state + zero-fill finisher == batch
-    q_calendar_heatmap exactly."""
-    from locopy_spark.queries.timeseries import (
-        heat_report,
-        q_calendar_heatmap,
-    )
-    from locopy_spark.streaming.stateful import stream_heatmap
-
-    ev = load_table(spark, sf_dir, "events")
-    for i, pred in enumerate(["3", "1", "0", "2"]):
-        ev.filter(f"pmod(event_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"hchunk{i}"))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "hchunk*"))
-    )
-    q = stream_heatmap(stream, state_view="heat_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in heat_report(spark.table("global_temp.heat_t")).collect()
-    ]
-    want = [tuple(r) for r in q_calendar_heatmap(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_dormancy_matches_batch(spark, sf_dir, tmp_path):
-    """Per-user last-day state merges as a MAX monoid across 4
-    out-of-order event chunks (later chunks carry EARLIER events);
-    stream state + horizon finisher == batch q_dormancy_curve."""
-    from locopy_spark.queries.timeseries import (
-        dormancy_report,
-        q_dormancy_curve,
-    )
-    from locopy_spark.streaming.stateful import stream_dormancy
-
-    ev = load_table(spark, sf_dir, "events")
-    for i, pred in enumerate(["0", "2", "1", "3"]):
-        ev.filter(f"pmod(event_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"dchunk{i}"))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "dchunk*"))
-    )
-    q = stream_dormancy(stream, state_view="dorm_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in dormancy_report(
-            spark.table("global_temp.dorm_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_dormancy_curve(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_centroid_purity_matches_batch(spark, sf_dir, tmp_path):
-    """(label, dim) purity-quantized sums + counts are additive
-    monoids, so the state maintained across 4 out-of-order
-    micro-batches + the purity finisher over the accumulated corpus
-    equals batch s_centroid_purity bit-exactly (integer/decimal
-    arithmetic end-to-end — no float close at all)."""
-    from locopy_spark.queries.docs_ext import purity_report, s_centroid_purity
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_centroid_purity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    for i, pred in enumerate(["3", "1", "2", "0"]):
-        emb.filter(f"pmod(vec_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"pchunk{i}"))
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "pchunk*"))
-    )
-    q = stream_centroid_purity(stream, state_view="purity_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in purity_report(
-            emb, spark.table("global_temp.purity_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in s_centroid_purity(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_anova_matches_batch(spark, sf_dir, tmp_path):
-    """The 1-row ANOVA state is an additive monoid (row-local per
-    order — no cross-batch dependency), so the state maintained across
-    4 out-of-order micro-batches + the F finisher equals batch q_anova
-    exactly (same fixed-order double chain over identical sums)."""
-    from locopy_spark.queries.stats import anova_report, q_anova
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_anova
-
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["1", "3", "0", "2"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"achunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "achunk*"))
-    )
-    q = stream_anova(stream, state_view="anova_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in anova_report(spark.table("global_temp.anova_t")).collect()
-    ]
-    want = [tuple(r) for r in q_anova(spark, sf_dir).collect()]
-    assert got and got == want
-    # second finisher over the SAME live state: the Bonferroni
-    # pairwise panel (q_posthoc_pairs) — one state, an omnibus F AND
-    # the which-pairs-differ read
-    from locopy_spark.queries.stats import posthoc_report, q_posthoc_pairs
-
-    got_ph = [
-        tuple(r)
-        for r in posthoc_report(spark.table("global_temp.anova_t")).collect()
-    ]
-    want_ph = [tuple(r) for r in q_posthoc_pairs(spark, sf_dir).collect()]
-    assert got_ph and got_ph == want_ph
-
-
-def test_stream_backlog_matches_batch(spark, sf_dir, tmp_path):
-    """(status, order-day) counts + scaled value are additive monoids;
-    banding happens only in the finisher against the batch horizon, so
-    the state maintained across 4 out-of-order micro-batches + the
-    aging finisher equals batch q_backlog_aging exactly."""
-    from locopy_spark.queries.tpch_ext import backlog_report, q_backlog_aging
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_backlog
-
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"bchunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "bchunk*"))
-    )
-    q = stream_backlog(stream, state_view="backlog_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in backlog_report(
-            spark.table("global_temp.backlog_t"), horizon_from=o
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_backlog_aging(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_survival_matches_both_batch_estimators(spark, sf_dir, tmp_path):
-    """Per-customer (first_d MIN, last_d MAX) spans are a monoid, so
-    the state maintained across 4 out-of-order micro-batches + the
-    at-risk finisher feeds BOTH survival estimators to bit-exact
-    equality with their batch queries (the stream_simpson convention:
-    one state, every finisher asserted)."""
-    from locopy_spark.queries.assoc import (
-        km_from_risk,
-        lifetime_risk_report,
-        na_from_risk,
-        q_kaplan_meier,
-        q_nelson_aalen,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_survival
-
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["1", "2", "0", "3"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"schunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "schunk*"))
-    )
-    q = stream_survival(stream, state_view="span_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    risk = lifetime_risk_report(spark.table("global_temp.span_t"))
-    got_km = [tuple(r) for r in km_from_risk(risk).collect()]
-    want_km = [tuple(r) for r in q_kaplan_meier(spark, sf_dir).collect()]
-    assert got_km and got_km == want_km
-    got_na = [tuple(r) for r in na_from_risk(risk).collect()]
-    want_na = [tuple(r) for r in q_nelson_aalen(spark, sf_dir).collect()]
-    assert got_na and got_na == want_na
-
-
-def test_stream_inequality_matches_both_batch_reads(spark, sf_dir, tmp_path):
-    """Per-customer revenue cents are a plain-sum monoid, so the state
-    maintained across 4 out-of-order micro-batches + the ranked
-    finisher feeds BOTH inequality reads to exact equality with their
-    batch queries."""
-    from locopy_spark.queries.stats import (
-        gini_from_ranked,
-        inequality_ranked,
-        lorenz_from_ranked,
-        q_gini,
-        q_lorenz_curve,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_inequality
-
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["3", "0", "2", "1"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"ichunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "ichunk*"))
-    )
-    q = stream_inequality(stream, state_view="ineq_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    ranked = inequality_ranked(
-        load_table(spark, sf_dir, "customer"),
-        spark.table("global_temp.ineq_t"),
-    )
-    got_g = [tuple(r) for r in gini_from_ranked(ranked).collect()]
-    want_g = [tuple(r) for r in q_gini(spark, sf_dir).collect()]
-    assert got_g and got_g == want_g
-    got_l = [tuple(r) for r in lorenz_from_ranked(ranked).collect()]
-    want_l = [tuple(r) for r in q_lorenz_curve(spark, sf_dir).collect()]
-    assert got_l and got_l == want_l
-
-
-def test_stream_peaks_matches_batch(spark, sf_dir, tmp_path):
-    """Daily revenue cents are a plain-sum monoid; prominence is
-    derived only in the finisher, so the state maintained across 4
-    out-of-order micro-batches + the peak finisher equals batch
-    q_peak_days exactly."""
-    from locopy_spark.queries.timeseries import peaks_report, q_peak_days
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_peaks
-
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["3", "1", "2", "0"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"pchunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "pchunk*"))
-    )
-    q = stream_peaks(stream, state_view="peaks_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in peaks_report(spark.table("global_temp.peaks_t")).collect()
-    ]
-    want = [tuple(r) for r in q_peak_days(spark, sf_dir).collect()]
-    assert got and got == want
-    # second finisher over the SAME daily-revenue state: the best
-    # change-point closes from the identical monoid
-    from locopy_spark.queries.timeseries import (
-        changepoint_report,
-        q_changepoint,
-    )
-
-    got_c = [
-        tuple(r)
-        for r in changepoint_report(
-            spark.table("global_temp.peaks_t")
-        ).collect()
-    ]
-    want_c = [tuple(r) for r in q_changepoint(spark, sf_dir).collect()]
-    assert got_c and got_c == want_c
-    # third finisher over the SAME state: the drawdown profile
-    from locopy_spark.queries.timeseries import drawdown_report, q_drawdown
-
-    got_d = [
-        tuple(r)
-        for r in drawdown_report(
-            spark.table("global_temp.peaks_t")
-        ).collect()
-    ]
-    want_d = [tuple(r) for r in q_drawdown(spark, sf_dir).collect()]
-    assert got_d and got_d == want_d
-    # fourth finisher over the SAME state: weekly seasonality strength
-    from locopy_spark.queries.stats import (
-        q_seasonal_strength,
-        seasonal_strength_report,
-    )
-
-    got_s = [
-        tuple(r)
-        for r in seasonal_strength_report(
-            spark.table("global_temp.peaks_t")
-        ).collect()
-    ]
-    want_s = [tuple(r) for r in q_seasonal_strength(spark, sf_dir).collect()]
-    assert got_s and got_s == want_s
-    # fifth finisher over the SAME state: XmR control-chart breaches
-    from locopy_spark.queries.timeseries import q_xmr_control, xmr_report
-
-    got_x = [
-        tuple(r)
-        for r in xmr_report(spark.table("global_temp.peaks_t")).collect()
-    ]
-    want_x = [tuple(r) for r in q_xmr_control(spark, sf_dir).collect()]
-    assert got_x == want_x
-    # sixth finisher over the SAME state: Bollinger band breaches
-    from locopy_spark.queries.timeseries import bollinger_report, q_bollinger
-
-    got_b = [
-        tuple(r)
-        for r in bollinger_report(
-            spark.table("global_temp.peaks_t")
-        ).collect()
-    ]
-    want_b = [tuple(r) for r in q_bollinger(spark, sf_dir).collect()]
-    assert got_b and got_b == want_b
-    # seventh finisher over the SAME state: RSI momentum signals
-    from locopy_spark.queries.timeseries import q_rsi, rsi_report
-
-    got_r = [
-        tuple(r)
-        for r in rsi_report(spark.table("global_temp.peaks_t")).collect()
-    ]
-    want_r = [tuple(r) for r in q_rsi(spark, sf_dir).collect()]
-    assert got_r and got_r == want_r
-    # eighth finisher over the SAME state: the MASE forecast-skill panel
-    from locopy_spark.queries.timeseries import mase_report, q_mase
-
-    got_m = [
-        tuple(r)
-        for r in mase_report(spark.table("global_temp.peaks_t")).collect()
-    ]
-    want_m = [tuple(r) for r in q_mase(spark, sf_dir).collect()]
-    assert got_m and got_m == want_m
-
-
-def test_stream_fulfillment_matches_batch(spark, sf_dir, tmp_path):
-    """Per-order first-ship days are a per-key MIN monoid; chunking by
-    SUPPLIER splits one order's lines across out-of-order batches so
-    the MIN genuinely merges; state + the lag-histogram finisher
-    equals batch q_fulfillment_lag exactly."""
-    from locopy_spark.queries.tpch_ext import (
-        fulfillment_report,
-        q_fulfillment_lag,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_fulfillment
-
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["3", "1", "2", "0"]):
-        l.filter(f"pmod(l_suppkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"fchunk{i}"))
-    stream = (
-        spark.readStream.schema(l.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "fchunk*"))
-    )
-    q = stream_fulfillment(stream, o, state_view="fulfillment_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in fulfillment_report(
-            spark.table("global_temp.fulfillment_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_fulfillment_lag(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_basket_size_matches_batch(spark, sf_dir, tmp_path):
-    """Per-order line counts are a plain-sum monoid; chunking by
-    SUPPLIER splits one order's lines across out-of-order batches so
-    counts genuinely merge; state + the histogram finisher (bucketing
-    at read time) equals batch q_basket_size_dist exactly."""
-    from locopy_spark.queries.tpch import basket_report, q_basket_size_dist
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_basket_size
-
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        l.filter(f"pmod(l_suppkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"bszchunk{i}"))
-    stream = (
-        spark.readStream.schema(l.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "bszchunk*"))
-    )
-    q = stream_basket_size(stream, state_view="basket_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in basket_report(
-            spark.table("global_temp.basket_t"), o
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_basket_size_dist(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_value_migration_matches_batch(spark, sf_dir, tmp_path):
-    """Per-(customer, year) revenue cents are a plain-sum monoid;
-    ranking + the 10x10 transition matrix derive only in the
-    finisher, so state across 4 out-of-order chunks + finisher equals
-    batch q_value_migration exactly."""
-    from locopy_spark.queries.tpch_ext import (
-        migration_report,
-        q_value_migration,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_value_migration
-
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["1", "3", "0", "2"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"vmchunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "vmchunk*"))
-    )
-    q = stream_value_migration(stream, state_view="migration_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in migration_report(
-            spark.table("global_temp.migration_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_value_migration(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_street_vs_list_matches_batch(spark, sf_dir, tmp_path):
-    """(brand, band) cell counts are additive because banding is
-    row-local; state across 4 out-of-order lineitem chunks + the
-    share finisher equals batch q_street_vs_list exactly."""
-    from locopy_spark.queries.tpch_ext import q_street_vs_list, svl_report
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_street_vs_list
-
-    l = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    for i, pred in enumerate(["2", "3", "0", "1"]):
-        l.filter(f"pmod(l_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"svlchunk{i}"))
-    stream = (
-        spark.readStream.schema(l.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "svlchunk*"))
-    )
-    q = stream_street_vs_list(stream, p, state_view="svl_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in svl_report(spark.table("global_temp.svl_t")).collect()
-    ]
-    want = [tuple(r) for r in q_street_vs_list(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_price_index_matches_batch(spark, sf_dir, tmp_path):
-    """Per-(part, year) revenue/quantity sums are plain-sum monoids;
-    unit prices and the matched-basket index chain derive only in the
-    finisher, so state across 4 out-of-order SUPPLIER-keyed chunks
-    (one part-year's lines span batches) + finisher equals batch
-    q_price_index exactly."""
-    from locopy_spark.queries.tpch_ext import (
-        price_index_report,
-        q_price_index,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_price_index
-
-    l = load_table(spark, sf_dir, "lineitem")
-    for i, pred in enumerate(["1", "2", "0", "3"]):
-        l.filter(f"pmod(l_suppkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"pichunk{i}"))
-    stream = (
-        spark.readStream.schema(l.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "pichunk*"))
-    )
-    q = stream_price_index(stream, state_view="price_index_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in price_index_report(
-            spark.table("global_temp.price_index_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_price_index(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_stickiness_matches_batch(spark, sf_dir, tmp_path):
-    """The (day, user) grid is an idempotent SET; chunks OVERLAP (every
-    event delivered twice across chunks) and arrive out of order, and
-    the union+distinct state + monthly finisher still equals batch
-    q_stickiness exactly."""
-    from locopy_spark.queries.timeseries import q_stickiness, stickiness_report
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_stickiness
-
-    e = load_table(spark, sf_dir, "events")
-    # overlapping re-delivery: chunk i = {pmod in {i, i+1 mod 4}}
-    for i in range(4):
-        e.filter(
-            f"pmod(event_id, 4) in ({(i + 2) % 4}, {(i + 3) % 4})"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"stkchunk{i}")
-        )
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "stkchunk*"))
-    )
-    q = stream_stickiness(stream, state_view="stickiness_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in stickiness_report(
-            spark.table("global_temp.stickiness_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_stickiness(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_abc_xyz_matches_batch(spark, sf_dir, tmp_path):
-    """The (part, month) demand grid is a plain-sum monoid; CV² bands
-    and prefix-sum ABC classes derive only in the finisher, so state
-    across 4 out-of-order SUPPLIER-keyed chunks + finisher equals
-    batch q_abc_xyz exactly."""
-    from locopy_spark.queries.tpch_ext import abc_xyz_report, q_abc_xyz
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_abc_xyz
-
-    l = load_table(spark, sf_dir, "lineitem")
-    for i, pred in enumerate(["2", "1", "3", "0"]):
-        l.filter(f"pmod(l_suppkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"axchunk{i}"))
-    stream = (
-        spark.readStream.schema(l.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "axchunk*"))
-    )
-    q = stream_abc_xyz(stream, state_view="abc_xyz_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in abc_xyz_report(
-            spark.table("global_temp.abc_xyz_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_abc_xyz(spark, sf_dir).collect()]
-    assert got and got == want
-    # second + third finishers over the SAME demand grid
-    from locopy_spark.queries.tpch_ext import (
-        croston_report,
-        obsolete_report,
-        q_croston,
-        q_demand_obsolete,
-    )
-
-    state = spark.table("global_temp.abc_xyz_t")
-    got_c = [tuple(r) for r in croston_report(state).collect()]
-    want_c = [tuple(r) for r in q_croston(spark, sf_dir).collect()]
-    assert got_c and got_c == want_c
-    got_o = [tuple(r) for r in obsolete_report(state).collect()]
-    want_o = [tuple(r) for r in q_demand_obsolete(spark, sf_dir).collect()]
-    assert got_o == want_o
-    # fourth finisher over the SAME demand grid: newsvendor quantiles
-    from locopy_spark.queries.tpch_ext import newsvendor_report, q_newsvendor
-
-    got_n = [tuple(r) for r in newsvendor_report(state).collect()]
-    want_n = [tuple(r) for r in q_newsvendor(spark, sf_dir).collect()]
-    assert got_n and got_n == want_n
-    # fifth finisher over the SAME demand grid: the brand
-    # cannibalization matrix (grid rolled up through the part dim)
-    from locopy_spark.queries.stats import brand_xcorr_report, q_brand_xcorr
-    from locopy_spark.sources.tables import load_table as _lt
-
-    part = _lt(spark, sf_dir, "part")
-    got_b = [tuple(r) for r in brand_xcorr_report(state, part).collect()]
-    want_b = [tuple(r) for r in q_brand_xcorr(spark, sf_dir).collect()]
-    assert got_b and got_b == want_b
-
-
-def test_stream_odds_ratio_matches_batch(spark, sf_dir, tmp_path):
-    """Four 2x2 counters are a 1-row additive monoid; state across 4
-    out-of-order chunks + the row-local OR/RR finisher equals batch
-    q_odds_ratio exactly."""
-    from locopy_spark.queries.tpch_ext import odds_report, q_odds_ratio
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_odds_ratio
-
-    l = load_table(spark, sf_dir, "lineitem")
-    for i, pred in enumerate(["3", "0", "2", "1"]):
-        l.filter(f"pmod(l_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"orchunk{i}"))
-    stream = (
-        spark.readStream.schema(l.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "orchunk*"))
-    )
-    q = stream_odds_ratio(stream, state_view="odds_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in odds_report(spark.table("global_temp.odds_t")).collect()
-    ]
-    want = [tuple(r) for r in q_odds_ratio(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_cycle_time_matches_batch(spark, sf_dir, tmp_path):
-    """Per-order close days are a per-key MAX monoid (clamp commutes
-    with MAX); chunking by SUPPLIER splits one order's lines across
-    out-of-order batches so the MAX genuinely merges; state + the
-    Little's-law month panel equals batch q_little_law exactly."""
-    from locopy_spark.queries.tpch_ext import (
-        little_law_report,
-        q_little_law,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_cycle_time
-
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["1", "3", "0", "2"]):
-        l.filter(f"pmod(l_suppkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"cychunk{i}"))
-    stream = (
-        spark.readStream.schema(l.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "cychunk*"))
-    )
-    q = stream_cycle_time(stream, o, state_view="cycle_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in little_law_report(
-            spark.table("global_temp.cycle_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_little_law(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_leadtime_matches_batch(spark, sf_dir, tmp_path):
-    """(supplier, lag) cells are plain-sum monoids; chunking by ORDER
-    key splits one supplier's lines across out-of-order batches so the
-    sums genuinely merge; state + the scorecard finisher equals batch
-    q_supplier_leadtime exactly."""
-    from locopy_spark.queries.tpch_ext import (
-        leadtime_report,
-        q_supplier_leadtime,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_leadtime
-
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        l.filter(f"pmod(l_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"ltchunk{i}"))
-    stream = (
-        spark.readStream.schema(l.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "ltchunk*"))
-    )
-    q = stream_leadtime(stream, o, state_view="leadtime_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in leadtime_report(
-            spark.table("global_temp.leadtime_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_supplier_leadtime(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_sla_matches_batch(spark, sf_dir, tmp_path):
-    """(ship-month, priority) cells are plain-sum monoids; chunking by
-    ORDER key splits one month's lines across out-of-order batches so
-    the sums genuinely merge; ONE state feeds TWO finishers — the SLA
-    attainment panel equals batch q_ship_sla AND the Friedman
-    priority-effect panel equals batch q_friedman, bit-exactly."""
-    from locopy_spark.queries.stats import friedman_report, q_friedman
-    from locopy_spark.queries.tpch_ext import q_ship_sla, sla_report
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_sla
-
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["1", "3", "0", "2"]):
-        l.filter(f"pmod(l_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"slachunk{i}"))
-    stream = (
-        spark.readStream.schema(l.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "slachunk*"))
-    )
-    q = stream_sla(stream, o, state_view="sla_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    state = spark.table("global_temp.sla_t")
-    got = [tuple(r) for r in sla_report(state).collect()]
-    want = [tuple(r) for r in q_ship_sla(spark, sf_dir).collect()]
-    assert got and got == want
-    # second finisher over the SAME state: the Friedman rank panel
-    got_f = [tuple(r) for r in friedman_report(state).collect()]
-    want_f = [tuple(r) for r in q_friedman(spark, sf_dir).collect()]
-    assert got_f and got_f == want_f
-
-
-def test_stream_mcnemar_matches_batch(spark, sf_dir, tmp_path):
-    """Per-customer year flags are OR monoids; the four chunks OVERLAP
-    (each order is delivered twice across chunks) so idempotent
-    absorption is genuinely exercised; state + the 2x2/chi-square
-    finisher equals batch q_mcnemar exactly."""
-    from locopy_spark.queries.trends import mcnemar_report, q_mcnemar
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_mcnemar
-
-    o = load_table(spark, sf_dir, "orders")
-    # overlapping chunks: pmod 0|1, 1|2, 2|3, 3|0 — every order twice
-    for i, (p1, p2) in enumerate([(0, 1), (1, 2), (2, 3), (3, 0)]):
-        o.filter(
-            f"pmod(o_orderkey, 4) IN ({p1}, {p2})"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"mcchunk{i}")
-        )
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "mcchunk*"))
-    )
-    q = stream_mcnemar(stream, state_view="mcnemar_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in mcnemar_report(
-            spark.table("global_temp.mcnemar_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_mcnemar(spark, sf_dir).collect()]
-    assert got and got == want
-    # second finisher over the SAME state: capture-recapture estimate
-    from locopy_spark.queries.trends import (
-        capture_report,
-        q_capture_recapture,
-    )
-
-    got_c = [
-        tuple(r)
-        for r in capture_report(
-            spark.table("global_temp.mcnemar_t")
-        ).collect()
-    ]
-    want_c = [tuple(r) for r in q_capture_recapture(spark, sf_dir).collect()]
-    assert got_c and got_c == want_c
-
-
-def test_stream_growth_matches_batch(spark, sf_dir, tmp_path):
-    """The (user, week) grid is an idempotent SET monoid; the four
-    chunks OVERLAP (every event delivered twice) so union+distinct
-    absorption is genuinely exercised; state + the flow finisher
-    equals batch q_growth_accounting exactly."""
-    from locopy_spark.queries.timeseries import (
-        growth_report,
-        q_growth_accounting,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_growth
-
-    e = load_table(spark, sf_dir, "events")
-    for i, (p1, p2) in enumerate([(2, 3), (0, 1), (3, 0), (1, 2)]):
-        e.filter(
-            f"pmod(event_id, 4) IN ({p1}, {p2})"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"grchunk{i}")
-        )
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "grchunk*"))
-    )
-    q = stream_growth(stream, state_view="growth_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in growth_report(
-            spark.table("global_temp.growth_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_growth_accounting(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_did_matches_batch(spark, sf_dir, tmp_path):
-    """The four (treat, post) cells are plain-sum monoids; chunking by
-    ORDER key spreads every cell across out-of-order batches; state +
-    the panel finisher equals batch q_did exactly."""
-    from locopy_spark.queries.trends import did_report, q_did
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_did
-
-    l = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    for i, pred in enumerate(["3", "0", "2", "1"]):
-        l.filter(f"pmod(l_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"didchunk{i}"))
-    stream = (
-        spark.readStream.schema(l.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "didchunk*"))
-    )
-    q = stream_did(stream, p, state_view="did_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in did_report(spark.table("global_temp.did_t")).collect()
-    ]
-    want = [tuple(r) for r in q_did(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_dispersion_matches_batch(spark, sf_dir, tmp_path):
-    """Per-part power sums are plain-sum monoids; chunking by ORDER
-    key splits one part's lines across out-of-order batches so the
-    sums genuinely merge (and a part can cross the n >= 2 scoring
-    threshold mid-stream); state + the banded finisher equals batch
-    q_price_dispersion exactly."""
-    from locopy_spark.queries.tpch_ext import (
-        dispersion_report,
-        q_price_dispersion,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_dispersion
-
-    l = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    for i, pred in enumerate(["0", "2", "1", "3"]):
-        l.filter(f"pmod(l_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"dspchunk{i}"))
-    stream = (
-        spark.readStream.schema(l.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "dspchunk*"))
-    )
-    q = stream_dispersion(stream, p, state_view="dispersion_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in dispersion_report(
-            spark.table("global_temp.dispersion_t"), p
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_price_dispersion(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_logrank_matches_batch(spark, sf_dir, tmp_path):
-    """Grouped spans are (MIN, MAX) monoids per customer; chunking by
-    ORDER key splits one customer's orders across out-of-order batches
-    so the span genuinely merges (and the global horizon moves);
-    state + the log-rank finisher equals batch q_logrank exactly."""
-    from locopy_spark.queries.assoc import logrank_report, q_logrank
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_logrank
-
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    for i, pred in enumerate(["1", "3", "2", "0"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"lrchunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "lrchunk*"))
-    )
-    q = stream_logrank(stream, c, state_view="logrank_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in logrank_report(
-            spark.table("global_temp.logrank_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_logrank(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_cliffs_matches_batch(spark, sf_dir, tmp_path):
-    """Per-value segment counts are plain-sum monoids; chunking by
-    ORDER key spreads every value cell across out-of-order batches;
-    state + the prefix-pass finisher equals batch q_cliffs_delta
-    exactly."""
-    from locopy_spark.queries.stats import cliffs_report, q_cliffs_delta
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_cliffs
-
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"clchunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "clchunk*"))
-    )
-    q = stream_cliffs(stream, c, state_view="cliffs_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    state = spark.table("global_temp.cliffs_t")
-    got = [tuple(r) for r in cliffs_report(state).collect()]
-    want = [tuple(r) for r in q_cliffs_delta(spark, sf_dir).collect()]
-    assert got and got == want
-    # second + third finishers over the SAME value grid: the full
-    # two-sample panel (shape test + location test) closes live
-    from locopy_spark.queries.stats import (
-        ks_report,
-        mw_report,
-        q_ks_test,
-        q_mann_whitney,
-    )
-
-    got_k = [tuple(r) for r in ks_report(state).collect()]
-    want_k = [tuple(r) for r in q_ks_test(spark, sf_dir).collect()]
-    assert got_k and got_k == want_k
-    got_m = [tuple(r) for r in mw_report(state).collect()]
-    want_m = [tuple(r) for r in q_mann_whitney(spark, sf_dir).collect()]
-    assert got_m and got_m == want_m
-
-
-def test_stream_levene_matches_batch(spark, sf_dir, tmp_path):
-    """(priority, value) grid cells are plain-sum monoids; chunking by
-    ORDER key spreads every cell across out-of-order batches (group
-    medians move between batches); state + the Brown-Forsythe finisher
-    equals batch q_levene exactly."""
-    from locopy_spark.queries.stats import levene_report, q_levene
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_levene
-
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["0", "3", "1", "2"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"lvchunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "lvchunk*"))
-    )
-    q = stream_levene(stream, state_view="levene_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in levene_report(
-            spark.table("global_temp.levene_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_levene(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_cuped_matches_batch(spark, sf_dir, tmp_path):
-    """Per-customer (pre, post) cent sums are plain-sum monoids;
-    chunking by ORDER key splits one customer's two years across
-    out-of-order batches so the per-key merge is genuinely exercised;
-    state + the θ/adjusted-diff finisher equals batch q_cuped exactly
-    (same fixed-order double chain over identical exact moments)."""
-    from locopy_spark.queries.trends import cuped_report, cuped_treat, q_cuped
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_cuped
-
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"cupchunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "cupchunk*"))
-    )
-    q = stream_cuped(stream, state_view="cuped_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in cuped_report(
-            cuped_treat(spark.table("global_temp.cuped_t"))
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_cuped(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_loyalty_matches_batch(spark, sf_dir, tmp_path):
-    """Per-customer year-pair sums are plain-sum monoids and tiers are
-    row-local CASE rules, so a customer crossing a tier boundary
-    mid-stream (orders split across chunks) lands in the right cell;
-    state + the matrix finisher equals batch q_loyalty_migration."""
-    from locopy_spark.queries.tpch_ext import (
-        loyalty_report,
-        q_loyalty_migration,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_loyalty
-
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["3", "1", "0", "2"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"loychunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "loychunk*"))
-    )
-    q = stream_loyalty(stream, state_view="loyalty_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in loyalty_report(
-            spark.table("global_temp.loyalty_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_loyalty_migration(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_ndr_matches_batch(spark, sf_dir, tmp_path):
-    """The (customer, year) revenue grid is a plain-sum monoid and the
-    year+1 self-join happens only at close, so a cohort's next-year
-    revenue arriving in a later chunk moves its NDR exactly as batch;
-    4 out-of-order ORDER-keyed chunks."""
-    from locopy_spark.queries.timeseries import ndr_report, q_ndr
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_ndr
-
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["1", "2", "3", "0"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"ndrchunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "ndrchunk*"))
-    )
-    q = stream_ndr(stream, state_view="ndr_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in ndr_report(spark.table("global_temp.ndr_t")).collect()
-    ]
-    want = [tuple(r) for r in q_ndr(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_bass_matches_batch(spark, sf_dir, tmp_path):
-    """The per-customer first week is an IDEMPOTENT MIN monoid; the
-    four chunks OVERLAP (every order delivered twice) so idempotent
-    absorption is genuinely exercised — a re-delivered first order
-    must not move the adoption curve; state + the diffusion fit
-    equals batch q_bass_diffusion exactly."""
-    from locopy_spark.queries.timeseries import (
-        bass_grid,
-        bass_report,
-        q_bass_diffusion,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_bass
-
-    o = load_table(spark, sf_dir, "orders")
-    for i, (p1, p2) in enumerate([(0, 1), (1, 2), (2, 3), (3, 0)]):
-        o.filter(
-            f"pmod(o_orderkey, 4) IN ({p1}, {p2})"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"basschunk{i}")
-        )
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "basschunk*"))
-    )
-    q = stream_bass(stream, state_view="bass_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in bass_report(
-            bass_grid(spark.table("global_temp.bass_t")), spark
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_bass_diffusion(spark, sf_dir).collect()]
-    assert got and got == want
-
-
 def test_stream_shapley_matches_batch(spark, sf_dir, tmp_path):
     """Per-user first-touch times are IDEMPOTENT MIN monoids; the
     four chunks OVERLAP (every event delivered twice) AND are keyed
@@ -2884,187 +973,6 @@ def test_stream_shapley_matches_batch(spark, sf_dir, tmp_path):
     # efficiency identity: Σφ·k! = k!·(v(full) − v(∅))
     v_full, v_empty = got_rows[0].v_full, got_rows[0].v_empty
     assert sum(r.phi_x24 for r in got_rows) == 24 * (v_full - v_empty)
-
-
-def test_stream_sprt_matches_batch(spark, sf_dir, tmp_path):
-    """The (day, user) activity grid is an idempotent OR monoid; the
-    four chunks OVERLAP so re-delivered conversions must not move the
-    LLR; state + the sequential monitor equals batch q_sprt exactly
-    (same integer constants, same prefix sum)."""
-    from locopy_spark.queries.trends import q_sprt, sprt_report
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_sprt
-
-    e = load_table(spark, sf_dir, "events")
-    for i, (p1, p2) in enumerate([(0, 1), (1, 2), (2, 3), (3, 0)]):
-        e.filter(
-            f"pmod(event_id, 4) IN ({p1}, {p2})"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"sprtchunk{i}")
-        )
-    stream = (
-        spark.readStream.schema(
-            spark.read.parquet(str(tmp_path / "sprtchunk0")).schema
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "sprtchunk*"))
-    )
-    q = stream_sprt(stream, state_view="sprt_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in sprt_report(spark.table("global_temp.sprt_t")).collect()
-    ]
-    want = [tuple(r) for r in q_sprt(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_funnel_sig_matches_batch(spark, sf_dir, tmp_path):
-    """Per-user conditional mins are idempotent MIN monoids; the four
-    chunks OVERLAP and are EVENT-keyed, so a user's view can arrive
-    after their click and flip the ordered-stage flag exactly as in
-    batch; state + the z panel equals batch q_funnel_sig exactly."""
-    from locopy_spark.queries.events_ext import (
-        funnel_sig_report,
-        q_funnel_sig,
-    )
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_funnel_sig
-
-    e = load_table(spark, sf_dir, "events")
-    for i, (p1, p2) in enumerate([(0, 1), (1, 2), (2, 3), (3, 0)]):
-        e.filter(
-            f"pmod(event_id, 4) IN ({p1}, {p2})"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"fschunk{i}")
-        )
-    stream = (
-        spark.readStream.schema(
-            spark.read.parquet(str(tmp_path / "fschunk0")).schema
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "fschunk*"))
-    )
-    q = stream_funnel_sig(stream, state_view="funnel_sig_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in funnel_sig_report(
-            spark.table("global_temp.funnel_sig_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_funnel_sig(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_phash_matches_batch(spark, sf_dir, tmp_path):
-    """The per-document hash is an idempotent row-local map; the four
-    chunks OVERLAP (every document delivered twice) so the keep-any
-    merge is genuinely exercised; state + the banded pair finisher
-    equals batch m_phash_near_dup exactly."""
-    from locopy_spark.queries.docs_ext import m_phash_near_dup, phash_pairs
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_phash
-
-    d = load_table(spark, sf_dir, "documents")
-    for i, (p1, p2) in enumerate([(0, 1), (1, 2), (2, 3), (3, 0)]):
-        d.filter(
-            f"pmod(doc_id, 4) IN ({p1}, {p2})"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"phchunk{i}")
-        )
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "phchunk*"))
-    )
-    q = stream_phash(stream, state_view="phash_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in phash_pairs(spark.table("global_temp.phash_t")).collect()
-    ]
-    want = [tuple(r) for r in m_phash_near_dup(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_jarque_bera_matches_batch(spark, sf_dir, tmp_path):
-    """The JB finisher shares stream_levene's (priority, value) grid
-    monoid; chunking by ORDER key spreads every cell across
-    out-of-order batches (group power sums move between batches);
-    state + finisher equals batch q_jarque_bera exactly — the shared
-    double closures run over identical exact integer sums."""
-    from locopy_spark.queries.stats import jb_report, q_jarque_bera
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_jarque_bera
-
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["0", "3", "1", "2"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"jbchunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "jbchunk*"))
-    )
-    q = stream_jarque_bera(stream, state_view="jb_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in jb_report(spark.table("global_temp.jb_t")).collect()
-    ]
-    want = [tuple(r) for r in q_jarque_bera(spark, sf_dir).collect()]
-    assert got and got == want
-
-
-def test_stream_cochran_q_matches_batch(spark, sf_dir, tmp_path):
-    """Cochran's Q shares stream_shapley's per-user MIN state; chunking
-    by EVENT key splits a user's touches and purchase across
-    out-of-order batches (a purchase can arrive before/after the
-    touches it retroactively excludes); state + finisher equals batch
-    q_cochran_q exactly."""
-    from locopy_spark.queries.events_ext import cochran_report, q_cochran_q
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_cochran_q
-
-    e = load_table(spark, sf_dir, "events").drop("ts_ns")
-    for i, pred in enumerate(["2", "0", "3", "1"]):
-        e.filter(f"pmod(event_id, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"cqchunk{i}"))
-    stream = (
-        spark.readStream.schema(
-            spark.read.parquet(str(tmp_path / "cqchunk0")).schema
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "cqchunk*"))
-    )
-    q = stream_cochran_q(stream, state_view="cochran_t")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        tuple(r)
-        for r in cochran_report(
-            spark.table("global_temp.cochran_t")
-        ).collect()
-    ]
-    want = [tuple(r) for r in q_cochran_q(spark, sf_dir).collect()]
-    assert got and got == want
 
 
 def test_stream_ann_postings_matches_batch(spark, sf_dir, tmp_path):
@@ -3180,66 +1088,513 @@ def test_stream_ann_lists_matches_batch(spark, sf_dir, tmp_path):
     assert served == batch
 
 
-def test_stream_welch_matches_batch(spark, sf_dir, tmp_path):
-    """Welch's state is one plain-sum row (n, per-group n/Σv/Σv²);
-    out-of-order ORDER-keyed chunks merge by summation and the
-    layered fixed-order F/df2 finisher over the merged row equals
-    batch q_welch_anova exactly."""
-    from locopy_spark.queries.stats import q_welch_anova, welch_report
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_welch
+# -- stream twin == batch twin, one table ------------------------------------
+#
+# Every monoid twin below is checked the same way: its streamed table is
+# written once per module as 4 pmod(key, 4) chunks in a scrambled order
+# (overlapping chunks deliver every row twice, exercising idempotent
+# merges), the file source feeds one chunk per micro-batch
+# (maxFilesPerTrigger=1), and each finisher over the final state must
+# equal its batch twin exactly.  Chunk keys are chosen so one merge key's
+# rows span several batches (e.g. lineitem by SUPPLIER splits an order's
+# lines; orders by ORDER key splits a customer's orders).
+#
+# A row: twin -> (streamed table + static dims, chunk key, overlap,
+# checks).  A check is (finisher, batch twin[, may be empty]); a finisher is
+# "module.fn" in locopy_spark.queries applied to the state, or
+# fn(state, table); a batch twin is a queries() key or fn(table).
 
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["1", "3", "0", "2"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"wechunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "wechunk*"))
+_CHUNK_ORDER = (2, 0, 3, 1)
+
+
+def _cms_probes(t):
+    from locopy_spark.functions.text import tokens_expr
+    from locopy_spark.queries.corpus import CMS_PROBE_K
+
+    vocab = (
+        t("documents")
+        .select(F.explode(F.expr(tokens_expr("text"))).alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("c"))
     )
-    q = stream_welch(stream, state_view="welch_t")
+    return (
+        vocab.orderBy(F.desc("c"), "token")
+        .limit(CMS_PROBE_K)
+        .select("token", F.col("c").alias("true_c"))
+    )
+
+
+def _kmv_batch(t):
+    from locopy_spark.functions.text import shingles_expr, tokens_expr
+    from locopy_spark.operators.sketches import kmv_sketch
+
+    sh = (
+        t("documents")
+        .select("source", F.expr(tokens_expr("text")).alias("toks"))
+        .select(
+            "source", F.explode(F.expr(shingles_expr("toks", 3))).alias("sh")
+        )
+    )
+    return (
+        kmv_sketch(sh, "source", "sh", k=64)
+        .select("source", "kmv")
+        .orderBy("source")
+    )
+
+
+def _bloom_batch(t):
+    from locopy_spark.queries.tpch_ext import _bloom_pos_spark
+
+    return (
+        t("orders")
+        .select("o_custkey")
+        .distinct()
+        .select(F.explode(F.expr(_bloom_pos_spark("o_custkey"))).alias("pos"))
+        .distinct()
+        .orderBy("pos")
+    )
+
+
+def _q(module, fn):
+    from importlib import import_module
+
+    return getattr(import_module(f"locopy_spark.queries.{module}"), fn)
+
+
+def _risk(s):
+    return _q("assoc", "lifetime_risk_report")(s)
+
+
+def _ranked(s, t):
+    return _q("stats", "inequality_ranked")(t("customer"), s)
+
+
+TWINS = {
+    "fertility": (
+        ["documents"], "doc_id", False,
+        [("corpus.fertility_report", "p_tokenizer_fertility")],
+    ),
+    "length_histogram": (
+        ["documents"], "doc_id", False,
+        [("corpus.length_report", "p_length_histogram")],
+    ),
+    # ORDERS split by customer: one custkey's orders land in one chunk,
+    # but its bit positions collide with other chunks' keys
+    "bloom": (
+        ["orders"], "o_custkey", False,
+        [(lambda s, t: s.orderBy("pos"), _bloom_batch)],
+    ),
+    "ols_trend": (
+        ["orders"], "o_orderkey", False,
+        [("trends.ols_report", "q_ols_trend")],
+    ),
+    "benford": (
+        ["orders", "customer"], "o_orderkey", False,
+        [("trends.benford_report", "q_benford")],
+    ),
+    "weekday_uplift": (
+        ["orders"], "o_orderkey", False,
+        [("tpch_ext.weekday_report", "q_weekday_uplift")],
+    ),
+    "vocab": (
+        ["documents"], "doc_id", False,
+        [("corpus.vocab_coverage_report", "p_vocab_coverage")],
+    ),
+    "xcorr": (
+        ["events"], "event_id", False,
+        [("events_ext.xcorr_report", "q_xcorr")],
+    ),
+    "cramers": (
+        ["orders", "customer"], "o_orderkey", False,
+        [
+            ("assoc.cramers_report", "q_cramers_v"),
+            ("assoc.lambda_report", "q_goodman_lambda"),
+        ],
+    ),
+    "hhi": (
+        ["lineitem", "supplier", "nation"], "l_orderkey", False,
+        [("assoc.hhi_report", "q_hhi")],
+    ),
+    "co_engagement": (
+        ["events"], "event_id", True,
+        [(
+            lambda s, t: _q("events_ext", "co_engagement_report")(s)
+            .orderBy("a", "b"),
+            "q_co_engagement",
+        )],
+    ),
+    "ca_trend": (
+        ["events"], "event_id", False,
+        [("trends.ca_report", "q_cochran_armitage")],
+    ),
+    "filter_funnel": (
+        ["documents"], "doc_id", False,
+        [("quality.funnel_report", "p_filter_funnel")],
+    ),
+    "centroids": (
+        ["embeddings"], "vec_id", False,
+        [("docs_ext.centroid_report", "d_embedding_centroids")],
+    ),
+    "mix_drift": (
+        ["orders"], "o_orderkey", False,
+        [("trends.mix_report", "q_mix_drift")],
+    ),
+    # the d x w cells themselves, then probing them through the shared
+    # cms_estimate finisher
+    "cms": (
+        ["documents"], "doc_id", False,
+        [
+            (
+                lambda s, t: s.orderBy("r", "col"),
+                lambda t: _q("corpus", "cms_cells")(t("documents"))
+                .orderBy("r", "col"),
+            ),
+            (
+                lambda s, t: _q("corpus", "cms_estimate")(s, _cms_probes(t)),
+                "t_cms_counts",
+                True,
+            ),
+        ],
+    ),
+    "kmv_sketch": (
+        ["documents"], "doc_id", False,
+        [(lambda s, t: s.orderBy("source"), _kmv_batch)],
+    ),
+    "simpson": (
+        ["documents"], "doc_id", False,
+        [
+            ("corpus.simpson_report", "t_simpson_diversity"),
+            ("corpus.zipf_report", "t_zipf_deviation"),
+            ("corpus.hapax_report", "t_hapax_ratio"),
+            ("corpus.source_overlap_report", "t_source_overlap"),
+        ],
+    ),
+    "norm_hist": (
+        ["embeddings"], "vec_id", False,
+        [(lambda s, t: s.orderBy("band"), "d_norm_histogram")],
+    ),
+    "heatmap": (
+        ["events"], "event_id", False,
+        [("timeseries.heat_report", "q_calendar_heatmap")],
+    ),
+    "dormancy": (
+        ["events"], "event_id", False,
+        [("timeseries.dormancy_report", "q_dormancy_curve")],
+    ),
+    "centroid_purity": (
+        ["embeddings"], "vec_id", False,
+        [(
+            lambda s, t: _q("docs_ext", "purity_report")(t("embeddings"), s),
+            "s_centroid_purity",
+        )],
+    ),
+    "anova": (
+        ["orders"], "o_orderkey", False,
+        [
+            ("stats.anova_report", "q_anova"),
+            ("stats.posthoc_report", "q_posthoc_pairs"),
+        ],
+    ),
+    "backlog": (
+        ["orders"], "o_orderkey", False,
+        [(
+            lambda s, t: _q("tpch_ext", "backlog_report")(
+                s, horizon_from=t("orders")
+            ),
+            "q_backlog_aging",
+        )],
+    ),
+    "survival": (
+        ["orders"], "o_orderkey", False,
+        [
+            (
+                lambda s, t: _q("assoc", "km_from_risk")(_risk(s)),
+                "q_kaplan_meier",
+            ),
+            (
+                lambda s, t: _q("assoc", "na_from_risk")(_risk(s)),
+                "q_nelson_aalen",
+            ),
+        ],
+    ),
+    "inequality": (
+        ["orders"], "o_orderkey", False,
+        [
+            (
+                lambda s, t: _q("stats", "gini_from_ranked")(_ranked(s, t)),
+                "q_gini",
+            ),
+            (
+                lambda s, t: _q("stats", "lorenz_from_ranked")(_ranked(s, t)),
+                "q_lorenz_curve",
+            ),
+        ],
+    ),
+    "peaks": (
+        ["orders"], "o_orderkey", False,
+        [
+            ("timeseries.peaks_report", "q_peak_days"),
+            ("timeseries.changepoint_report", "q_changepoint"),
+            ("timeseries.drawdown_report", "q_drawdown"),
+            ("stats.seasonal_strength_report", "q_seasonal_strength"),
+            ("timeseries.xmr_report", "q_xmr_control", True),
+            ("timeseries.bollinger_report", "q_bollinger"),
+            ("timeseries.rsi_report", "q_rsi"),
+            ("timeseries.mase_report", "q_mase"),
+        ],
+    ),
+    "fulfillment": (
+        ["lineitem", "orders"], "l_suppkey", False,
+        [("tpch_ext.fulfillment_report", "q_fulfillment_lag")],
+    ),
+    "basket_size": (
+        ["lineitem"], "l_suppkey", False,
+        [(
+            lambda s, t: _q("tpch", "basket_report")(s, t("orders")),
+            "q_basket_size_dist",
+        )],
+    ),
+    "value_migration": (
+        ["orders"], "o_orderkey", False,
+        [("tpch_ext.migration_report", "q_value_migration")],
+    ),
+    "street_vs_list": (
+        ["lineitem", "part"], "l_orderkey", False,
+        [("tpch_ext.svl_report", "q_street_vs_list")],
+    ),
+    "price_index": (
+        ["lineitem"], "l_suppkey", False,
+        [("tpch_ext.price_index_report", "q_price_index")],
+    ),
+    "stickiness": (
+        ["events"], "event_id", True,
+        [("timeseries.stickiness_report", "q_stickiness")],
+    ),
+    "abc_xyz": (
+        ["lineitem"], "l_suppkey", False,
+        [
+            ("tpch_ext.abc_xyz_report", "q_abc_xyz"),
+            ("tpch_ext.croston_report", "q_croston"),
+            ("tpch_ext.obsolete_report", "q_demand_obsolete", True),
+            ("tpch_ext.newsvendor_report", "q_newsvendor"),
+            (
+                lambda s, t: _q("stats", "brand_xcorr_report")(s, t("part")),
+                "q_brand_xcorr",
+            ),
+        ],
+    ),
+    "odds_ratio": (
+        ["lineitem"], "l_orderkey", False,
+        [("tpch_ext.odds_report", "q_odds_ratio")],
+    ),
+    "cycle_time": (
+        ["lineitem", "orders"], "l_suppkey", False,
+        [("tpch_ext.little_law_report", "q_little_law")],
+    ),
+    "leadtime": (
+        ["lineitem", "orders"], "l_orderkey", False,
+        [("tpch_ext.leadtime_report", "q_supplier_leadtime")],
+    ),
+    "sla": (
+        ["lineitem", "orders"], "l_orderkey", False,
+        [
+            ("tpch_ext.sla_report", "q_ship_sla"),
+            ("stats.friedman_report", "q_friedman"),
+        ],
+    ),
+    "mcnemar": (
+        ["orders"], "o_orderkey", True,
+        [
+            ("trends.mcnemar_report", "q_mcnemar"),
+            ("trends.capture_report", "q_capture_recapture"),
+        ],
+    ),
+    "growth": (
+        ["events"], "event_id", True,
+        [("timeseries.growth_report", "q_growth_accounting")],
+    ),
+    "did": (
+        ["lineitem", "part"], "l_orderkey", False,
+        [("trends.did_report", "q_did")],
+    ),
+    "dispersion": (
+        ["lineitem", "part"], "l_orderkey", False,
+        [(
+            lambda s, t: _q("tpch_ext", "dispersion_report")(s, t("part")),
+            "q_price_dispersion",
+        )],
+    ),
+    "logrank": (
+        ["orders", "customer"], "o_orderkey", False,
+        [("assoc.logrank_report", "q_logrank")],
+    ),
+    "cliffs": (
+        ["orders", "customer"], "o_orderkey", False,
+        [
+            ("stats.cliffs_report", "q_cliffs_delta"),
+            ("stats.ks_report", "q_ks_test"),
+            ("stats.mw_report", "q_mann_whitney"),
+        ],
+    ),
+    "levene": (
+        ["orders"], "o_orderkey", False,
+        [("stats.levene_report", "q_levene")],
+    ),
+    "cuped": (
+        ["orders"], "o_orderkey", False,
+        [(
+            lambda s, t: _q("trends", "cuped_report")(
+                _q("trends", "cuped_treat")(s)
+            ),
+            "q_cuped",
+        )],
+    ),
+    "loyalty": (
+        ["orders"], "o_orderkey", False,
+        [("tpch_ext.loyalty_report", "q_loyalty_migration")],
+    ),
+    "ndr": (
+        ["orders"], "o_orderkey", False,
+        [("timeseries.ndr_report", "q_ndr")],
+    ),
+    "bass": (
+        ["orders"], "o_orderkey", True,
+        [(
+            lambda s, t: _q("timeseries", "bass_report")(
+                _q("timeseries", "bass_grid")(s), s.sparkSession
+            ),
+            "q_bass_diffusion",
+        )],
+    ),
+    "sprt": (
+        ["events"], "event_id", True,
+        [("trends.sprt_report", "q_sprt")],
+    ),
+    "funnel_sig": (
+        ["events"], "event_id", True,
+        [("events_ext.funnel_sig_report", "q_funnel_sig")],
+    ),
+    "phash": (
+        ["documents"], "doc_id", True,
+        [("docs_ext.phash_pairs", "m_phash_near_dup")],
+    ),
+    "jarque_bera": (
+        ["orders"], "o_orderkey", False,
+        [("stats.jb_report", "q_jarque_bera")],
+    ),
+    "cochran_q": (
+        ["events"], "event_id", False,
+        [("events_ext.cochran_report", "q_cochran_q")],
+    ),
+    "welch": (
+        ["orders"], "o_orderkey", False,
+        [("stats.welch_report", "q_welch_anova")],
+    ),
+    "moods": (
+        ["orders"], "o_orderkey", False,
+        [("stats.moods_report", "q_moods_median")],
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def twin_chunks(spark, sf_dir, tmp_path_factory):
+    """(table, key, overlap) -> a file stream over 4 out-of-order
+    pmod(key, 4) chunks of the table, one chunk per micro-batch; each
+    chunk set is written once per module."""
+    root = tmp_path_factory.mktemp("twin_chunks")
+    made = {}
+
+    def get(table, key, overlap):
+        d = root / f"{table}_{key}_{int(overlap)}"
+        if d not in made:
+            df = load_table(spark, sf_dir, table)
+            for i, p in enumerate(_CHUNK_ORDER):
+                ps = f"{p}, {(p + 1) % 4}" if overlap else f"{p}"
+                chunk = df.filter(f"pmod({key}, 4) IN ({ps})").coalesce(1)
+                chunk.write.parquet(str(d / f"chunk{i}"))
+            made[d] = spark.read.parquet(str(d / "chunk0")).schema
+        return (
+            spark.readStream.schema(made[d])
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(d / "chunk*"))
+        )
+
+    return get
+
+
+def _check_twin(spark, sf_dir, twin_chunks, name):
+    import __spark_entry__ as entrymod
+    from locopy_spark.streaming import stateful
+
+    (table, *dims), key, overlap, checks = TWINS[name]
+
+    def t(tbl):
+        return load_table(spark, sf_dir, tbl)
+
+    view = f"{name}_t"
+    q = getattr(stateful, f"stream_{name}")(
+        twin_chunks(table, key, overlap), *map(t, dims), state_view=view
+    )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    got = [
-        tuple(r)
-        for r in welch_report(spark.table("global_temp.welch_t")).collect()
-    ]
-    want = [tuple(r) for r in q_welch_anova(spark, sf_dir).collect()]
-    assert got and got == want
+    state = spark.table(f"global_temp.{view}")
+    for finisher, batch, *may_be_empty in checks:
+        if isinstance(finisher, str):
+            got_df = _q(*finisher.split("."))(state)
+        else:
+            got_df = finisher(state, t)
+        if isinstance(batch, str):
+            want_df = entrymod.queries()[batch](spark, sf_dir)
+        else:
+            want_df = batch(t)
+        got = [tuple(r) for r in got_df.collect()]
+        want = [tuple(r) for r in want_df.collect()]
+        assert got == want, (name, batch)
+        if not may_be_empty:
+            assert got, (name, batch)
 
 
-def test_stream_moods_matches_batch(spark, sf_dir, tmp_path):
-    """The Mood's grid is the stream_levene monoid under its own view;
-    ORDER-keyed chunks move the grand median between batches, and the
-    grid + moods_report finisher equals batch q_moods_median exactly
-    (same prefix-sum median, same fixed-order chi² text over
-    identical exact counts)."""
-    from locopy_spark.queries.stats import moods_report, q_moods_median
-    from locopy_spark.sources.tables import load_table
-    from locopy_spark.streaming.stateful import stream_moods
+def _twin_test(name):
+    def test(spark, sf_dir, twin_chunks):
+        _check_twin(spark, sf_dir, twin_chunks, name)
 
-    o = load_table(spark, sf_dir, "orders")
-    for i, pred in enumerate(["3", "1", "2", "0"]):
-        o.filter(f"pmod(o_orderkey, 4) = {pred}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"mochunk{i}"))
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "mochunk*"))
-    )
-    q = stream_moods(stream, state_view="moods_t")
+    test.__doc__ = f"stream_{name} state + finishers == batch twins."
+    return test
+
+
+# One test per table row, named as the per-twin test it replaced.
+_SUFFIX = {
+    "survival": "both_batch_estimators",
+    "inequality": "both_batch_reads",
+}
+for _name in TWINS:
+    _test = f"test_stream_{_name}_matches_{_SUFFIX.get(_name, 'batch')}"
+    globals()[_test] = _twin_test(_name)
+
+
+def test_stream_view_owned_by_live_query(spark, sf_dir):
+    """A second start on a view a live query owns raises ValueError
+    naming the view, and the live query's state is left intact —
+    whether the second start is the same twin or another twin."""
+    from locopy_spark.streaming.jobs import read_document_stream
+    from locopy_spark.streaming.stateful import stream_cms, stream_vocab
+
+    q = stream_cms(read_document_stream(spark, sf_dir), state_view="owned_t")
     try:
         q.processAllAvailable()
+        n = spark.table("global_temp.owned_t").count()
+        assert n > 0
+        for twin in (stream_cms, stream_vocab):
+            with pytest.raises(ValueError, match="owned_t"):
+                twin(read_document_stream(spark, sf_dir), state_view="owned_t")
+        assert q.isActive
+        assert spark.table("global_temp.owned_t").count() == n
     finally:
         q.stop()
-    got = [
-        tuple(r)
-        for r in moods_report(spark.table("global_temp.moods_t")).collect()
-    ]
-    want = [tuple(r) for r in q_moods_median(spark, sf_dir).collect()]
-    assert got and got == want
+    # once stopped, the view is free again
+    stream_vocab(
+        read_document_stream(spark, sf_dir), state_view="owned_t"
+    ).stop()

@@ -35,8 +35,9 @@ def triangle_census(
     UNDIRECTED wedges (Σ_v C(deg(v), 2) — every unordered path of
     length 2), and ``clustering_coeff`` is the standard global
     clustering coefficient 3·triangles / wedges (each triangle closes
-    three undirected wedges). Deterministic: every number is an exact
-    integer count; the ratio is one int/int double division.
+    three undirected wedges; NULL when there are none). Deterministic:
+    every number is an exact integer count; the ratio is one int/int
+    double division.
 
     ``broadcast_adj`` (default) ships the out-adjacency table to every
     task — right whenever its |E| total entries fit the broadcast
@@ -45,7 +46,7 @@ def triangle_census(
     |E|-sized, and nothing is driver-collected.
 
     ``degrees``: a pre-computed (v, d) vertex-degree table for the
-    SAME edge list (the bench's materialized-index shape) — skips the
+    SAME edge list (a caller's materialized index) — skips the
     |2E| endpoint shuffle; must be exactly the degrees of ``e`` or
     the orientation (and the count) is silently wrong.
     """
@@ -90,7 +91,7 @@ def triangle_census(
     stats = deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.expr("coalesce(sum(d), 0) div 2").alias("n_edges"),
-        F.expr("coalesce(sum(d * (d - 1) div 2), 0)").alias("n_wedges"),
+        F.expr("sum(d * (d - 1) div 2)").alias("n_wedges"),
     )
     au = adj.select(F.col("u"), F.col("nbrs").alias("nu"))
     aw = adj.select(F.col("u").alias("w"), F.col("nbrs").alias("nw"))
@@ -113,11 +114,10 @@ def triangle_census(
         "n_edges",
         "n_wedges",
         "n_triangles",
-        # 0.0 (not NULL) on a wedge-free graph — the pre-r11 driver-side
-        # finisher's convention, pinned by the degenerate-input tests
+        # NULL on a wedge-free graph, as in the DuckDB twin: degenerate
+        # ratios close as NULL (n_wedges itself is NULL on an empty one)
         F.expr(
-            "CASE WHEN n_wedges = 0 THEN 0.0 ELSE"
-            " 3.0 * CAST(n_triangles AS DOUBLE)"
-            " / CAST(n_wedges AS DOUBLE) END"
+            "try_divide(3.0 * CAST(n_triangles AS DOUBLE),"
+            " CAST(n_wedges AS DOUBLE))"
         ).alias("clustering_coeff"),
     )

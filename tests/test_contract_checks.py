@@ -1,8 +1,6 @@
 """Structural contract checks: SURVEY §2 ↔ queries() ↔ oracle_sql()
-drift, the streaming lockstep invariant (no stream job whose batch twin
-has neither a driver CORRECTNESS row nor a seat in the current window),
-and the bench manifest invariant (every queries() key is benched or
-carries an explicit exclusion reason).
+drift and the streaming §2.4 rows (every stream job's batch twin is a
+``queries()`` key with an ``oracle_sql()`` twin).
 
 Keeping this inside pytest makes the invariants structural: a refactor
 that breaks any of them fails the suite, not just a tool nobody ran.
@@ -23,153 +21,3 @@ def test_check_survey_passes():
         cwd=REPO,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
-
-
-def test_window_capacity_math():
-    """Pin the staleness-ceiling arithmetic (VERDICT r10 task 1).
-
-    The driver gates WINDOW=50 keys per round, so a surface of N keys
-    cycles fully in ceil(N / 50) rounds; the ceiling must be at least
-    that or the checker is permanently unsatisfiable (the round-9 plan
-    to ratchet CEILING 6 -> 5 failed exactly this).  The round-10
-    version of this test then demanded all future-overdue keys fit ONE
-    window — too strict: a key re-checked in round N stops being
-    overdue for round N+1, so the ROLLING schedule is what must be
-    feasible.  Model it directly: starting from the actual driver
-    record, simulate every remaining round of the 20-round engagement
-    where each round's window seats NEW_PER_ROUND fresh keys
-    (first-exposure rule) plus the most-overdue existing keys, and
-    assert no key ever ages past the ceiling outside its window.
-    NEW_PER_ROUND=4 pins the slack VERDICT r10 asked for: the
-    rotation must absorb +4 keys/round without tripping.
-
-    The horizon is bounded on purpose: a 50-slot window with ceiling
-    C supports at most 50*C keys, so ANY per-round growth rate is
-    eventually infeasible — the meaningful claims are (a) the
-    schedule stays green through the final round at +4/round, and
-    (b) the capacity headroom covers that growth explicitly (the
-    second assert), so a future surface size that outgrows the
-    ceiling fails loudly here before the checker ever trips.
-    """
-    sys.path.insert(0, REPO)
-    import math
-
-    import __spark_entry__ as entrymod
-    from tools.check_survey import STALENESS_CEILING, latest_driver_round
-
-    qs = list(entrymod.queries())
-    assert STALENESS_CEILING >= math.ceil(len(qs) / 50), (
-        f"ceiling {STALENESS_CEILING} < full-cycle length "
-        f"{math.ceil(len(qs) / 50)} rounds: permanently unsatisfiable"
-    )
-    latest = {k: r for k, r in latest_driver_round().items() if k in set(qs)}
-    for k in qs:
-        latest.setdefault(k, max(latest.values(), default=0))  # new keys seat now
-    if not latest:
-        return
-    NEW_PER_ROUND = 4
-    WINDOW = 50
-    FINAL_ROUND = 20
-    this_round = max(latest.values()) + 1
-    # capacity headroom: the ceiling supports WINDOW*CEILING keys, and
-    # the surface must fit even after +4/round through the final round
-    assert (
-        len(qs) + NEW_PER_ROUND * max(0, FINAL_ROUND - this_round)
-        <= WINDOW * STALENESS_CEILING
-    ), (
-        f"{len(qs)} keys + {NEW_PER_ROUND}/round growth through round "
-        f"{FINAL_ROUND} exceeds the {WINDOW * STALENESS_CEILING}-key "
-        f"capacity of ceiling {STALENESS_CEILING} — raise the ceiling "
-        "or freeze the surface"
-    )
-    # Round `this_round` uses the COMMITTED window (the real rotation);
-    # subsequent simulated rounds use the oldest-first policy the
-    # rotation discipline follows.
-    committed = list(qs)[:WINDOW]
-    n_new = 0
-    for r in range(this_round, FINAL_ROUND + 1):
-        if r == this_round:
-            window = list(committed)
-        else:
-            n_new += NEW_PER_ROUND
-            synth = [f"__synthetic_{r}_{i}" for i in range(NEW_PER_ROUND)]
-            for k in synth:
-                latest[k] = r  # seated in-window on arrival
-            backlog = sorted(latest, key=lambda k: (latest[k], k))
-            window = synth + [k for k in backlog if k not in synth][
-                : WINDOW - NEW_PER_ROUND
-            ]
-        for k in window:
-            latest[k] = r
-        # the checker for round r+1 runs with current = r + 1
-        overdue = [k for k, lr in latest.items() if (r + 1) - lr > STALENESS_CEILING]
-        assert not overdue, (
-            f"simulated round {r}: {len(overdue)} keys past the ceiling "
-            f"outside any window (first: {sorted(overdue)[:5]}) — "
-            "rotation schedule infeasible"
-        )
-
-
-def test_contract_green_after_driver_writes_next_round(tmp_path):
-    """The recurring failure mode rounds 9 and 10 both hit: the driver
-    drops CORRECTNESS_r{N}.json AFTER the builder closes, `current`
-    increments, and the staleness checker trips on the not-yet-rotated
-    window.  Simulate that exact post-driver state (VERDICT r10 task
-    1's done-criterion): copy the driver record into a tmp dir, add a
-    fake next-round file covering the current first-50 window, and
-    assert ZERO staleness violations with the window UNCHANGED.
-    """
-    sys.path.insert(0, REPO)
-    import glob
-    import json
-    import re
-    import shutil
-
-    import __spark_entry__ as entrymod
-    from tools.check_survey import STALENESS_CEILING, latest_driver_round
-
-    for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        shutil.copy(p, tmp_path / os.path.basename(p))
-    real_latest = latest_driver_round()
-    next_round = max(real_latest.values()) + 1
-    qs = list(entrymod.queries())
-    window = qs[:50]
-    fake = {
-        k: {"rows_match": True, "schema_match": True, "hash_match": True}
-        for k in window
-    }
-    (tmp_path / f"CORRECTNESS_r{next_round}.json").write_text(json.dumps(fake))
-    latest = latest_driver_round(str(tmp_path))
-    current = max(latest.values()) + 1
-    violations = [
-        k
-        for k, r in latest.items()
-        if k in set(qs) and current - r > STALENESS_CEILING and k not in set(window)
-    ]
-    assert not violations, (
-        f"post-driver state (r{next_round} present) trips the staleness "
-        f"ceiling on {violations} — the rotation left them both stale and "
-        "outside the window"
-    )
-    # first-exposure also survives: no never-checked key outside the window
-    unexposed = [k for k in qs if k not in latest and k not in set(window)]
-    assert not unexposed
-
-
-def test_bench_manifest_covers_every_key():
-    sys.path.insert(0, REPO)
-    import __spark_entry__ as entrymod
-    import bench as benchmod
-
-    qs = set(entrymod.queries())
-    benched = set(benchmod.BENCH_QUERIES)
-    excluded = set(benchmod.EXCLUDED)
-    assert qs - benched - excluded == set()
-    assert benched & excluded == set()
-    assert excluded <= qs
-    # every exclusion reason is a known category
-    assert set(benchmod.EXCLUDED.values()) <= {
-        "all-pairs-oracle",
-        "prod-twin-priced",
-        "io-roundtrip",
-    }

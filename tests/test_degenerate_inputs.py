@@ -108,28 +108,7 @@ def degenerate_star(spark, tmp_path_factory):
     return str(tmp)
 
 
-def _fast_tier(key: str) -> bool:
-    """Fast default tier (r12): the driver's current 50-key window
-    plus a deterministic ~1/4 md5 sample (a DIFFERENT residue class
-    than the value gate's, so the two fast tiers jointly cover ~half
-    the surface); the full sweep runs with SPARK_GRAFT_FULL_TESTS=1
-    (builder's verify recipe, once per round)."""
-    import hashlib
-
-    from conftest import fast_window
-
-    if key in fast_window():
-        return True
-    return int(hashlib.md5(key.encode()).hexdigest(), 16) % 4 == 1
-
-
-@pytest.mark.parametrize(
-    "key",
-    [
-        pytest.param(k, marks=[] if _fast_tier(k) else [pytest.mark.slow])
-        for k in _all_keys()
-    ],
-)
+@pytest.mark.parametrize("key", _all_keys())
 def test_degenerate_star_does_not_crash(spark, degenerate_star, key):
     import __spark_entry__ as entrymod
 
@@ -143,13 +122,14 @@ def test_degenerate_star_does_not_crash(spark, degenerate_star, key):
     [
         "q_degree_dist", "q_kcore", "q_lpa_communities", "q_pagerank",
         "q_jaccard_links", "q_clustering_coef", "q_graph_reach",
-        "q_assortativity",
+        "q_assortativity", "q_graph_triangles",
     ],
 )
 def test_empty_edge_graph_matches_oracle(spark, degenerate_star, key):
     """Every star order holds ONE line, so the co-purchase edge table
     is EMPTY: a graph key must then return exactly what its DuckDB twin
-    returns (for q_kcore: one row per round with a NULL threshold)."""
+    returns (for q_kcore: one row per round with a NULL threshold; for
+    q_graph_triangles: NULL wedges and clustering coefficient)."""
     import duckdb
 
     import __spark_entry__ as entrymod

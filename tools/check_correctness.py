@@ -1,8 +1,9 @@
-"""Local mimic of the driver's correctness gate.
+"""The oracle correctness gate.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin
 on DuckDB at the given sf dir, then compares row count, column names,
 and order-insensitive values (columns sorted by name, rows sorted).
+``tests/test_correctness_gate.py`` runs the same compare at sf0.001.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
@@ -37,6 +38,21 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
+def hugeint_columns(rel) -> list[tuple[str, str]]:
+    """(column, type) pairs of a DuckDB relation typed HUGEINT.
+
+    DuckDB SUM(BIGINT) returns HUGEINT, which a hash compare types
+    differently from Spark's bigint even when the values are equal;
+    normalization hides it, so check the bound plan types first and
+    CAST(... AS BIGINT) in the oracle SQL.
+    """
+    return [
+        (c, str(t))
+        for c, t in zip(rel.columns, rel.types)
+        if "HUGEINT" in str(t).upper() or "INT128" in str(t).upper()
+    ]
+
+
 def _values_match(a: pd.DataFrame, b: pd.DataFrame) -> tuple[bool, str]:
     if list(a.columns) != list(b.columns):
         return False, f"columns differ: {list(a.columns)} vs {list(b.columns)}"
@@ -49,21 +65,15 @@ def _values_match(a: pd.DataFrame, b: pd.DataFrame) -> tuple[bool, str]:
                 if math.isnan(x) and math.isnan(y):
                     continue
                 if x != y:
-                    return False, f"col {c} row {i}: {x!r} != {y!r} (diff {abs(x - y)})"
+                    return False, f"{c}[{i}]: {x!r} != {y!r} (diff {abs(x - y)})"
             elif x != y:
-                return False, f"col {c} row {i}: {x!r} != {y!r}"
+                return False, f"{c}[{i}]: {x!r} != {y!r}"
     return True, "ok"
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    args = sys.argv[2:]
-    if args == ["--window"]:
-        # driver mimic: exactly the first 50 queries() entries (the
-        # driver's correctness window)
-        only = set(list(entrymod.queries())[:50])
-    else:
-        only = set(args)
+    only = set(sys.argv[2:])
     spark = get_spark(app_name="check_correctness")
     con = duckdb.connect()
     for t in CORE_TABLES:
@@ -87,12 +97,7 @@ def main() -> int:
             print(f"rows  {name}: {len(sdf)} rows (no oracle)")
             continue
         try:
-            rel = con.sql(oracles[name])
-            bad = [
-                (c, str(t))
-                for c, t in zip(rel.columns, rel.types)
-                if "HUGEINT" in str(t).upper() or "INT128" in str(t).upper()
-            ]
+            bad = hugeint_columns(con.sql(oracles[name]))
             if bad:
                 failures.append(name)
                 print(f"FAIL  {name}: oracle emits HUGEINT column(s) {bad}")

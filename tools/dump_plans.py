@@ -21,12 +21,13 @@ from locopy_spark.session import get_spark
 
 def main() -> int:
     args = sys.argv[1:]
-    out_dir = "plans/r11"
+    if "--out" not in args:
+        print(__doc__, file=sys.stderr)
+        return 2
+    i = args.index("--out")
+    out_dir = args[i + 1]
+    args = args[:i] + args[i + 2:]
     suffix = ""
-    if "--out" in args:
-        i = args.index("--out")
-        out_dir = args[i + 1]
-        args = args[:i] + args[i + 2:]
     if "--suffix" in args:
         i = args.index("--suffix")
         suffix = args[i + 1]

@@ -162,6 +162,13 @@ def load_errors_view(table_name: str) -> str:
     return f"{table_name}__load_errors"
 
 
+def _parse_view(table_name: str) -> str:
+    """Name of the temp view that holds a MAXERROR COPY's cached parse.
+    The session catalog owns the cache through it: the next COPY into
+    ``table_name`` drops the view, and dropping it uncaches."""
+    return f"{table_name}__maxerror_parse"
+
+
 def _apply_maxerror(
     spark: SparkSession, df: DataFrame, table_name: str, max_error: int
 ) -> DataFrame:
@@ -175,7 +182,9 @@ def _apply_maxerror(
     The frame is persisted before the corrupt-column filter — Spark
     requires the raw parse to be materialized before a query can
     reference ONLY the corrupt column (SPARK-38523 semantics), and the
-    count + clean split then reuse one scan.
+    count + clean split then reuse one scan. The cache stays for the
+    loaded view's readers and is registered as ``_parse_view`` so the
+    next COPY into ``table_name`` releases it.
     """
     df = df.cache()
     bad = df.filter(F.col(_CORRUPT_COL).isNotNull())
@@ -190,6 +199,7 @@ def _apply_maxerror(
         F.col(_CORRUPT_COL).alias("raw_line"),
         F.lit("row failed schema parse").alias("err_reason"),
     ).createOrReplaceTempView(load_errors_view(table_name))
+    df.createOrReplaceTempView(_parse_view(table_name))
     return df.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)
 
 
@@ -395,6 +405,9 @@ def copy_files(
             raise ValueError(f"unsupported file_format: {file_format}")
     except Exception as e:
         raise DBError(f"Error loading {path} into {table_name}.") from e
+    # this load replaces table_name: release the parse a previous
+    # MAXERROR COPY into it cached
+    spark.catalog.dropTempView(_parse_view(table_name))
     if fmt == "csv" and max_error is not None:
         # outside the wrapper: a MAXERROR abort is its own diagnosis,
         # not a generic load failure

@@ -36,7 +36,8 @@ def _parse_unload_options(unload_options: list[str] | None) -> dict:
     """Map reference UNLOAD option strings onto writer kwargs.
 
     Recognized (reference redshift.py:443 passes these verbatim to the
-    warehouse): ``PARALLEL OFF`` → single output file, ``HEADER`` →
+    warehouse): ``PARALLEL OFF``/``FALSE`` → single output file,
+    ``PARALLEL``/``ON``/``TRUE`` → natural partitioning, ``HEADER`` →
     header row, ``GZIP`` → gzip codec, ``DELIMITER 'x'`` → field
     delimiter, ``MAXFILESIZE [AS] n [MB|GB]`` → size-bounded output
     files. Unknown options raise rather than silently no-op.
@@ -47,8 +48,15 @@ def _parse_unload_options(unload_options: list[str] | None) -> dict:
     for opt in unload_options or []:
         u = opt.strip()
         up = u.upper()
-        if up == "PARALLEL OFF":
-            out["splits"] = 1
+        words = up.split()
+        if words[:1] == ["PARALLEL"]:
+            # Redshift: PARALLEL [ { ON | TRUE } | { OFF | FALSE } ];
+            # ON is the plan's natural partitioning, the default
+            value = " ".join(words[1:])
+            if value in ("OFF", "FALSE"):
+                out["splits"] = 1
+            elif value not in ("", "ON", "TRUE"):
+                raise DBError(f"Unsupported UNLOAD PARALLEL value: {opt!r}")
         elif up == "HEADER":
             out["header"] = True
         elif up == "GZIP":
@@ -77,6 +85,10 @@ def _parse_unload_options(unload_options: list[str] | None) -> dict:
         else:
             raise DBError(f"Unsupported UNLOAD option: {opt!r}")
     return out
+
+
+# staged names that AUTO_COMPRESS leaves as they are
+_COMPRESSED_SUFFIXES = (".gz", ".bz2", ".zst", ".br", ".parquet", ".orc")
 
 
 # Snowflake FILE_FORMAT format options accepted per file type — the
@@ -201,50 +213,68 @@ class Warehouse(Database):
         """PUT local file(s) to the stage (reference snowflake.py:213:
         ``PUT 'file://local' @stage PARALLEL=n AUTO_COMPRESS=b
         OVERWRITE=b``).  Wildcards in ``local`` upload every match;
-        ``parallel`` bounds the transfer thread pool;
         ``auto_compress`` gzips files not already compressed (the
         staged name gains ``.gz``, Snowflake AUTO_COMPRESS semantics —
-        Spark reads them back transparently); ``overwrite=False``
-        leaves an existing staged file untouched (Snowflake reports
-        such files as SKIPPED).  Returns the staged paths in match
-        order."""
+        Spark reads them back transparently) on one
+        ``utility.compress_pairs`` pool, straight into the stage;
+        ``parallel`` bounds the thread pool that copies the other
+        files; ``overwrite=False`` leaves an existing staged file
+        untouched and uncompressed (Snowflake reports such files as
+        SKIPPED).  Returns the staged paths in match order."""
         import glob as _glob
         import os
-        import tempfile
 
-        from locopy_spark.utility import compress_file
+        matches = sorted(_glob.glob(local)) or [local]
+        return self._put(
+            [(p, os.path.join(stage, os.path.basename(p))) for p in matches],
+            parallel=parallel,
+            auto_compress=auto_compress,
+            overwrite=overwrite,
+        )
+
+    def _put(
+        self,
+        items: list[tuple[str, str]],
+        parallel: int = 4,
+        auto_compress: bool = True,
+        overwrite: bool = True,
+    ) -> list[str]:
+        """PUT ``(local path, stage key)`` pairs; returns the staged
+        paths in item order.  An existing staged file is skipped under
+        ``overwrite=False`` before any work is done on it.  Files to
+        auto-compress are gzipped by one ``compress_pairs`` pool
+        straight into their staged names; the rest are copied on a
+        ``parallel``-wide transfer pool."""
+        import os
+        from concurrent.futures import ThreadPoolExecutor
+
+        from locopy_spark.utility import compress_pairs
 
         st = self._require_stage()
-        matches = sorted(_glob.glob(local)) or [local]
-
-        def put_one(path: str) -> str:
-            src, name = path, os.path.basename(path)
-            tmp = None
-            if auto_compress and not name.endswith(
-                (".gz", ".bz2", ".zst", ".br", ".parquet", ".orc")
-            ):
-                fd, tmp = tempfile.mkstemp(suffix=".gz")
-                os.close(fd)
-                compress_file(path, tmp)
-                src, name = tmp, name + ".gz"
-            key = os.path.join(stage, name) if stage else name
-            try:
-                dest = st._dest(key)
-                if not overwrite and os.path.exists(dest):
-                    return dest  # OVERWRITE=FALSE → SKIPPED
-                return st.upload(src, key)
-            finally:
-                if tmp is not None:
-                    os.unlink(tmp)
-
-        if parallel > 1 and len(matches) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
+        staged: list[str] = []
+        packed: list[tuple[str, str]] = []  # (local path, staged path)
+        plain: list[tuple[str, str]] = []  # (local path, stage key)
+        for path, key in items:
+            gz = auto_compress and not key.endswith(_COMPRESSED_SUFFIXES)
+            if gz:
+                key += ".gz"
+            dest = st._dest(key)
+            staged.append(dest)
+            if not overwrite and os.path.exists(dest):
+                continue  # OVERWRITE=FALSE → SKIPPED
+            if gz:
+                os.makedirs(os.path.dirname(dest) or ".", exist_ok=True)
+                packed.append((path, dest))
+            else:
+                plain.append((path, key))
+        compress_pairs(packed)
+        if plain:
             with ThreadPoolExecutor(
-                max_workers=min(int(parallel), len(matches))
+                max_workers=max(1, min(int(parallel), len(plain)))
             ) as ex:
-                return list(ex.map(put_one, matches))
-        return [put_one(p) for p in matches]
+                for _ in ex.map(lambda item: st.upload(*item), plain):
+                    pass
+        return staged
 
     def download_from_internal(
         self, stage: str, local: str = ".", parallel: int = 10
@@ -432,17 +462,15 @@ class Warehouse(Database):
             opts = [
                 i for i in opts if not i.upper().startswith("IGNOREHEADER")
             ]
-        staged: list[str] = []
-        for p in parts:
-            if isinstance(p, Path):
-                sub = os.path.dirname(os.path.relpath(p, lp))
-                dest = os.path.join(stage_folder, sub) if sub else stage_folder
-                p = str(p)
-            else:
-                dest = stage_folder
-            staged += self.upload_to_internal(
-                p, dest, auto_compress=compress
-            )
+        keys = [
+            os.path.relpath(p, lp) if isinstance(p, Path) else os.path.basename(p)
+            for p in parts
+        ]
+        # one PUT for every part, so the parts share one compression pool
+        staged = self._put(
+            [(str(p), os.path.join(stage_folder, k)) for p, k in zip(parts, keys)],
+            auto_compress=compress,
+        )
         if delete_stage_after:
             # same semantics as Snowflake PURGE: materialize the load,
             # then drop the staged artifacts (reference redshift.py:235

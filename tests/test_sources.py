@@ -445,6 +445,42 @@ def test_copy_maxerror_tolerates_bad_rows(spark, tmp_path):
     assert len(errs) == 1 and "not_an_int" in errs[0].raw_line
 
 
+def test_copy_releases_previous_maxerror_parse(spark, tmp_path):
+    """A MAXERROR COPY caches its parse for the loaded view's readers;
+    the next COPY into the same name releases it."""
+    from pyspark import StorageLevel
+    from pyspark.sql import types as T
+
+    from locopy_spark.sources.copy import _parse_view
+
+    schema = T.StructType(
+        [T.StructField("a", T.LongType()), T.StructField("b", T.StringType())]
+    )
+    f1, f2, f3 = (tmp_path / f"r{i}.csv" for i in range(3))
+    f1.write_text("1|x\nbad|y\n")
+    f2.write_text("2|z\n3|w\n")
+    f3.write_text("4|v\n")
+
+    def load(f, opts):
+        return copy_files(
+            spark, str(f), "t_maxerr_rel", delim="|", schema=schema,
+            copy_options=opts,
+        )
+
+    load(f1, ["MAXERROR 5"])
+    first = spark.table(_parse_view("t_maxerr_rel"))
+    assert first.storageLevel != StorageLevel.NONE
+    df = load(f2, ["MAXERROR 5"])
+    assert first.storageLevel == StorageLevel.NONE
+    second = spark.table(_parse_view("t_maxerr_rel"))
+    assert second.storageLevel != StorageLevel.NONE
+    assert sorted((r.a, r.b) for r in df.collect()) == [(2, "z"), (3, "w")]
+    # a COPY without MAXERROR replaces the name too
+    load(f3, [])
+    assert second.storageLevel == StorageLevel.NONE
+    assert not spark.catalog.tableExists(_parse_view("t_maxerr_rel"))
+
+
 def test_copy_maxerror_exceeded_fails(spark, tmp_path):
     from pyspark.sql import types as T
 

@@ -69,6 +69,69 @@ def test_compress_list(tmp_path):
     assert out == [str(f) + ".gz"] and os.path.exists(out[0]) and not f.exists()
 
 
+def test_compress_list_pooled(tmp_path):
+    """More files than pool workers: outputs in input order, each
+    gunzips to its original bytes, originals removed, no temp left."""
+    import random
+
+    from locopy_spark.utility import _usable_cpus
+
+    rng = random.Random(7)
+    files, payloads = [], []
+    for i in range(2 * _usable_cpus() + 3):
+        f = tmp_path / f"part.{i}"
+        payloads.append(
+            b"".join(
+                b"%d|%d|%s\n" % (i, rng.randrange(10**6), b"ab" * rng.randrange(40))
+                for _ in range(rng.randrange(1, 2000))
+            )
+        )
+        f.write_bytes(payloads[-1])
+        files.append(str(f))
+    out = compress_file_list(files)
+    assert out == [f + ".gz" for f in files]
+    for gz, payload in zip(out, payloads):
+        with gzip.open(gz) as fh:
+            assert fh.read() == payload
+    assert not any(os.path.exists(f) for f in files)
+    assert sorted(os.listdir(tmp_path)) == sorted(os.path.basename(g) for g in out)
+
+
+def test_compress_missing_input_raises(tmp_path):
+    from locopy_spark.errors import CompressionError
+
+    with pytest.raises(CompressionError):
+        compress_file(str(tmp_path / "nope"), str(tmp_path / "nope.gz"))
+    ok = tmp_path / "ok.txt"
+    ok.write_text("x\n")
+    with pytest.raises(CompressionError):
+        compress_file_list([str(ok), str(tmp_path / "missing.txt")])
+    # the failed list removes no original and leaves no partial output
+    assert sorted(os.listdir(tmp_path)) == ["ok.txt", "ok.txt.gz"]
+
+
+def test_load_and_copy_splits_compressed(spark, tmp_path):
+    """load_and_copy(splits=3, compress=True): the three gzipped parts
+    are staged and every row loads."""
+    from locopy_spark.warehouse import Warehouse
+
+    wh = Warehouse(spark=spark, stage_root=str(tmp_path / "stage"))
+    wh.connect()
+    raw = tmp_path / "raw.csv"
+    rows = [(i, f"v{i}") for i in range(100)]
+    raw.write_text("k|v\n" + "".join(f"{k}|{v}\n" for k, v in rows))
+    df = wh.load_and_copy(
+        str(raw), "lac3", "t_lac3", delim="|",
+        copy_options=["IGNOREHEADER 1"], splits=3, compress=True,
+        schema="k INT, v STRING",
+    )
+    assert sorted((r.k, r.v) for r in df.collect()) == rows
+    assert sorted(os.listdir(tmp_path / "stage" / "lac3")) == [
+        f"raw.csv.{i}.gz" for i in range(3)
+    ]
+    assert sorted(os.listdir(tmp_path)) == ["raw.csv", "stage"]
+
+
 def test_ignoreheader_parsing():
     assert get_ignoreheader_number([]) == 0
     assert get_ignoreheader_number(["IGNOREHEADER 2"]) == 2

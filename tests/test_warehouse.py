@@ -82,6 +82,51 @@ def test_unload_option_delimiter_forms():
         _parse_unload_options(["DELIMITERX '|'"])
 
 
+def test_unload_option_parallel_forms():
+    """Redshift PARALLEL [ON|TRUE|OFF|FALSE]: ON is the natural
+    partitioning (no writer kwarg), OFF one file; anything else is a
+    DBError naming the option."""
+    from locopy_spark.errors import DBError
+    from locopy_spark.warehouse import _parse_unload_options
+
+    for on in ("PARALLEL ON", "PARALLEL TRUE", "parallel on", "PARALLEL"):
+        assert _parse_unload_options([on]) == {}
+    for off in ("PARALLEL OFF", "PARALLEL FALSE", "parallel  false"):
+        assert _parse_unload_options([off]) == {"splits": 1}
+    for bad in ("PARALLEL MAYBE", "PARALLEL ON OFF"):
+        with pytest.raises(DBError, match=bad):
+            _parse_unload_options([bad])
+    with pytest.raises(DBError, match="Unsupported UNLOAD option"):
+        _parse_unload_options(["PARALLELISM 4"])
+
+
+def test_put_skips_before_compressing(spark, tmp_path, monkeypatch):
+    """OVERWRITE=FALSE with auto_compress: an already-staged file is
+    neither recompressed nor touched, and compressing leaves no temp
+    file in the stage."""
+    import os
+
+    from locopy_spark import utility
+
+    wh = Snowflake(spark=spark, stage_root=str(tmp_path / "stage"))
+    wh.connect()
+    src = tmp_path / "a.csv"
+    src.write_text("1|x\n")
+    (staged,) = wh.upload_to_internal(str(src), "in")
+    assert os.listdir(tmp_path / "stage" / "in") == ["a.csv.gz"]
+    os.utime(staged, (1_000_000_000, 1_000_000_000))
+    src.write_text("2|y\n")
+
+    def fail(*args):
+        raise AssertionError("a skipped file was compressed")
+
+    monkeypatch.setattr(utility, "compress_file", fail)
+    assert wh.upload_to_internal(str(src), "in", overwrite=False) == [staged]
+    assert os.stat(staged).st_mtime == 1_000_000_000
+    assert os.listdir(tmp_path / "stage" / "in") == ["a.csv.gz"]
+    assert sorted(os.listdir(tmp_path)) == ["a.csv", "stage"]
+
+
 def test_unload_option_maxfilesize_forms():
     from locopy_spark.errors import DBError
     from locopy_spark.warehouse import _parse_unload_options

@@ -7,7 +7,8 @@ split, pushed to S3/stage and COPY'd by the warehouse; here Spark IS
 the warehouse: ``spark.read`` parallelizes over files/blocks natively,
 gzip is decoded inline, IGNOREHEADER maps to the csv header/skip
 options, and "splits" are simply input partitions. The COPY-option
-strings the reference accepts are parsed for compatibility.
+strings the reference accepts are read by the one option grammar in
+``sources.options``.
 """
 
 from __future__ import annotations
@@ -17,143 +18,24 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from locopy_spark.errors import DBError
-from locopy_spark.logger import get_logger
-from locopy_spark.utility import get_ignoreheader_number, get_maxerror_number
-
-logger = get_logger(__name__)
+from locopy_spark.sources.options import (
+    CopyOptions,
+    parse_copy_options,
+    split_option,
+)
+from locopy_spark.sources.options import (  # noqa: F401 (reference name)
+    redshift_dateformat_to_java,
+)
 
 _DEFAULT_DATEFORMAT = "yyyy-MM-dd"
 _DEFAULT_TIMEFORMAT = "yyyy-MM-dd HH:mm:ss"
 _CORRUPT_COL = "_corrupt_record"
-
-# Redshift COPY option grammar (reference: locopy passes copy_options
-# verbatim to the warehouse — redshift.py:282).  First-word → class:
-#   semantic  — changes what this engine reads (parsed elsewhere in
-#               copy_files: IGNOREHEADER, MAXERROR, DATEFORMAT,
-#               TIMEFORMAT, DELIMITER) or names the file format
-#   hint      — warehouse-side load tuning with no Spark analog
-#               (accepted pass-through, logged at debug): column
-#               compression analysis, stats, varchar truncation, ...
-#   codec     — compression markers; Spark decodes these natively by
-#               file extension, so they are accepted as assertions
-# Anything else logs a WARNING (the reference would surface a grammar
-# error from the warehouse; we surface it in the log, not silently).
-_SEMANTIC_COPY_OPTIONS = {
-    "IGNOREHEADER", "MAXERROR", "DATEFORMAT", "TIMEFORMAT", "DELIMITER",
-    "FORMAT", "PARQUET", "JSON", "ORC", "AVRO", "CSV",
-}
-_HINT_COPY_OPTIONS = {
-    "COMPUPDATE", "STATUPDATE", "TRUNCATECOLUMNS", "ACCEPTINVCHARS",
-    "ACCEPTANYDATE", "BLANKSASNULL", "EMPTYASNULL", "TRIMBLANKS",
-    "FILLRECORD", "ROUNDEC", "ESCAPE", "REMOVEQUOTES", "NULL",
-    "ENCODING", "EXPLICIT_IDS", "COMPROWS", "REGION", "ENCRYPTED",
-}
-_CODEC_COPY_OPTIONS = {"GZIP", "BZIP2", "ZSTD", "LZOP"}
-
-_FORMAT_MARKERS = {
-    "PARQUET": "parquet", "JSON": "json", "ORC": "orc",
-    "AVRO": "avro", "CSV": "csv",
-}
 
 
 def combine_copy_options(copy_options: list[str]) -> str:
     """Join COPY options into one SQL fragment
     (reference: locopy/redshift.py:74 ``combine_copy_options``)."""
     return " ".join(copy_options)
-
-
-def classify_copy_options(
-    copy_options: list[str] | None,
-) -> tuple[list[str], list[str], list[str]]:
-    """Split a COPY option list into (semantic, hints, unknown) by the
-    Redshift grammar above; one WARNING per unknown option.  Lets
-    ``copy_files`` accept the reference's full pass-through surface
-    (test_redshift.py's permutations) without silently eating typos."""
-    semantic: list[str] = []
-    hints: list[str] = []
-    unknown: list[str] = []
-    for opt in copy_options or []:
-        first = opt.strip().split(" ", 1)[0].upper() if opt.strip() else ""
-        if first in _SEMANTIC_COPY_OPTIONS:
-            semantic.append(opt)
-        elif first in _HINT_COPY_OPTIONS or first in _CODEC_COPY_OPTIONS:
-            hints.append(opt)
-        else:
-            unknown.append(opt)
-            logger.warning(
-                "COPY option %r is not recognized by this engine; "
-                "accepted as pass-through (the reference would forward "
-                "it to the warehouse verbatim)", opt,
-            )
-    if hints:
-        logger.debug("COPY tuning hints accepted (no Spark analog): %s",
-                     hints)
-    return semantic, hints, unknown
-
-
-def detect_format_option(copy_options: list[str] | None) -> str | None:
-    """Return the file format named inside ``copy_options`` when
-    present (Redshift forms: ``PARQUET`` / ``FORMAT AS PARQUET`` /
-    ``FORMAT PARQUET`` / ``JSON 'auto'`` / ``CSV``), else None.
-    Reference parity: ``Redshift.copy(..., delim=None,
-    copy_options=["PARQUET"])`` loads parquet
-    (reference: locopy/redshift.py:219 special-cases PARQUET)."""
-    for opt in copy_options or []:
-        toks = opt.strip().upper().split()
-        if not toks:
-            continue
-        if toks[0] in _FORMAT_MARKERS:
-            return _FORMAT_MARKERS[toks[0]]
-        if toks[0] == "FORMAT":
-            rest = toks[2:] if len(toks) > 2 and toks[1] == "AS" else toks[1:]
-            if rest and rest[0] in _FORMAT_MARKERS:
-                return _FORMAT_MARKERS[rest[0]]
-    return None
-
-
-# Redshift datetime-format tokens → Java SimpleDateTimeFormatter
-# (longest-first so MON doesn't half-match inside MONTH etc.)
-_RS_TIME_TOKENS = [
-    ("YYYY", "yyyy"), ("YY", "yy"), ("MON", "MMM"), ("MM", "MM"),
-    ("DD", "dd"), ("HH24", "HH"), ("HH12", "hh"), ("HH", "HH"),
-    ("MI", "mm"), ("SS", "ss"), ("AM", "a"), ("PM", "a"),
-]
-
-
-def redshift_dateformat_to_java(fmt: str) -> str:
-    """Translate a Redshift DATEFORMAT/TIMEFORMAT pattern
-    (``'MM/DD/YYYY'`` grammar, case-insensitive tokens) to the Java
-    pattern Spark's csv reader expects.  ``auto`` maps to the engine
-    defaults."""
-    out: list[str] = []
-    i, up = 0, fmt.upper()
-    while i < len(up):
-        for tok, java in _RS_TIME_TOKENS:
-            if up.startswith(tok, i):
-                out.append(java)
-                i += len(tok)
-                break
-        else:
-            out.append(fmt[i])
-            i += 1
-    return "".join(out)
-
-
-def get_dateformat(options: list[str] | None, keyword: str = "DATEFORMAT") -> str | None:
-    """Extract a ``DATEFORMAT [AS] 'fmt'`` / ``TIMEFORMAT [AS] 'fmt'``
-    value from a COPY option list, translated to the Java pattern; None
-    when absent or ``'auto'`` (reference: redshift.py:47 defaults
-    ``DATEFORMAT 'auto'``)."""
-    for opt in options or []:
-        toks = opt.strip().split()
-        if toks and toks[0].upper() == keyword:
-            val = toks[-1].strip()
-            if len(val) >= 2 and val[0] == "'" and val[-1] == "'":
-                val = val[1:-1]
-            if val.lower() in ("auto", "epochsecs", "epochmillisecs"):
-                return None
-            return redshift_dateformat_to_java(val)
-    return None
 
 
 def load_errors_view(table_name: str) -> str:
@@ -275,12 +157,11 @@ def add_default_copy_options(copy_options: list[str] | None = None) -> list[str]
     """Append the reference's default COPY options when absent
     (reference: locopy/redshift.py:47-71)."""
     copy_options = list(copy_options or [])
+    given = {split_option(o)[0] for o in copy_options}
     default_options = ("DATEFORMAT 'auto'", "COMPUPDATE ON", "TRUNCATECOLUMNS")
-    first_words = [o.split()[0].upper() for o in copy_options]
-    for option in default_options:
-        if option.split()[0] not in first_words:
-            copy_options.append(option)
-    return copy_options
+    return copy_options + [
+        o for o in default_options if split_option(o)[0] not in given
+    ]
 
 
 def copy_files(
@@ -300,18 +181,20 @@ def copy_files(
 
     Parameters mirror the reference ``copy`` (delimiter, options list
     incl. ``IGNOREHEADER n``, gzip transparency); ``file_format`` adds
-    the snowflake-style csv/json/parquet choice. With ``temp_view``
-    (default) the loaded data is registered as a temp view — zero-copy;
-    otherwise it is written to a managed table (``saveAsTable``) for
-    cross-session durability.
+    the snowflake-style csv/json/parquet choice. ``copy_options`` is a
+    list of option strings or a parsed ``CopyOptions``; a ``DELIMITER``
+    or format marker among them overrides ``delim``/``file_format``.
+    With ``temp_view`` (default) the loaded data is registered as a
+    temp view — zero-copy; otherwise it is written to a managed table
+    (``saveAsTable``) for cross-session durability.
     """
-    opts = copy_options or []
-    classify_copy_options(opts)  # warn on non-grammar options
-    ignore_header = get_ignoreheader_number(opts)
-    max_error = get_maxerror_number(opts)
-    date_fmt = get_dateformat(opts, "DATEFORMAT") or _DEFAULT_DATEFORMAT
-    time_fmt = get_dateformat(opts, "TIMEFORMAT") or _DEFAULT_TIMEFORMAT
-    fmt = (detect_format_option(opts) or file_format).lower()
+    opts = (
+        copy_options
+        if isinstance(copy_options, CopyOptions)
+        else parse_copy_options(copy_options)
+    )
+    ignore_header, max_error = opts.ignore_header, opts.max_error
+    fmt = (opts.file_format or file_format).lower()
     if max_error is not None and (fmt != "csv" or schema is None):
         # Redshift MAXERROR semantics need per-row parse verdicts: only
         # the csv reader in PERMISSIVE mode against an EXPLICIT schema
@@ -330,13 +213,13 @@ def copy_files(
             reader = reader.options(**reader_options)
         if fmt == "csv":
             reader = reader.options(
-                sep=delim or "|",
+                sep=opts.delim or delim or "|",
                 # n>1 headers are stripped below before parsing, so the
                 # native single-header option applies only when n == 1
                 header=ignore_header == 1,
                 inferSchema=schema is None,
-                dateFormat=date_fmt,
-                timestampFormat=time_fmt,
+                dateFormat=opts.date_format or _DEFAULT_DATEFORMAT,
+                timestampFormat=opts.time_format or _DEFAULT_TIMEFORMAT,
                 # gzip etc. handled natively by extension
             )
             if max_error is not None:

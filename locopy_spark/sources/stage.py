@@ -2,10 +2,11 @@
 
 Parity target: reference locopy/s3.py:44-391 (upload/download/delete,
 URL helpers) and locopy/snowflake.py:213-266 (PUT/GET with globs).
-Spark reads cloud storage directly, so a "stage" here is any Hadoop-FS
-URI (file:/, s3a:/, hdfs:/ — whatever the cluster's FS config knows).
-Local-path operations use the local FS; everything keeps the
-reference's method surface so callers port unchanged.
+A stage here is a local directory, given as a path or a ``file:`` URI;
+``Stage`` moves files with local file calls, so any other scheme
+(``s3a:``, ``hdfs:``) is rejected with ``StageInitializationError``.
+Everything keeps the reference's method surface so callers port
+unchanged.
 """
 
 from __future__ import annotations
@@ -14,10 +15,13 @@ import glob as _glob
 import os
 import shutil
 from typing import Tuple
+from urllib.parse import urlsplit
+from urllib.request import url2pathname
 
 from locopy_spark.errors import (
     StageDeletionError,
     StageDownloadError,
+    StageInitializationError,
     StageUploadError,
 )
 
@@ -73,11 +77,20 @@ def _copy_file(src: str, dst: str, callback=None) -> None:
 class Stage:
     """A directory-rooted stage with PUT/GET/LIST/DELETE.
 
-    ``root`` may be a local path (tests, dev) — the same API shape a
-    cloud-FS-backed implementation exposes on a cluster.
+    ``root`` is a local path or a ``file:`` URI, which resolves to its
+    local path (``file:///data/stage`` → ``/data/stage``) — the same
+    API shape a cloud-FS-backed implementation exposes on a cluster.
     """
 
     def __init__(self, root: str):
+        url = urlsplit(root)
+        if url.scheme == "file" and url.netloc in ("", "localhost"):
+            root = url2pathname(url.path)
+        elif url.scheme:
+            raise StageInitializationError(
+                f"Stage root {root!r} is not local (scheme {url.scheme!r}): "
+                "a stage root is a local path or a file: URI"
+            )
         self.root = root
         os.makedirs(root, exist_ok=True)
 

@@ -1,4 +1,4 @@
-"""Utility functions: config loading, option parsing, local file helpers.
+"""Utility functions: config loading, IGNOREHEADER lookup, local file helpers.
 
 Parity targets: reference locopy/utility.py:49-537. The file-shaping
 utilities (split/compress/concatenate) exist here for API parity on
@@ -20,11 +20,10 @@ from typing import IO, Union
 from locopy_spark.errors import (
     CompressionError,
     CredentialsError,
-    DBError,
     LocopyConcatError,
-    LocopyIgnoreHeaderError,
     LocopySplitError,
 )
+from locopy_spark.sources.options import parse_copy_options
 
 
 def read_config_yaml(config_yaml: Union[str, IO]) -> dict:
@@ -48,39 +47,9 @@ def read_config_yaml(config_yaml: Union[str, IO]) -> dict:
 
 def get_ignoreheader_number(options: list[str]) -> int:
     """Return ``number_rows`` from an ``IGNOREHEADER [AS] n`` option
-    (reference: locopy/utility.py:511)."""
-    ignore = [i for i in options or [] if i.startswith("IGNOREHEADER ")]
-    if len(ignore) == 0:
-        return 0
-    if len(ignore) == 1:
-        return int(ignore[0].strip().split(" ")[-1])
-    raise LocopyIgnoreHeaderError("Found more than one IGNOREHEADER in the options")
-
-
-def get_maxerror_number(options: list[str]) -> int | None:
-    """Return ``n`` from a Redshift-style ``MAXERROR [AS] n`` option,
-    or None when absent. Redshift's COPY continues past up to ``n``
-    unparseable rows and fails beyond that; locopy users pass the
-    option through ``copy_options`` (reference: locopy/redshift.py:282
-    passes options verbatim to the warehouse)."""
-    # match the token exactly (first word == MAXERROR) so unrelated
-    # options sharing the prefix are not swallowed
-    found = [
-        i
-        for i in options or []
-        if (i.strip().split(" ", 1)[0] if i.strip() else "").upper()
-        == "MAXERROR"
-    ]
-    if len(found) == 0:
-        return None
-    if len(found) > 1:
-        raise DBError("Found more than one MAXERROR in the options")
-    try:
-        return int(found[0].strip().split(" ")[-1])
-    except ValueError as e:
-        raise DBError(
-            f"Could not parse MAXERROR count from option {found[0]!r}"
-        ) from e
+    (reference: locopy/utility.py:511); a repeated or malformed one
+    raises ``LocopyIgnoreHeaderError``."""
+    return parse_copy_options(options).ignore_header
 
 
 def write_file(data, delimiter: str, filepath: str, mode: str = "w") -> None:

@@ -24,6 +24,11 @@ from locopy_spark.database import Database
 from locopy_spark.errors import DBError
 from locopy_spark.sources.copy import copy_files
 from locopy_spark.sources.dataframe_io import insert_dataframe_to_table
+from locopy_spark.sources.options import (
+    CopyOptions,
+    parse_copy_options,
+    parse_unload_options,
+)
 from locopy_spark.sources.stage import Stage
 from locopy_spark.logger import get_logger
 from locopy_spark.sources.unload import unload as _unload
@@ -32,114 +37,8 @@ from locopy_spark.sources.unload import unload_and_fetch
 logger = get_logger(__name__)
 
 
-def _parse_unload_options(unload_options: list[str] | None) -> dict:
-    """Map reference UNLOAD option strings onto writer kwargs.
-
-    Recognized (reference redshift.py:443 passes these verbatim to the
-    warehouse): ``PARALLEL OFF``/``FALSE`` → single output file,
-    ``PARALLEL``/``ON``/``TRUE`` → natural partitioning, ``HEADER`` →
-    header row, ``GZIP`` → gzip codec, ``DELIMITER 'x'`` → field
-    delimiter, ``MAXFILESIZE [AS] n [MB|GB]`` → size-bounded output
-    files. Unknown options raise rather than silently no-op.
-    """
-    import re
-
-    out: dict = {}
-    for opt in unload_options or []:
-        u = opt.strip()
-        up = u.upper()
-        words = up.split()
-        if words[:1] == ["PARALLEL"]:
-            # Redshift: PARALLEL [ { ON | TRUE } | { OFF | FALSE } ];
-            # ON is the plan's natural partitioning, the default
-            value = " ".join(words[1:])
-            if value in ("OFF", "FALSE"):
-                out["splits"] = 1
-            elif value not in ("", "ON", "TRUE"):
-                raise DBError(f"Unsupported UNLOAD PARALLEL value: {opt!r}")
-        elif up == "HEADER":
-            out["header"] = True
-        elif up == "GZIP":
-            out["compression"] = "gzip"
-        elif up.startswith("DELIMITER "):
-            # both Redshift forms: DELIMITER '|' and DELIMITER |
-            rest = u[len("DELIMITER ") :].strip()
-            if rest.upper().startswith("AS "):  # DELIMITER AS '|'
-                rest = rest[3:].strip()
-            if len(rest) >= 2 and rest[0] == "'" and rest[-1] == "'":
-                rest = rest[1:-1]
-            if not rest:
-                raise DBError(f"Malformed UNLOAD DELIMITER option: {opt!r}")
-            out["delim"] = rest
-        elif up.startswith("MAXFILESIZE"):
-            rest = u[len("MAXFILESIZE") :].strip()
-            if rest.upper().startswith("AS "):  # MAXFILESIZE AS 6.2 GB
-                rest = rest[3:].strip()
-            m = re.match(r"^([0-9]*\.?[0-9]+)\s*(MB|GB)?$", rest, re.IGNORECASE)
-            if not m:
-                raise DBError(f"Malformed UNLOAD MAXFILESIZE option: {opt!r}")
-            val = float(m.group(1))
-            if (m.group(2) or "MB").upper() == "GB":
-                val *= 1024
-            out["max_file_mb"] = val
-        else:
-            raise DBError(f"Unsupported UNLOAD option: {opt!r}")
-    return out
-
-
 # staged names that AUTO_COMPRESS leaves as they are
 _COMPRESSED_SUFFIXES = (".gz", ".bz2", ".zst", ".br", ".parquet", ".orc")
-
-
-# Snowflake FILE_FORMAT format options accepted per file type — the
-# subset with an exact Spark equivalent (reference snowflake.py:40-60
-# COPY_FORMAT_OPTIONS / UNLOAD_FORMAT_OPTIONS enumerate the full set;
-# unsupported names raise rather than silently no-op).
-_FMT_TYPES = {"csv", "json", "parquet"}
-
-
-def _parse_format_options(
-    file_type: str, format_options: list[str] | None
-) -> dict:
-    """Map Snowflake ``FILE_FORMAT = (TYPE=.. a=b c=d)`` option strings
-    onto copy/unload kwargs (reference snowflake.py:268,339 pass these
-    as ``["a=b", ...]``).
-
-    Returns kwargs: ``file_format``, optionally ``delim`` and
-    ``copy_options`` / ``compression`` fragments.
-    """
-    ft = file_type.lower()
-    if ft not in _FMT_TYPES:
-        raise ValueError(
-            f"Invalid file_type. Must be one of {sorted(_FMT_TYPES)}"
-        )
-    out: dict = {"file_format": ft}
-    copy_opts: list[str] = []
-    for opt in format_options or []:
-        if "=" not in opt:
-            raise DBError(f"Malformed format option: {opt!r}")
-        name, _, value = opt.partition("=")
-        name = name.strip().upper()
-        value = value.strip()
-        if len(value) >= 2 and value[0] == "'" and value[-1] == "'":
-            value = value[1:-1]
-        if name == "FIELD_DELIMITER":
-            out["delim"] = value
-        elif name == "SKIP_HEADER":
-            if int(value) > 0:
-                copy_opts.append(f"IGNOREHEADER {int(value)}")
-        elif name == "COMPRESSION":
-            v = value.lower()
-            if v in ("gzip", "none", "auto"):
-                if v == "gzip":
-                    out["compression"] = "gzip"
-            else:
-                raise DBError(f"Unsupported COMPRESSION: {value!r}")
-        else:
-            raise DBError(f"Unsupported format option: {opt!r}")
-    if copy_opts:
-        out["copy_options"] = copy_opts
-    return out
 
 
 class Warehouse(Database):
@@ -161,7 +60,7 @@ class Warehouse(Database):
     ):
         super().__init__(spark=spark, config_yaml=config_yaml, **kwargs)
         self._stage = Stage(stage_root) if stage_root else None
-        self._file_formats: dict[str, dict] = {}
+        self._file_formats: dict[str, tuple] = {}
 
     # -- named file formats (reference snowflake.py file_format_name:
     #    "CREATE FILE FORMAT" objects referenced by name) ----------------
@@ -175,26 +74,25 @@ class Warehouse(Database):
         FORMAT`` parity): later ``copy``/``unload`` calls reference it
         via ``file_format_name`` and it overrides file_type +
         format_options, exactly as the reference documents."""
-        self._file_formats[name] = _parse_format_options(
-            file_type, format_options
-        )
+        parse_copy_options(None, file_type, format_options)  # fail now
+        self._file_formats[name] = (file_type, list(format_options or []))
 
     def _resolve_format(
         self,
         file_type: str | None,
         format_options: list[str] | None,
         file_format_name: str,
-    ) -> dict | None:
-        if file_format_name:
-            if file_format_name not in self._file_formats:
-                raise DBError(
-                    f"Unknown file_format_name: {file_format_name!r} "
-                    "(register it with create_file_format)."
-                )
-            return dict(self._file_formats[file_format_name])
-        if file_type is not None or format_options:
-            return _parse_format_options(file_type or "csv", format_options)
-        return None
+    ) -> tuple:
+        """The call's ``(file_type, format_options)``; a named format
+        overrides both."""
+        if not file_format_name:
+            return file_type, format_options
+        if file_format_name not in self._file_formats:
+            raise DBError(
+                f"Unknown file_format_name: {file_format_name!r} "
+                "(register it with create_file_format)."
+            )
+        return self._file_formats[file_format_name]
 
     # -- stage transport (reference snowflake.py:213,247; s3.py) ----------
     def _require_stage(self) -> Stage:
@@ -307,10 +205,9 @@ class Warehouse(Database):
         a format marker inside ``copy_options`` (``PARQUET``, ``FORMAT
         AS PARQUET``, ``JSON 'auto'``, ...) selects the file format —
         ``copy("t", path, delim=None, copy_options=["PARQUET"])``
-        loads parquet — and suppresses the delimited-load default
-        options; otherwise the defaults (``DATEFORMAT 'auto'
-        COMPUPDATE ON TRUNCATECOLUMNS``) are appended exactly as
-        ``add_default_copy_options`` does in the reference.
+        loads parquet. The reference's delimited-load defaults
+        (``DATEFORMAT 'auto' COMPUPDATE ON TRUNCATECOLUMNS``,
+        ``add_default_copy_options``) are the ``CopyOptions`` defaults.
 
         Snowflake ``PURGE = TRUE`` (the copy option the reference's
         integration suite passes through — tests/test_integration_sf.py
@@ -319,38 +216,22 @@ class Warehouse(Database):
         corrupt later reads, so PURGE materializes the load first
         (``localCheckpoint`` — blocks stored, file lineage dropped),
         the Spark analog of Snowflake's eager ``COPY INTO table``."""
+        opts = parse_copy_options(
+            copy_options,
+            *self._resolve_format(file_type, format_options, file_format_name),
+        )
+        return self._copy(table_name, path, delim, file_format, opts, schema)
+
+    def _copy(
+        self, table_name, path, delim, file_format, opts: CopyOptions, schema
+    ) -> DataFrame:
+        """COPY under parsed options (see ``copy``)."""
         if not self._is_connected():
             raise DBError("No connection object is present.")
         import os
 
-        from locopy_spark.sources.copy import (
-            add_default_copy_options,
-            detect_format_option,
-        )
-
-        purge = False
-        if copy_options:
-            kept, purge_seen = [], 0
-            for opt in copy_options:
-                toks = opt.replace("=", " ").upper().split()
-                if toks and toks[0] == "PURGE":
-                    purge_seen += 1
-                    if purge_seen > 1:
-                        raise DBError(
-                            "Duplicate PURGE option in copy_options: "
-                            f"{opt!r}"
-                        )
-                    if len(toks) != 2 or toks[1] not in ("TRUE", "FALSE"):
-                        raise DBError(
-                            f"Malformed PURGE option: {opt!r} "
-                            "(expected PURGE = TRUE|FALSE)"
-                        )
-                    purge = toks[1] == "TRUE"
-                else:
-                    kept.append(opt)
-            copy_options = kept
         purge_keys: list[str] = []
-        if purge:
+        if opts.purge:
             # fail fast: PURGE needs the stage transport AND every
             # load path must live under the stage root — discovering
             # either AFTER a successful load would leave the caller
@@ -369,31 +250,17 @@ class Warehouse(Database):
                             "transport cannot purge it"
                         )
                     purge_keys.append(key)
-        fmt = self._resolve_format(file_type, format_options, file_format_name)
-        if fmt is not None:
-            file_format = fmt.get("file_format", file_format)
-            delim = fmt.get("delim", delim)
-            copy_options = list(copy_options or []) + fmt.get(
-                "copy_options", []
-            )
-        marker = detect_format_option(copy_options)
-        if marker is not None:
-            file_format = marker
-        else:
-            copy_options = add_default_copy_options(
-                list(copy_options or [])
-            )
         result = copy_files(
             self.spark,
             path,
             table_name,
             delim=delim,
             file_format=file_format,
-            copy_options=copy_options,
+            copy_options=opts,
             schema=schema,
-            materialize=purge,
+            materialize=opts.purge,
         )
-        if purge:
+        if opts.purge:
             # keys were glob-expanded and root-validated BEFORE the
             # copy (see above) — a failure here would otherwise strand
             # staged data after a successful load
@@ -432,15 +299,14 @@ class Warehouse(Database):
         import os
         from pathlib import Path
 
-        from locopy_spark.utility import get_ignoreheader_number, split_file
+        from locopy_spark.utility import split_file
 
-        opts = list(copy_options or [])
+        opts = parse_copy_options(copy_options)
         # reference redshift.py:309-324: an IGNOREHEADER option is
         # honored by stripping the header rows DURING the split (each
         # part must not lose its own first line to a per-file skip),
-        # after which the option is removed; a directory input uploads
+        # after which the option is cleared; a directory input uploads
         # every file under it unsplit (parquet-folder loads)
-        ignore_header = get_ignoreheader_number(opts)
         lp = Path(local_file)
         if lp.is_dir():
             # Spark listing rules: _SUCCESS/.crc markers are skipped;
@@ -455,13 +321,11 @@ class Warehouse(Database):
             did_split = False
         else:
             parts = split_file(
-                local_file, local_file, splits=splits, ignore_header=ignore_header
+                local_file, local_file, splits=splits, ignore_header=opts.ignore_header
             )  # splits == 1 → [local_file] untouched
             did_split = splits > 1
-        if did_split and ignore_header > 0:
-            opts = [
-                i for i in opts if not i.upper().startswith("IGNOREHEADER")
-            ]
+        if did_split:
+            opts.ignore_header = 0
         keys = [
             os.path.relpath(p, lp) if isinstance(p, Path) else os.path.basename(p)
             for p in parts
@@ -475,15 +339,9 @@ class Warehouse(Database):
             # same semantics as Snowflake PURGE: materialize the load,
             # then drop the staged artifacts (reference redshift.py:235
             # delete_s3_after deletes only after a successful COPY)
-            opts.append("PURGE = TRUE")
+            opts.purge = True
         try:
-            return self.copy(
-                table_name,
-                staged,
-                delim=delim,
-                copy_options=opts,
-                schema=schema,
-            )
+            return self._copy(table_name, staged, delim, "csv", opts, schema)
         finally:
             if did_split:
                 for p in parts:
@@ -503,20 +361,17 @@ class Warehouse(Database):
     ) -> DataFrame:
         """UNLOAD ``query`` results to files under ``path`` (reference
         redshift.py:443: same (query, path, options) argument order;
-        the snowflake.py:339 FILE_FORMAT surface is also accepted)."""
+        the snowflake.py:339 FILE_FORMAT surface is also accepted;
+        ``header``, when given, overrides an UNLOAD ``HEADER``)."""
         if not self._is_connected():
             raise DBError("No connection object is present.")
-        kwargs = _parse_unload_options(unload_options)
-        fmt = self._resolve_format(file_type, format_options, file_format_name)
-        if fmt is not None:
-            kwargs.setdefault("file_format", fmt.get("file_format", "csv"))
-            if "delim" in fmt:
-                kwargs.setdefault("delim", fmt["delim"])
-            if "compression" in fmt:
-                kwargs.setdefault("compression", fmt["compression"])
+        opts = parse_unload_options(
+            unload_options,
+            *self._resolve_format(file_type, format_options, file_format_name),
+        )
         if header is not None:
-            kwargs["header"] = header
-        return _unload(self.spark, query, path, **kwargs)
+            opts.header = header
+        return _unload(self.spark, query, path, **opts.kwargs())
 
     def unload_and_copy(
         self,
@@ -529,9 +384,10 @@ class Warehouse(Database):
         behavior)."""
         if not self._is_connected():
             raise DBError("No connection object is present.")
-        opts = _parse_unload_options(unload_options)
-        header = opts.pop("header", True)
-        return unload_and_fetch(self.spark, query, path, header=header, **opts)
+        opts = parse_unload_options(unload_options)
+        if opts.header is None:
+            opts.header = True
+        return unload_and_fetch(self.spark, query, path, **opts.kwargs())
 
     # -- dataframe insert (reference redshift.py:532; snowflake.py:412) ---
     def insert_dataframe_to_table(

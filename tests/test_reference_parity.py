@@ -11,6 +11,7 @@ Mapping (reference file:test → twin below):
   test_redshift.py:test_copy (options permutations) → test_copy_option_permutations
   test_redshift.py:test_copy (delim=None, ["PARQUET"]) → test_copy_parquet_marker
   test_redshift.py:test_copy ("IGNOREHEADER as 1" form) → test_ignoreheader_as_form
+                                              + test_option_grammar_forms
   test_redshift.py:test_load_and_copy (splits/compress) → test_load_and_copy_splits_compress
   test_snowflake.py:test_upload_to_internal → test_put_parallel_autocompress_overwrite
   test_snowflake.py:test_download_from_internal → test_get_parallel
@@ -43,16 +44,22 @@ import os
 import pytest
 from pyspark.sql import types as T
 
-from locopy_spark.errors import DBError
+from locopy_spark.errors import DBError, LocopyIgnoreHeaderError
 from locopy_spark.sources.copy import (
     add_default_copy_options,
-    classify_copy_options,
     combine_copy_options,
     copy_files,
-    detect_format_option,
-    get_dateformat,
     redshift_dateformat_to_java,
 )
+from locopy_spark.sources.options import (
+    GRAMMAR,
+    CopyOptions,
+    UnloadOptions,
+    parse_copy_options,
+    parse_unload_options,
+    split_option,
+)
+from locopy_spark.utility import get_ignoreheader_number
 from locopy_spark.warehouse import Redshift, Snowflake
 
 
@@ -101,12 +108,15 @@ def test_combine_copy_options():
     ],
 )
 def test_copy_option_classes(opts, n_semantic, n_hint, n_unknown):
-    semantic, hints, unknown = classify_copy_options(opts)
-    assert (len(semantic), len(hints), len(unknown)) == (
-        n_semantic,
-        n_hint,
-        n_unknown,
-    )
+    classes = [
+        GRAMMAR["COPY"].get(split_option(o)[0], ("unknown",))[0] for o in opts
+    ]
+    unknown = parse_copy_options(opts).unknown
+    assert (
+        sum(c in ("semantic", "marker") for c in classes),
+        sum(c in ("hint", "codec") for c in classes),
+        len(unknown),
+    ) == (n_semantic, n_hint, n_unknown)
 
 
 @pytest.mark.parametrize(
@@ -122,7 +132,7 @@ def test_copy_option_classes(opts, n_semantic, n_hint, n_unknown):
     ],
 )
 def test_detect_format_option(opts, expected):
-    assert detect_format_option(opts) == expected
+    assert parse_copy_options(opts).file_format == expected
 
 
 # --- copy-options permutations against real loads ---------------------
@@ -188,8 +198,11 @@ def test_dateformat_option_wired(spark, tmp_path):
     assert redshift_dateformat_to_java("YYYY-MM-DD HH24:MI:SS") == (
         "yyyy-MM-dd HH:mm:ss"
     )
-    assert get_dateformat(["DATEFORMAT 'auto'"]) is None
-    assert get_dateformat(["DATEFORMAT 'MM/DD/YYYY'"]) == "MM/dd/yyyy"
+    assert parse_copy_options(["DATEFORMAT 'auto'"]).date_format is None
+    assert (
+        parse_copy_options(["DATEFORMAT 'MM/DD/YYYY'"]).date_format
+        == "MM/dd/yyyy"
+    )
     f = tmp_path / "dates.csv"
     f.write_text("03/14/2026|a\n12/01/2025|b\n")
     schema = T.StructType(
@@ -201,6 +214,173 @@ def test_dateformat_option_wired(spark, tmp_path):
     )
     got = sorted((str(r.d), r.v) for r in df.collect())
     assert got == [("2025-12-01", "b"), ("2026-03-14", "a")]
+
+
+# --- one option grammar: any case, AS/=, quoted values ---------------
+
+
+def test_ignoreheader_any_case(spark, tmp_path):
+    """IGNOREHEADER is a case-insensitive keyword like every other:
+    a lower- or mixed-case spelling skips the header line."""
+    f = tmp_path / "hdr_case.csv"
+    f.write_text("k|v\n7|x\n")
+    for opt in ("ignoreheader 1", "IgnoreHeader 1"):
+        df = copy_files(
+            spark, str(f), "t_hdr_case", delim="|", copy_options=[opt]
+        )
+        assert [(int(r[0]), r[1]) for r in df.collect()] == [(7, "x")], opt
+
+
+def test_spaced_datetime_formats(spark, tmp_path):
+    """A quoted TIMEFORMAT/DATEFORMAT value with spaces reaches the
+    reader whole, so the values parse instead of loading NULL."""
+    f = tmp_path / "spaced_fmt.csv"
+    f.write_text("2026-03-14 13:45:10|03 14 2026\n")
+    df = copy_files(
+        spark, str(f), "t_spaced_fmt", delim="|",
+        schema="ts TIMESTAMP, d DATE",
+        copy_options=[
+            "TIMEFORMAT 'YYYY-MM-DD HH24:MI:SS'", "DATEFORMAT AS 'MM DD YYYY'",
+        ],
+    )
+    got = df.selectExpr("CAST(ts AS STRING) ts", "CAST(d AS STRING) d")
+    assert [tuple(r) for r in got.collect()] == [
+        ("2026-03-14 13:45:10", "2026-03-14")
+    ]
+
+
+def test_copy_delimiter_option(spark, tmp_path):
+    """A COPY ``DELIMITER`` option sets the field separator."""
+    f = tmp_path / "comma.csv"
+    f.write_text("1,a\n2,b\n")
+    df = copy_files(spark, str(f), "t_delim_opt", copy_options=["DELIMITER ','"])
+    assert len(df.columns) == 2
+    assert sorted((int(r[0]), r[1]) for r in df.collect()) == [(1, "a"), (2, "b")]
+
+
+def test_load_and_copy_ignoreheader_any_case_splits(spark, tmp_path):
+    """load_and_copy strips a lower-case IGNOREHEADER's header during
+    the split, so no part loads it as a row."""
+    wh = _wh(spark, tmp_path)
+    raw = tmp_path / "hdr_split.csv"
+    rows = [(i, f"v{i}") for i in range(30)]
+    raw.write_text("k|v\n" + "".join(f"{k}|{v}\n" for k, v in rows))
+    df = wh.load_and_copy(
+        str(raw), "lac_hdr", "t_lac_hdr", delim="|",
+        copy_options=["ignoreheader 1"], splits=3, schema="k INT, v STRING",
+    )
+    assert sorted((r.k, r.v) for r in df.collect()) == rows
+
+
+def _mixed(text):
+    return "".join(c.upper() if i % 2 else c.lower() for i, c in enumerate(text))
+
+
+def _forms(keyword, value):
+    """Every spelling of one option: keyword (and AS, and an unquoted
+    value) in upper, lower and mixed case; a valued keyword bare, with
+    AS and with = (spaced and not), a flag bare only."""
+    heads = (
+        [f"{keyword} ", f"{keyword} AS ", f"{keyword} = ", f"{keyword}="]
+        if value
+        else [keyword]
+    )
+    return [
+        case(h) + (value if value.startswith("'") else case(value))
+        for h in heads
+        for case in (str.upper, str.lower, _mixed)
+    ]
+
+
+_PARSE = {
+    "COPY": parse_copy_options,
+    "UNLOAD": parse_unload_options,
+    "FILE_FORMAT": lambda opts: parse_copy_options(None, None, opts),
+}
+_GRAMMAR_CASES = [
+    ("COPY", "IGNOREHEADER", "2", CopyOptions(ignore_header=2)),
+    ("COPY", "MAXERROR", "5", CopyOptions(max_error=5)),
+    ("COPY", "DATEFORMAT", "'MM/DD/YYYY'", CopyOptions(date_format="MM/dd/yyyy")),
+    (
+        "COPY", "TIMEFORMAT", "'YYYY-MM-DD HH24:MI:SS'",
+        CopyOptions(time_format="yyyy-MM-dd HH:mm:ss"),
+    ),
+    ("COPY", "DELIMITER", "','", CopyOptions(delim=",")),
+    ("COPY", "FORMAT", "PARQUET", CopyOptions(file_format="parquet")),
+    ("COPY", "PURGE", "TRUE", CopyOptions(purge=True)),
+    *[
+        ("COPY", m, "", CopyOptions(file_format=m.lower()))
+        for m in ("PARQUET", "JSON", "ORC", "AVRO", "CSV")
+    ],
+    ("UNLOAD", "PARALLEL", "OFF", UnloadOptions(splits=1)),
+    ("UNLOAD", "HEADER", "", UnloadOptions(header=True)),
+    ("UNLOAD", "GZIP", "", UnloadOptions(compression="gzip")),
+    ("UNLOAD", "DELIMITER", "'|'", UnloadOptions(delim="|")),
+    ("UNLOAD", "MAXFILESIZE", "100 MB", UnloadOptions(max_file_mb=100.0)),
+    ("FILE_FORMAT", "FIELD_DELIMITER", "';'", CopyOptions(delim=";")),
+    ("FILE_FORMAT", "SKIP_HEADER", "1", CopyOptions(ignore_header=1)),
+    ("FILE_FORMAT", "COMPRESSION", "GZIP", CopyOptions(compression="gzip")),
+]
+
+
+@pytest.mark.parametrize(
+    "statement, keyword, value, expected",
+    _GRAMMAR_CASES,
+    ids=[f"{c[0]}-{c[1]}" for c in _GRAMMAR_CASES],
+)
+def test_option_grammar_forms(statement, keyword, value, expected):
+    """Each spelling of an option parses to the same record."""
+    forms = _forms(keyword, value)
+    assert len(forms) == (12 if value else 3)
+    for opt in forms:
+        assert _PARSE[statement]([opt]) == expected, opt
+
+
+def test_option_grammar_cases_cover_the_table():
+    """The forms test above covers every keyword that sets a field."""
+    table = {"COPY": "COPY", "UNLOAD": "UNLOAD", "FILE_FORMAT": "format"}
+    want = {
+        (st, kw)
+        for st, name in table.items()
+        for kw, (_, field, _) in GRAMMAR[name].items()
+        if field is not None
+    }
+    assert {(c[0], c[1]) for c in _GRAMMAR_CASES} == want
+
+
+def test_option_grammar_errors():
+    """A malformed or repeated option raises the error that names it —
+    LocopyIgnoreHeaderError for IGNOREHEADER, DBError otherwise — never
+    a bare ValueError/IndexError, and a repeat never silently wins."""
+    for opts in (
+        ["IGNOREHEADER x"],
+        ["IGNOREHEADER AS"],
+        ["IGNOREHEADER 1", "ignoreheader 2"],
+    ):
+        with pytest.raises(LocopyIgnoreHeaderError, match="IGNOREHEADER"):
+            parse_copy_options(opts)
+    with pytest.raises(LocopyIgnoreHeaderError, match="IGNOREHEADER"):
+        get_ignoreheader_number(["IGNOREHEADER 1", "ignoreheader 2"])
+    # FILE_FORMAT SKIP_HEADER and IGNOREHEADER fill the same field
+    with pytest.raises(LocopyIgnoreHeaderError, match="Duplicate IGNOREHEADER"):
+        parse_copy_options(["IgnoreHeader 1"], None, ["SKIP_HEADER=1"])
+    with pytest.raises(DBError, match="Malformed SKIP_HEADER"):
+        parse_copy_options(None, "csv", ["SKIP_HEADER=x"])
+    for opts in (
+        ["MAXERROR 1", "MaxError 2"],
+        ["PURGE = TRUE", "purge = false"],
+        ["DELIMITER ','", "delimiter '|'"],
+        ["PARQUET", "format as json"],
+    ):
+        with pytest.raises(DBError, match="Duplicate"):
+            parse_copy_options(opts)
+    for opts in (["HEADER", "header"], ["PARALLEL OFF", "Parallel On"]):
+        with pytest.raises(DBError, match="Duplicate"):
+            parse_unload_options(opts)
+    with pytest.raises(DBError, match="Malformed option"):
+        parse_copy_options(["DELIMITER '"])  # unterminated quote
+    with pytest.raises(DBError, match="Malformed option"):
+        add_default_copy_options([""])
 
 
 # --- load_and_copy splits/compress (reference redshift.py:235) --------

@@ -5,7 +5,7 @@ import os
 import pandas as pd
 import pytest
 
-from locopy_spark.errors import DBError, StageDeletionError
+from locopy_spark.errors import DBError, StageDeletionError, StageError
 from locopy_spark.sources.copy import add_default_copy_options, copy_files
 from locopy_spark.sources.dataframe_io import insert_dataframe_to_table
 from locopy_spark.sources.files import write_single, write_split
@@ -114,6 +114,25 @@ def test_stage_roundtrip(tmp_path):
     assert st.list("folder/*") == []
     with pytest.raises(StageDeletionError):
         st.delete("missing")
+
+
+def test_stage_file_uri_root(tmp_path, monkeypatch):
+    """A ``file:`` stage root resolves to its local path; any other
+    scheme is rejected up front; neither leaves a ``file:`` or ``s3a:``
+    directory in the working directory."""
+    monkeypatch.chdir(tmp_path)
+    src = tmp_path / "f.txt"
+    src.write_text("data")
+    for root in (f"file://{tmp_path}/stage", f"file:{tmp_path}/stage"):
+        st = Stage(root)
+        assert st.root == str(tmp_path / "stage")
+        dest = st.upload(str(src), "k/f.txt")
+        assert dest == str(tmp_path / "stage" / "k" / "f.txt")
+        assert open(dest).read() == "data"
+    for root in ("s3a://bucket/stage", "hdfs:///stage"):
+        with pytest.raises(StageError, match=root.split(":")[0]):
+            Stage(root)
+    assert sorted(os.listdir(tmp_path)) == ["f.txt", "stage"]
 
 
 def test_parse_and_generate_urls():

@@ -174,21 +174,21 @@ def test_progress_percentage(tmp_path, capsys):
 
 def test_get_maxerror_number():
     from locopy_spark.errors import DBError
-    from locopy_spark.utility import get_maxerror_number
+    from locopy_spark.sources.options import parse_copy_options
 
-    assert get_maxerror_number([]) is None
-    assert get_maxerror_number(["IGNOREHEADER 1"]) is None
-    assert get_maxerror_number(["MAXERROR 10"]) == 10
-    assert get_maxerror_number(["maxerror as 7"]) == 7
+    assert parse_copy_options([]).max_error is None
+    assert parse_copy_options(["IGNOREHEADER 1"]).max_error is None
+    assert parse_copy_options(["MAXERROR 10"]).max_error == 10
+    assert parse_copy_options(["maxerror as 7"]).max_error == 7
     import pytest
 
     with pytest.raises(DBError):
-        get_maxerror_number(["MAXERROR 1", "MAXERROR 2"])
+        parse_copy_options(["MAXERROR 1", "MAXERROR 2"])
     # exact-token match: an unrelated option sharing the prefix is
     # not swallowed
-    assert get_maxerror_number(["MAXERRORX 5"]) is None
+    assert parse_copy_options(["MAXERRORX 5"]).max_error is None
     # malformed count raises DBError, not a bare ValueError
     with pytest.raises(DBError):
-        get_maxerror_number(["MAXERROR"])
+        parse_copy_options(["MAXERROR"])
     with pytest.raises(DBError):
-        get_maxerror_number(["MAXERROR AS"])
+        parse_copy_options(["MAXERROR AS"])

@@ -67,19 +67,19 @@ def test_facade_errors(spark):
 
 def test_unload_option_delimiter_forms():
     from locopy_spark.errors import DBError
-    from locopy_spark.warehouse import _parse_unload_options
+    from locopy_spark.sources.options import parse_unload_options
 
     # all three Redshift spellings parse to the same delimiter
-    assert _parse_unload_options(["DELIMITER '|'"]) == {"delim": "|"}
-    assert _parse_unload_options(["DELIMITER |"]) == {"delim": "|"}
-    assert _parse_unload_options(["DELIMITER AS ','"]) == {"delim": ","}
+    assert parse_unload_options(["DELIMITER '|'"]).kwargs() == {"delim": "|"}
+    assert parse_unload_options(["DELIMITER |"]).kwargs() == {"delim": "|"}
+    assert parse_unload_options(["DELIMITER AS ','"]).kwargs() == {"delim": ","}
     # malformed/unknown raise DBError, never IndexError
     import pytest
 
     with pytest.raises(DBError):
-        _parse_unload_options(["DELIMITER "])
+        parse_unload_options(["DELIMITER "])
     with pytest.raises(DBError):
-        _parse_unload_options(["DELIMITERX '|'"])
+        parse_unload_options(["DELIMITERX '|'"])
 
 
 def test_unload_option_parallel_forms():
@@ -87,17 +87,17 @@ def test_unload_option_parallel_forms():
     partitioning (no writer kwarg), OFF one file; anything else is a
     DBError naming the option."""
     from locopy_spark.errors import DBError
-    from locopy_spark.warehouse import _parse_unload_options
+    from locopy_spark.sources.options import parse_unload_options
 
     for on in ("PARALLEL ON", "PARALLEL TRUE", "parallel on", "PARALLEL"):
-        assert _parse_unload_options([on]) == {}
+        assert parse_unload_options([on]).kwargs() == {}
     for off in ("PARALLEL OFF", "PARALLEL FALSE", "parallel  false"):
-        assert _parse_unload_options([off]) == {"splits": 1}
+        assert parse_unload_options([off]).kwargs() == {"splits": 1}
     for bad in ("PARALLEL MAYBE", "PARALLEL ON OFF"):
         with pytest.raises(DBError, match=bad):
-            _parse_unload_options([bad])
+            parse_unload_options([bad])
     with pytest.raises(DBError, match="Unsupported UNLOAD option"):
-        _parse_unload_options(["PARALLELISM 4"])
+        parse_unload_options(["PARALLELISM 4"])
 
 
 def test_put_skips_before_compressing(spark, tmp_path, monkeypatch):
@@ -129,15 +129,19 @@ def test_put_skips_before_compressing(spark, tmp_path, monkeypatch):
 
 def test_unload_option_maxfilesize_forms():
     from locopy_spark.errors import DBError
-    from locopy_spark.warehouse import _parse_unload_options
+    from locopy_spark.sources.options import parse_unload_options
 
-    assert _parse_unload_options(["MAXFILESIZE 100 MB"]) == {"max_file_mb": 100.0}
-    assert _parse_unload_options(["MAXFILESIZE AS 6.2 GB"]) == {
+    assert parse_unload_options(["MAXFILESIZE 100 MB"]).kwargs() == {
+        "max_file_mb": 100.0
+    }
+    assert parse_unload_options(["MAXFILESIZE AS 6.2 GB"]).kwargs() == {
         "max_file_mb": 6.2 * 1024
     }
-    assert _parse_unload_options(["MAXFILESIZE 50"]) == {"max_file_mb": 50.0}
+    assert parse_unload_options(["MAXFILESIZE 50"]).kwargs() == {
+        "max_file_mb": 50.0
+    }
     with pytest.raises(DBError):
-        _parse_unload_options(["MAXFILESIZE big"])
+        parse_unload_options(["MAXFILESIZE big"])
 
 
 def test_unload_maxfilesize_bounds_files(spark, sf_dir, tmp_path):

@@ -72,7 +72,6 @@ def materialize_ann_index(
     n_buckets: int = 8,
     pq_n_sub: int = 16,
     pq_n_codewords: int = 32,
-    signatures: str = "fold",
 ) -> dict[str, DataFrame]:
     """Build the six index tables (ANN_TABLES) from ``emb`` and return
     them as {short_name: DataFrame} reading the managed tables.
@@ -82,18 +81,10 @@ def materialize_ann_index(
     pick, same quantization expressions), so injecting these tables is
     result-identical — pytest-asserted in tests/test_similarity.py.
 
-    ``signatures`` picks the LSH posting path: ``'fold'`` (default) is
-    the pure-SQL sequential fold — bit-deterministic for ANY input
-    partitioning, so the stored postings exactly equal a live
-    ``knn_lsh(signatures='fold')`` build and the incremental
-    ``stream_ann_postings(signatures='fold')`` appends, no matter how
-    the bucketed base table re-batches.  ``'arrow'`` is the faster
-    numpy matmul, whose SIMD summation can flip a NEAR-ZERO
-    projection's sign across different Arrow batch splits — bucket
-    membership only (recall-neutral, candidates are exactly rescored),
-    but enough to make exact-identity assertions flake.  A one-time
-    build amortized over every query takes determinism over the
-    speedup.
+    The postings come from the batch-invariant
+    ``similarity.lsh_signatures`` kernel, so they equal a live
+    ``knn_lsh`` build and the incremental ``stream_ann_postings``
+    appends bit for bit, however the bucketed base table re-batches.
     """
     spark = emb.sparkSession
     names = ann_table_names(prefix)
@@ -112,18 +103,8 @@ def materialize_ann_index(
     # others' stage tails leave idle; job descriptions and catalog
     # table names are disjoint, so the writes cannot collide).
     def _postings():
-        # 'fold' uses the Arrow twin with the SQL fold's exact IEEE
-        # accumulation order (r11) — bit-identical postings to a live
-        # lsh_signatures build (the serving-identity tests assert it),
-        # at numpy speed instead of n_tables·n_planes·dim interpreted
-        # lambda calls per row
-        sig_fn = (
-            similarity.lsh_signatures_arrow
-            if signatures == "arrow"
-            else similarity.lsh_signatures_fold_arrow
-        )
         write_bucketed(
-            sig_fn(
+            similarity.lsh_signatures(
                 base_t, id_col=id_col, vec_col=vec_col,
                 n_planes=n_planes, n_tables=n_tables, dim=dim,
             ),

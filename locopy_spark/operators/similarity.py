@@ -137,6 +137,34 @@ def hyperplane_signs(
     return planes
 
 
+def lsh_sign_bits(v, bank):
+    """Sign bits of the float64 rows ``v`` (n, dim) against a ±1 plane
+    bank (dim, n_proj): ``bits[r, j]`` is the left-to-right SQL fold
+    ``(((0 + v₁b₁) + v₂b₂) + …) > 0``, for any set of rows.
+
+    Each product vᵢ·(±1) is exact, so any summation order of the
+    ``dim`` terms — BLAS blocks and SIMD lanes vary with the batch —
+    errs by at most γ·Σ|vᵢ|, γ = 2·dim·2⁻⁵³. A matmul projection
+    farther than 2γ·Σ|vᵢ| from zero therefore has the fold's sign;
+    rows with a projection inside that band or a non-finite one are
+    re-summed left to right. NaN is positive, as in Spark SQL."""
+    import numpy as np
+
+    with np.errstate(invalid="ignore"):  # inf - inf is NaN, as in SQL
+        acc = v @ bank
+        band = 4.0 * bank.shape[0] * 2.0**-53 * np.abs(v).sum(axis=1)
+        # a non-finite vᵢ, or an overflowing sum, makes the band inf or
+        # NaN, so its row is re-summed too
+        redo = ~(np.abs(acc).min(axis=1) > band)
+        if redo.any():
+            rows = v[redo]
+            fold = np.zeros((len(rows), bank.shape[1]))
+            for i in range(bank.shape[0]):
+                fold += rows[:, i : i + 1] * bank[i]
+            acc[redo] = fold
+    return (acc > 0) | np.isnan(acc)
+
+
 def lsh_signatures(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -144,6 +172,7 @@ def lsh_signatures(
     n_planes: int = 6,
     n_tables: int = 8,
     dim: int = 64,
+    include_vector: bool = False,
 ) -> DataFrame:
     """(id, table, bucket) posting rows: one bucket per hash table.
 
@@ -153,8 +182,91 @@ def lsh_signatures(
     1 - (1 - p^b)^L instead of the single-table p^b that round 1
     shipped (which at 2^8 buckets over small corpora had recall ~0).
     Postings carry only ids — the payload embedding never multiplies
-    by ``n_tables`` or enters the candidate shuffle.
+    by ``n_tables`` or enters the candidate shuffle, unless
+    ``include_vector`` asks for it (in-bucket rescoring).
+
+    One numpy matmul per Arrow batch, made batch-invariant by
+    :func:`lsh_sign_bits`: a vector's buckets are a function of its
+    embedding alone, bit-identical to the SQL fold (the test
+    reference below), so stored, streamed and live postings
+    agree however the rows are batched. A null vector, or one with a
+    null element, lands in bucket 0 of every table, as in the fold.
     """
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    bank = np.array(
+        [row for t in range(n_tables) for row in hyperplane_signs(n_planes, dim, t)],
+        dtype=np.float64,
+    ).T  # (dim, n_tables*n_planes)
+    weights = np.array([1 << p for p in range(n_planes)], dtype=np.int64)
+    fields = [
+        T.StructField(id_col, T.LongType()),
+        T.StructField("table", T.IntegerType()),
+        T.StructField("bucket", T.LongType()),
+    ]
+    if include_vector:
+        fields.append(emb.schema[vec_col])
+    names = [f.name for f in fields]
+
+    def gen(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
+                continue
+            vecs = batch.column(vec_col)
+            v, void = _vector_rows(vecs, dim)
+            bits = lsh_sign_bits(v, bank)
+            bits[void] = False
+            buckets = (bits.reshape(n, n_tables, n_planes) * weights).sum(axis=2)
+            rows = pa.array(np.repeat(np.arange(n), n_tables))
+            cols = [
+                batch.column(id_col).take(rows).cast(pa.int64()),
+                pa.array(np.tile(np.arange(n_tables, dtype=np.int32), n)),
+                pa.array(buckets.reshape(-1)),
+            ]
+            if include_vector:
+                cols.append(vecs.take(rows))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    # no ensure_map_parallelism: an A/B at sf0.1 showed its repartition
+    # costs more than the kernel saves (s_knn_lsh 0.72 → 1.25 s); at
+    # scale the input partitioning already exceeds the cores
+    return emb.select(id_col, vec_col).mapInArrow(gen, T.StructType(fields))
+
+
+def _vector_rows(vecs, dim: int):
+    """(n, dim) float64 matrix of an Arrow list array of vectors, and
+    the rows that are null or hold a null element (zeros in the
+    matrix)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if not pc.all(pc.equal(pc.list_value_length(vecs), dim)).as_py():
+        raise ValueError(f"every vector must have {dim} elements")
+    valid = vecs.is_valid().to_numpy(zero_copy_only=False)
+    flat = vecs.flatten()
+    v = np.zeros((len(vecs), dim))
+    v[valid] = flat.fill_null(0).to_numpy(zero_copy_only=False).reshape(-1, dim)
+    void = ~valid
+    holes = flat.is_null().to_numpy(zero_copy_only=False).reshape(-1, dim)
+    void[valid] = holes.any(axis=1)
+    return v, void
+
+
+def _lsh_signatures_sql(
+    emb: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_planes: int = 6,
+    n_tables: int = 8,
+    dim: int = 64,
+) -> DataFrame:
+    """Pure-SQL twin of :func:`lsh_signatures` (the pre-kernel
+    production form, kept as the cross-implementation reference the
+    tests compare against): each projection is an ``aggregate`` lambda
+    fold, left to right, over the element-wise products."""
     tables = [hyperplane_signs(n_planes, dim, t) for t in range(n_tables)]
     planes3 = F.array(
         *[
@@ -162,9 +274,6 @@ def lsh_signatures(
             for tab in tables
         ]
     )
-    # bucket of table t: sign bits against that table's planes; plain
-    # double fold is fine here (bucketing is engine-local, never
-    # oracle-compared)
     buckets = (
         "transform(sequence(1, {nt}), t -> "
         "aggregate(transform(sequence(1, {np}), p -> "
@@ -181,147 +290,6 @@ def lsh_signatures(
     )
 
 
-def lsh_signatures_fold_arrow(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-    n_tables: int = 8,
-    dim: int = 64,
-) -> DataFrame:
-    """Arrow-batched twin of :func:`lsh_signatures` with BIT-IDENTICAL
-    output: the projection accumulates LEFT-TO-RIGHT one element at a
-    time (``dim`` vectorized adds over the batch), reproducing the SQL
-    fold's IEEE addition order exactly — so unlike the matmul path
-    (:func:`lsh_signatures_arrow`, whose SIMD summation can flip a
-    near-zero projection), stored postings built here equal a live
-    ``lsh_signatures`` build bit-for-bit for ANY batching
-    (pytest-asserted via the serving-identity tests).  The fold
-    evaluates ``n_tables·n_planes·dim`` interpreted lambda calls per
-    row; this pays ``dim`` numpy ops per batch instead."""
-    import numpy as np
-    import pyarrow as pa
-
-    # (dim, n_tables*n_planes), same deterministic bank as the fold
-    bank = np.array(
-        [
-            row
-            for t in range(n_tables)
-            for row in hyperplane_signs(n_planes, dim, t)
-        ],
-        dtype=np.float64,
-    ).T
-    weights = np.array([1 << p for p in range(n_planes)], dtype=np.int64)
-    n_proj = n_tables * n_planes
-
-    def gen(batches):
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            ids = tbl.column(id_col).to_numpy()
-            n = len(ids)
-            if n == 0:
-                continue
-            flat = (
-                tbl.column(vec_col)
-                .combine_chunks()
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-            )
-            v = flat.reshape(n, dim)
-            # left-to-right accumulation: (((0 + x_1) + x_2) + ...) —
-            # the SQL fold's exact IEEE order, vectorized over the batch
-            acc = np.zeros((n, n_proj), dtype=np.float64)
-            for i in range(dim):
-                acc += v[:, i : i + 1] * bank[i][None, :]
-            bits = (acc > 0).reshape(n, n_tables, n_planes)
-            buckets = (bits * weights[None, None, :]).sum(axis=2)
-            yield pa.record_batch(
-                {
-                    id_col: pa.array(
-                        np.repeat(ids, n_tables), type=pa.int64()
-                    ),
-                    "table": pa.array(
-                        np.tile(
-                            np.arange(n_tables, dtype=np.int32), n
-                        ),
-                        type=pa.int32(),
-                    ),
-                    "bucket": pa.array(
-                        buckets.reshape(-1).astype(np.int64),
-                        type=pa.int64(),
-                    ),
-                }
-            )
-
-    return emb.select(id_col, vec_col).mapInArrow(
-        gen, f"{id_col} long, table int, bucket long"
-    )
-
-
-def lsh_signatures_arrow(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-    n_tables: int = 8,
-    dim: int = 64,
-    include_vector: bool = False,
-) -> DataFrame:
-    """Arrow-batched twin of :func:`lsh_signatures`: the same
-    deterministic plane bank, projected with one numpy matmul per
-    Arrow batch instead of the per-element SQL fold.
-
-    Rationale: the fold evaluates ``n_tables·n_planes·dim`` interpreted
-    lambda calls per row — at a 24×5 bank that dominates the whole
-    semantic-dedup join. A (batch × dim) @ (dim × planes) matmul is the
-    classic Arrow-boundary case (math-heavy kernel, no per-row Python).
-    Bit-compatibility caveat: SIMD summation order can flip the sign of
-    a near-zero projection vs the sequential fold, perturbing bucket
-    membership only — recall-neutral in aggregate, and every emitted
-    candidate is exactly rescored JVM-side, so pair VALUES are
-    identical either way.
-    """
-    import numpy as np
-    import pandas as pd
-
-    bank = np.array(
-        [row for t in range(n_tables) for row in hyperplane_signs(n_planes, dim, t)],
-        dtype=np.float64,
-    ).T  # (dim, n_tables*n_planes)
-    weights = np.array(
-        [1 << p for p in range(n_planes)], dtype=np.int64
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bits = (v @ bank) > 0  # (n, T*p)
-            bits = bits.reshape(len(pdf), n_tables, n_planes)
-            buckets = (bits * weights).sum(axis=2)  # (n, T)
-            n = len(pdf)
-            out = {
-                id_col: np.repeat(pdf[id_col].to_numpy(), n_tables),
-                "table": np.tile(np.arange(n_tables, dtype=np.int32), n),
-                "bucket": buckets.reshape(-1),
-            }
-            if include_vector:
-                out[vec_col] = pdf[vec_col].repeat(n_tables).to_numpy()
-            yield pd.DataFrame(out)
-
-    schema = f"{id_col} long, table int, bucket long"
-    if include_vector:
-        schema += f", {vec_col} array<float>"
-    # NOTE: deliberately NO ensure_map_parallelism here — the matmul is
-    # a few ms at any batch size numpy sees, and an A/B at sf0.1 showed
-    # the guard's repartition costs more than it saves on the knn path
-    # (s_knn_lsh_prod 0.72 → 1.25 s); at scale the input partitioning
-    # already exceeds the cores.
-    return emb.select(id_col, vec_col).mapInPandas(gen, schema)
-
-
 def knn_lsh(
     emb: DataFrame,
     query_ids: list[int] | None = None,
@@ -331,7 +299,6 @@ def knn_lsh(
     n_planes: int = 6,
     n_tables: int = 8,
     dim: int = 64,
-    signatures: str = "arrow",
     postings: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH.
@@ -343,13 +310,6 @@ def knn_lsh(
     of the corpus, independent of corpus size; raise ``n_planes`` ↓
     bucket size, raise ``n_tables`` ↑ recall.
 
-    ``signatures='arrow'`` (default) projects the plane bank with the
-    Arrow-batched matmul (:func:`lsh_signatures_arrow`) — A/B-measured
-    ~40 % faster end-to-end than the SQL fold at sf0.1, same plane
-    bank; near-zero projections can land in a different bucket
-    (recall-neutral, candidates are exactly rescored). ``'fold'``
-    keeps the pure-SQL signature path.
-
     ``postings``: a pre-computed (ideally a materialized bucketed
     table — see :mod:`locopy_spark.operators.ann_index`) signature
     table with the SAME (id_col, n_planes, n_tables, dim) — the
@@ -360,10 +320,7 @@ def knn_lsh(
     if postings is not None:
         sigs = postings
     else:
-        sig_fn = (
-            lsh_signatures_arrow if signatures == "arrow" else lsh_signatures
-        )
-        sigs = sig_fn(
+        sigs = lsh_signatures(
             emb, id_col=id_col, vec_col=vec_col,
             n_planes=n_planes, n_tables=n_tables, dim=dim,
         )
@@ -645,17 +602,14 @@ def semantic_dedup_pairs(
     n_planes: int = 5,
     n_tables: int = 24,
     dim: int = 64,
-    persist_scope: str | None = "semantic_dedup",
-    signatures: str = "arrow",
-    rescoring: str = "bucket",
 ) -> DataFrame:
     """All pairs with cosine ≥ threshold, found inside LSH candidate
     buckets — the production twin of :func:`embedding_dedup_pairs`.
 
-    Candidates come from a (table, bucket) shuffle equi-join of the
-    id-only posting lists against themselves (NO broadcast — both sides
-    are the full corpus, the shape that scales to billions of vectors);
-    exact fixed-point rescoring runs only inside buckets. Probabilistic
+    Candidates are the vectors that share a (table, bucket): one
+    shuffle groups each bucket with its vectors (NO broadcast — the
+    shape that scales to billions of vectors), and exact fixed-point
+    rescoring runs only inside buckets. Probabilistic
     recall: a true pair is missed only if its vectors disagree in every
     one of ``n_tables`` sign-bucket tables (~93 % at cosine 0.4 with
     the defaults; raise ``n_planes`` to shrink buckets as the corpus
@@ -667,69 +621,26 @@ def semantic_dedup_pairs(
     when true pairs sit barely above random. The operator's sweet spot
     is the high-cosine near-dup regime (≥0.9: per-plane agreement 0.94,
     the same defaults prune >97 % of random pairs); the knobs are
-    exposed for exactly that tuning. The signature table feeds BOTH
-    sides of the self-join, so it persists under ``persist_scope``
-    (pass None to keep the plan pure). ``signatures='arrow'`` (default)
-    projects the wide plane bank with an Arrow-batched matmul
-    (:func:`lsh_signatures_arrow`); ``'fold'`` keeps the pure-SQL fold.
+    exposed for exactly that tuning.
     """
-    if rescoring == "bucket":
-        # one mapInPandas pass emits (id, table, bucket, vector); one
-        # shuffle groups each bucket; pairwise fixed-point dots run as
-        # chunked numpy inside the bucket. Data moved: corpus×n_tables
-        # vector rows — in the weak-threshold regime (candidates >>
-        # corpus) this is orders of magnitude less than the join
-        # rescorer's 2 vectors per candidate pair. Hot buckets bound
-        # the m² work per task: raise n_planes to split them.
-        tagged = lsh_signatures_arrow(
-            emb, id_col=id_col, vec_col=vec_col,
-            n_planes=n_planes, n_tables=n_tables, dim=dim,
-            include_vector=True,
-        )
-        scored = tagged.groupBy("table", "bucket").applyInPandas(
-            _bucket_pair_scorer(id_col, vec_col, threshold),
-            "vec_a long, vec_b long, dot_fix long, na long, nb long",
-        )
-        return (
-            scored.distinct()
-            .withColumn(
-                "cosine", F.expr(cosine_from_fixed("dot_fix", "na", "nb"))
-            )
-            .filter(F.col("cosine") >= threshold)
-            .select("vec_a", "vec_b", "cosine")
-        )
-    sig_fn = lsh_signatures_arrow if signatures == "arrow" else lsh_signatures
-    sigs = sig_fn(
+    # one Arrow pass emits (id, table, bucket, vector); one shuffle
+    # groups each bucket; pairwise fixed-point dots run as chunked
+    # numpy inside the bucket. Data moved: corpus×n_tables vector rows
+    # — in the weak-threshold regime (candidates >> corpus) orders of
+    # magnitude less than a join rescorer's 2 vectors per candidate
+    # pair. Hot buckets bound the m² work per task: raise n_planes to
+    # split them.
+    tagged = lsh_signatures(
         emb, id_col=id_col, vec_col=vec_col,
         n_planes=n_planes, n_tables=n_tables, dim=dim,
+        include_vector=True,
     )
-    if persist_scope is not None:
-        from locopy_spark.functions.cache import managed_persist
-
-        sigs = managed_persist(sigs, persist_scope)
-    a = sigs.withColumnRenamed(id_col, "vec_a")
-    b = sigs.withColumnRenamed(id_col, "vec_b")
-    cand = (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    normed = with_fixed_norm(emb, vec_col)
-    ea = normed.select(
-        F.col(id_col).alias("vec_a"),
-        F.col(vec_col).alias("ea"),
-        F.col("norm_fix").alias("na"),
-    )
-    eb = normed.select(
-        F.col(id_col).alias("vec_b"),
-        F.col(vec_col).alias("eb"),
-        F.col("norm_fix").alias("nb"),
+    scored = tagged.groupBy("table", "bucket").applyInPandas(
+        _bucket_pair_scorer(id_col, vec_col, threshold),
+        "vec_a long, vec_b long, dot_fix long, na long, nb long",
     )
     return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .withColumn("dot_fix", F.expr(fixed_dot_expr("ea", "eb")))
+        scored.distinct()
         .withColumn("cosine", F.expr(cosine_from_fixed("dot_fix", "na", "nb")))
         .filter(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")

@@ -66,7 +66,9 @@ def _apply_maxerror(
     reference ONLY the corrupt column (SPARK-38523 semantics), and the
     count + clean split then reuse one scan. The cache stays for the
     loaded view's readers and is registered as ``_parse_view`` so the
-    next COPY into ``table_name`` releases it.
+    next COPY into ``table_name`` releases it. The (at most
+    ``max_error``) bad lines are collected into a local relation, so
+    the errors view outlives that cache; a clean load collects nothing.
     """
     df = df.cache()
     bad = df.filter(F.col(_CORRUPT_COL).isNotNull())
@@ -77,9 +79,10 @@ def _apply_maxerror(
             f"COPY into {table_name} aborted: {n_bad} unparseable rows "
             f"exceed MAXERROR {max_error}"
         )
-    bad.select(
-        F.col(_CORRUPT_COL).alias("raw_line"),
-        F.lit("row failed schema parse").alias("err_reason"),
+    lines = bad.select(_CORRUPT_COL).collect() if n_bad else []
+    spark.createDataFrame(
+        [(r[0], "row failed schema parse") for r in lines],
+        "raw_line string, err_reason string",
     ).createOrReplaceTempView(load_errors_view(table_name))
     df.createOrReplaceTempView(_parse_view(table_name))
     return df.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)
@@ -222,6 +225,8 @@ def copy_files(
                 timestampFormat=opts.time_format or _DEFAULT_TIMEFORMAT,
                 # gzip etc. handled natively by extension
             )
+            if opts.null_as is not None:
+                reader = reader.option("nullValue", opts.null_as)
             if max_error is not None:
                 reader = (
                     reader.schema(
@@ -289,8 +294,9 @@ def copy_files(
     except Exception as e:
         raise DBError(f"Error loading {path} into {table_name}.") from e
     # this load replaces table_name: release the parse a previous
-    # MAXERROR COPY into it cached
+    # MAXERROR COPY into it cached, and its error rows
     spark.catalog.dropTempView(_parse_view(table_name))
+    spark.catalog.dropTempView(load_errors_view(table_name))
     if fmt == "csv" and max_error is not None:
         # outside the wrapper: a MAXERROR abort is its own diagnosis,
         # not a generic load failure

@@ -133,6 +133,7 @@ GRAMMAR: dict[str, dict[str, tuple]] = {
         "DELIMITER": ("semantic", "delim", _text),
         "FORMAT": ("semantic", "file_format", _choice(_FORMATS)),
         "PURGE": ("semantic", "purge", _choice({"TRUE": True, "FALSE": False})),
+        "NULL": ("semantic", "null_as", str),
         **{
             k: ("marker", "file_format", _choice({"": v, "AUTO": v}))
             for k, v in _FORMATS.items()
@@ -142,8 +143,8 @@ GRAMMAR: dict[str, dict[str, tuple]] = {
             (
                 "COMPUPDATE", "STATUPDATE", "TRUNCATECOLUMNS", "ACCEPTINVCHARS",
                 "ACCEPTANYDATE", "BLANKSASNULL", "EMPTYASNULL", "TRIMBLANKS",
-                "FILLRECORD", "ROUNDEC", "ESCAPE", "REMOVEQUOTES", "NULL",
-                "ENCODING", "EXPLICIT_IDS", "COMPROWS", "REGION", "ENCRYPTED",
+                "FILLRECORD", "ROUNDEC", "ESCAPE", "REMOVEQUOTES", "ENCODING",
+                "EXPLICIT_IDS", "COMPROWS", "REGION", "ENCRYPTED",
             ),
             ("hint", None, None),
         ),
@@ -180,6 +181,7 @@ class CopyOptions:
     file_format: str | None = None  # overrides the call's file_format
     compression: str | None = None  # read back from the file extension
     purge: bool = False
+    null_as: str | None = None  # the csv text that loads as NULL
     unknown: list[str] = field(default_factory=list)
 
 

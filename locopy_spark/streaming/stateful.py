@@ -2182,8 +2182,7 @@ def stream_cochran_q(events: DataFrame, state_view: str = "cochran_state"):
 
 
 def stream_ann_postings(
-    emb: DataFrame, state_view: str = "ann_postings_state",
-    signatures: str = "arrow",
+    emb: DataFrame, state_view: str = "ann_postings_state"
 ):
     """Continuously-maintained LSH postings table — the INCREMENTAL arm
     of the materialized ANN index (operators/ann_index.py): as new
@@ -2191,25 +2190,16 @@ def stream_ann_postings(
     postings state, so the serving path (``knn_lsh(postings=...)``)
     reads a live index instead of waiting for the next batch rebuild.
     Merge is idempotent per (vec_id, table): a vector's buckets are a
-    deterministic function of its embedding, so re-delivered rows
-    dedupe to the identical posting.
-
-    ``signatures``: 'arrow' (default — the production path; numpy's
-    batch-shaped BLAS kernels can flip a NEAR-ZERO projection's sign
-    across different batch splits, which perturbs bucket membership
-    only and never scored pair values) or 'fold' (the pure-SQL
-    per-row fold — bit-deterministic for ANY chunking; the lockstep
-    test uses it so stream == batch is exact).  Batch twin:
-    ``operators.similarity.lsh_signatures*`` over the full table —
-    the postings arm of the s_knn_lsh serving path.
+    deterministic function of its embedding (the batch-invariant
+    ``lsh_signatures`` kernel), so re-delivered rows dedupe to the
+    identical posting and the state equals the batch table for any
+    chunking.  Batch twin: ``operators.similarity.lsh_signatures``
+    over the full table — the postings arm of the s_knn_lsh serving
+    path.
     """
-    from locopy_spark.operators.similarity import (
-        lsh_signatures,
-        lsh_signatures_arrow,
-    )
+    from locopy_spark.operators.similarity import lsh_signatures
 
-    sig_fn = lsh_signatures_arrow if signatures == "arrow" else lsh_signatures
-    return _stream_monoid(emb, sig_fn, *ANN_POSTINGS_SPEC, state_view)
+    return _stream_monoid(emb, lsh_signatures, *ANN_POSTINGS_SPEC, state_view)
 
 
 def stream_ann_lists(

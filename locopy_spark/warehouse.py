@@ -301,6 +301,9 @@ class Warehouse(Database):
 
         from locopy_spark.utility import split_file
 
+        if not self._is_connected():
+            # before the split, gzip and PUT leave files behind
+            raise DBError("No connection object is present.")
         opts = parse_copy_options(copy_options)
         # reference redshift.py:309-324: an IGNOREHEADER option is
         # honored by stripping the header rows DURING the split (each

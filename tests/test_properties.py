@@ -844,7 +844,7 @@ _ANN_PROP_TABLES = 4
 
 def _ann_prop_vec(rnd_ints):
     # quarter-integers: exactly representable floats, so fixed-point
-    # norms and fold signatures are bit-stable everywhere
+    # norms and LSH signatures are bit-stable everywhere
     return [v / 4.0 for v in rnd_ints]
 
 

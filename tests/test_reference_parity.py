@@ -258,6 +258,17 @@ def test_copy_delimiter_option(spark, tmp_path):
     assert sorted((int(r[0]), r[1]) for r in df.collect()) == [(1, "a"), (2, "b")]
 
 
+def test_copy_null_as_option(spark, tmp_path):
+    """A COPY ``NULL AS`` option names the text that loads as NULL."""
+    f = tmp_path / "null_as.csv"
+    f.write_text("1|NA\n2|x\n")
+    df = copy_files(
+        spark, str(f), "t_null_as", schema="a INT, b STRING",
+        copy_options=["NULL AS 'NA'"],
+    )
+    assert sorted((r.a, r.b) for r in df.collect()) == [(1, None), (2, "x")]
+
+
 def test_load_and_copy_ignoreheader_any_case_splits(spark, tmp_path):
     """load_and_copy strips a lower-case IGNOREHEADER's header during
     the split, so no part loads it as a row."""
@@ -308,6 +319,7 @@ _GRAMMAR_CASES = [
     ("COPY", "DELIMITER", "','", CopyOptions(delim=",")),
     ("COPY", "FORMAT", "PARQUET", CopyOptions(file_format="parquet")),
     ("COPY", "PURGE", "TRUE", CopyOptions(purge=True)),
+    ("COPY", "NULL", "'NA'", CopyOptions(null_as="NA")),
     *[
         ("COPY", m, "", CopyOptions(file_format=m.lower()))
         for m in ("PARQUET", "JSON", "ORC", "AVRO", "CSV")

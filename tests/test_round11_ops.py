@@ -408,20 +408,75 @@ def test_phash_bands_arrow_equals_sql(spark, sf_dir):
 
 
 def test_lsh_fold_arrow_equals_sql_fold(spark, sf_dir):
-    """The Arrow fold-order LSH signatures (r11, used by the
-    materialized index build) must equal the sequential SQL fold
-    bit-for-bit — the left-to-right accumulation reproduces its IEEE
-    addition order, so near-zero projections cannot flip."""
+    """The LSH signature kernel (one matmul per Arrow batch, near-zero
+    rows re-summed left to right) must equal the sequential SQL fold
+    bit-for-bit for any batch split: on the corpus, on quarter-integer
+    vectors whose projections are often exactly zero, and on crafted
+    rows whose sign depends on the summation order."""
+    import random
+
+    import numpy as np
+
     from locopy_spark.operators.similarity import (
+        _lsh_signatures_sql,
+        hyperplane_signs,
+        lsh_sign_bits,
         lsh_signatures,
-        lsh_signatures_fold_arrow,
     )
     from locopy_spark.sources.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = lsh_signatures(emb).orderBy("vec_id", "table").collect()
-    b = lsh_signatures_fold_arrow(emb).orderBy("vec_id", "table").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b] and a
+    def same(df, **geometry):
+        a = lsh_signatures(df, **geometry).orderBy("vec_id", "table").collect()
+        b = _lsh_signatures_sql(df, **geometry).orderBy("vec_id", "table")
+        assert [tuple(r) for r in a] == [tuple(r) for r in b.collect()] and a
+
+    rnd = random.Random(11)
+    quarters = [
+        (i, [rnd.randint(-3, 3) / 4.0 for _ in range(64)]) for i in range(300)
+    ]
+    bank = np.array(
+        [r for t in range(8) for r in hyperplane_signs(6, 64, t)], dtype=float
+    ).T
+    assert (np.array([v for _, v in quarters]) @ bank == 0).any()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        same(load_table(spark, sf_dir, "embeddings"))
+        same(spark.createDataFrame(quarters, "vec_id long, embedding array<float>"))
+    finally:
+        spark.conf.set(conf, old)
+
+    # crafted rows: rows 0 and 1 hold the same terms, whose exact sum
+    # is 2^-52 > 0; the fold of row 0 rounds (1 + 2^-53) + 2^-53 back
+    # to 1 and ends at 0, the fold of row 1 ends at 2^-52, so no one
+    # summation order gets both; rows 3-5 are non-finite; rows 6-7
+    # (null vector, null element) land in bucket 0
+    t = 2.0**-53
+    nan, inf = float("nan"), float("inf")
+    crafted = [
+        [1.0, t, t, -1.0],
+        [-1.0, t, t, 1.0],
+        [0.25, -0.25, 0.5, -0.5],
+        [nan, 1.0, 1.0, 1.0],
+        [inf, -inf, 1.0, 1.0],
+        [inf, 1.0, 0.0, 0.0],
+    ]
+    assert (sum(crafted[0]), sum(crafted[1])) == (0.0, 2 * t)  # left to right
+    for planes in ([[1]] * 4, [list(p) for p in zip(*hyperplane_signs(3, 4, 5))]):
+        want = []
+        for row in crafted:
+            acc = [0.0] * len(planes[0])
+            for x, signs in zip(row, planes):
+                acc = [a + x * s for a, s in zip(acc, signs)]
+            want.append([a > 0 or a != a for a in acc])
+        got = lsh_sign_bits(np.array(crafted), np.array(planes, dtype=float))
+        assert got.tolist() == want
+    rows = list(enumerate(crafted)) + [(6, None), (7, [1.0, None, 1.0, 1.0])]
+    same(
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>"),
+        n_planes=3, n_tables=2, dim=4,
+    )
 
 
 def test_fixed_dot_pandas_equals_expr(spark, sf_dir):

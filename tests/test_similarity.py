@@ -252,21 +252,13 @@ def test_ann_index_served_results_identical(spark, sf_dir):
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
-    # LSH identity is asserted against the fold signature path on BOTH
-    # sides: materialize_ann_index defaults to 'fold' precisely so the
-    # stored postings are bit-deterministic w.r.t. partitioning (the
-    # arrow matmul can flip a near-zero projection's sign across batch
-    # splits — recall-neutral, but enough to flake an exact-equality
-    # assertion; VERDICT r10 advice item).
+    # exact LSH identity holds because the signature kernel is
+    # batch-invariant: the bucketed base table re-batches the rows
     assert rows(
         ann_index.knn_lsh_indexed(
             spark, KNN_QUERY_IDS, KNN_K, prefix="test_ann_index"
         )
-    ) == rows(
-        similarity.knn_lsh(
-            emb, query_ids=KNN_QUERY_IDS, k=KNN_K, signatures="fold"
-        )
-    )
+    ) == rows(similarity.knn_lsh(emb, query_ids=KNN_QUERY_IDS, k=KNN_K))
     assert rows(
         ann_index.knn_ivf_indexed(
             spark, [0, 1, 2, 3, 4], 5, n_probe=4, prefix="test_ann_index"
@@ -317,7 +309,7 @@ def test_ann_index_refresh_serves_old_until_swap(spark, sf_dir):
     qids = [r.vec_id for r in old_corpus.select("vec_id").limit(3).collect()]
     v1 = rows(ann_index.knn_lsh_indexed(spark, qids, 5, prefix=prefix))
     assert v1 == rows(
-        similarity.knn_lsh(old_corpus, query_ids=qids, k=5, signatures="fold")
+        similarity.knn_lsh(old_corpus, query_ids=qids, k=5)
     )
 
     # phase 1: build staging over the GROWN corpus — serving unchanged
@@ -328,7 +320,7 @@ def test_ann_index_refresh_serves_old_until_swap(spark, sf_dir):
     ann_index.swap_staging_index(spark, prefix=prefix)
     v2 = rows(ann_index.knn_lsh_indexed(spark, qids, 5, prefix=prefix))
     assert v2 == rows(
-        similarity.knn_lsh(emb, query_ids=qids, k=5, signatures="fold")
+        similarity.knn_lsh(emb, query_ids=qids, k=5)
     )
     assert v2 != v1  # the grown corpus actually changed the answers
     # IVF serving reads the refreshed (re-centroided) lists too

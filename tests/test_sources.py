@@ -443,7 +443,7 @@ def test_copy_maxerror_tolerates_bad_rows(spark, tmp_path):
     <table>__load_errors view (STL_LOAD_ERRORS analog)."""
     from pyspark.sql import types as T
 
-    from locopy_spark.sources.copy import load_errors_view
+    from locopy_spark.sources.copy import _parse_view, load_errors_view
 
     f = tmp_path / "m.csv"
     f.write_text("1|x\n2|y\nnot_an_int|z\n3|w\n")
@@ -462,6 +462,43 @@ def test_copy_maxerror_tolerates_bad_rows(spark, tmp_path):
     assert rows == [(1, "x"), (2, "y"), (3, "w")]
     errs = spark.table(load_errors_view("t_maxerr")).collect()
     assert len(errs) == 1 and "not_an_int" in errs[0].raw_line
+    # the error rows outlive the cached parse ...
+    spark.catalog.uncacheTable(_parse_view("t_maxerr"))
+    errs = spark.table(load_errors_view("t_maxerr")).collect()
+    assert len(errs) == 1 and "not_an_int" in errs[0].raw_line
+    # ... and a later COPY into the name replaces them
+    clean = tmp_path / "m_clean.csv"
+    clean.write_text("4|v\n")
+    copy_files(
+        spark, str(clean), "t_maxerr", delim="|", schema=schema,
+        copy_options=["MAXERROR 2"],
+    )
+    assert spark.table(load_errors_view("t_maxerr")).collect() == []
+    copy_files(spark, str(clean), "t_maxerr", delim="|", schema=schema)
+    assert not spark.catalog.tableExists(load_errors_view("t_maxerr"))
+
+
+def test_copy_maxerror_bad_later_column_excluded(spark, tmp_path):
+    """A row whose bad value sits in a later column is excluded even
+    from a read of the loaded view that selects only the first
+    column."""
+    from pyspark.sql import types as T
+
+    f = tmp_path / "m3.csv"
+    f.write_text("1|10|x\n2|oops|y\n3|30|z\n")
+    schema = T.StructType(
+        [
+            T.StructField("a", T.LongType()),
+            T.StructField("b", T.LongType()),
+            T.StructField("c", T.StringType()),
+        ]
+    )
+    df = copy_files(
+        spark, str(f), "t_maxerr_col", delim="|", schema=schema,
+        copy_options=["MAXERROR 1"],
+    )
+    assert sorted(r.a for r in df.select("a").collect()) == [1, 3]
+    assert spark.table("t_maxerr_col").select("a").count() == 2
 
 
 def test_copy_releases_previous_maxerror_parse(spark, tmp_path):

@@ -977,9 +977,9 @@ def test_stream_shapley_matches_batch(spark, sf_dir, tmp_path):
 
 def test_stream_ann_postings_matches_batch(spark, sf_dir, tmp_path):
     """The live postings state must equal the batch signature table for
-    any chunking (fold signatures — bit-deterministic per row), and
-    serving knn_lsh THROUGH the streamed postings must equal the
-    batch fold-signature serving path exactly."""
+    any chunking (the signature kernel is bit-deterministic per row),
+    and serving knn_lsh THROUGH the streamed postings must equal the
+    batch serving path exactly."""
     from locopy_spark.operators.similarity import knn_lsh, lsh_signatures
     from locopy_spark.queries.docs import KNN_K, KNN_QUERY_IDS
     from locopy_spark.sources.tables import load_table
@@ -995,7 +995,7 @@ def test_stream_ann_postings_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tmp_path / "annchunk*"))
     )
-    q = stream_ann_postings(stream, state_view="annp_t", signatures="fold")
+    q = stream_ann_postings(stream, state_view="annp_t")
     try:
         q.processAllAvailable()
     finally:
@@ -1016,9 +1016,7 @@ def test_stream_ann_postings_matches_batch(spark, sf_dir, tmp_path):
     )
     batch = sorted(
         tuple(r)
-        for r in knn_lsh(
-            emb, query_ids=KNN_QUERY_IDS, k=KNN_K, signatures="fold"
-        ).collect()
+        for r in knn_lsh(emb, query_ids=KNN_QUERY_IDS, k=KNN_K).collect()
     )
     assert served == batch
 

@@ -65,6 +65,20 @@ def test_facade_errors(spark):
         closed.unload("SELECT 1", "/tmp/x")
 
 
+def test_load_and_copy_unconnected_stages_nothing(tmp_path):
+    """On an unconnected Warehouse, load_and_copy raises before it
+    splits, gzips or stages anything."""
+    from locopy_spark.errors import DBError
+
+    raw = tmp_path / "raw.csv"
+    raw.write_text("".join(f"{i}|v{i}\n" for i in range(10)))
+    wh = Warehouse(stage_root=str(tmp_path / "stage"))
+    with pytest.raises(DBError, match="No connection"):
+        wh.load_and_copy(str(raw), "in", "t_unconnected", splits=2)
+    files = [p.relative_to(tmp_path) for p in tmp_path.rglob("*") if p.is_file()]
+    assert [str(p) for p in files] == ["raw.csv"]
+
+
 def test_unload_option_delimiter_forms():
     from locopy_spark.errors import DBError
     from locopy_spark.sources.options import parse_unload_options

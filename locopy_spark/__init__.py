@@ -7,6 +7,10 @@ and adds the analytics + LLM-data-pipeline operators such an engine
 serves at 100 TB scale.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from locopy_spark.database import Database
 from locopy_spark.errors import (
     CompressionError,
@@ -44,3 +48,10 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
+
+# Python UDF bodies here call module-level helpers (lsh_sign_bits,
+# _assign_arrow, ...).  Pickled by reference, they would make every
+# Python worker import locopy_spark, which fails wherever the package
+# is not on the worker's sys.path (a driver that only put the repository
+# on its own sys.path).  By value, the helpers travel with the UDF.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -245,8 +245,14 @@ def minhash_bands(
     stream_near_dedup) bucket on. No persist here: callers own the
     reuse decision. ``spread=False`` skips the map-parallelism guard
     (streaming micro-batches)."""
-    rows = n_hashes // bands
     sig = minhash_signatures(docs, id_col, text_col, k, n_hashes, spread=spread)
+    return _band_keys(sig, n_hashes, bands)
+
+
+def _band_keys(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
+    """(doc_id, band, bh) rows of a :func:`minhash_signatures` frame:
+    band b's key is the md5 of its ``n_hashes // bands`` minima."""
+    rows = n_hashes // bands
     band_cols = [
         F.expr(
             "md5(concat_ws('|', "
@@ -282,7 +288,6 @@ def minhash_lsh_pairs(
     fraction of agreeing signature positions; filtered at
     ``est_threshold``.
     """
-    rows = n_hashes // bands
     # the signature table feeds four plan subtrees (band self-join sides
     # + both est joins). Materialize it once: A/B at sf0.1 shows 4×
     # (4.6s → 1.15s) — ReusedExchange does NOT collapse the est-join
@@ -292,23 +297,7 @@ def minhash_lsh_pairs(
     sig = managed_persist(
         minhash_signatures(docs, id_col, text_col, k, n_hashes), "minhash_lsh"
     )
-    band_cols = [
-        F.expr(
-            "md5(concat_ws('|', "
-            + ", ".join(f"m{b * rows + j}" for j in range(rows))
-            + "))"
-        ).alias(f"b{b}")
-        for b in range(bands)
-    ]
-    banded = (
-        sig.select("doc_id", *band_cols)
-        .select(
-            "doc_id",
-            F.posexplode(F.array(*[F.col(f"b{b}") for b in range(bands)])),
-        )
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "bh")
-    )
+    banded = _band_keys(sig, n_hashes, bands)
     x, y = banded.alias("x"), banded.alias("y")
     cand = (
         x.join(

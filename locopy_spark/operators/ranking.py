@@ -6,6 +6,8 @@ partition on the sort key, rank locally inside each (sorted) range,
 then add each partition's global offset (exclusive prefix sum of
 per-partition counts — P numbers, metadata). Total cost: one
 range-partitioning sort shuffle; every partition ranks in parallel.
+The device is written once, in :func:`_prefix`; every public function
+below (row number, ntile, running sums, grouped or not) is one call.
 
 Offsets are computed IN-PLAN (r11): the per-partition counts are a
 P-row aggregate, their exclusive prefix sum a window over those P rows
@@ -49,73 +51,111 @@ def _ranged(df: DataFrame, keys: list[str], num_partitions: int | None):
     )
 
 
-def _w_pid():
-    """Exclusive prefix over partition ids — P rows of metadata, one
-    task.  Built per call: WindowSpec construction needs a live
-    SparkContext, so a module-level constant would break imports that
-    precede session startup."""
-    return Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+def _prefix(
+    df: DataFrame, group_cols: list[str], order_cols: list[str],
+    measures: list[tuple[str, str | None, bool]],
+    num_partitions: int | None = None, bounded: bool = False,
+    total_col: str | None = None,
+) -> DataFrame:
+    """The one exact prefix device every public function here wraps:
+    per-(partition, group) totals → exclusive offsets → a local scan
+    plus the offset (Blelloch's scan, with range partitions as blocks).
 
+    ``measures`` is a list of ``(out_col, value_col, exclusive)``.
+    ``value_col=None`` is the 1-based row number (``row_number()``;
+    ``exclusive`` is ignored).  Otherwise ``out_col`` is the running
+    sum of ``value_col`` over the rows before the current one
+    (``exclusive=True``; 0, not null, on a group's first row) or up to
+    and including it (``exclusive=False``).  The exclusive frame stays
+    a window frame rather than inclusive-minus-value: for doubles the
+    subtraction is not bit-identical.
 
-def global_row_number(
-    df: DataFrame,
-    order_cols: list[str],
-    out_col: str = "rn",
-    num_partitions: int | None = None,
-    _return_total: bool = False,
-    bounded: bool = False,
-):
-    """Exact 1-based global row number under ``order_cols`` (which must
-    be a total order for a deterministic result).
+    Range-partitioned on (group, order) so every partition holds a
+    contiguous slice of one-or-more groups' order; the metadata is one
+    aggregate per (``__pid``, group) — ≤ P + G - 1 rows, the ranges
+    overlap at most G-1 group boundaries — whose exclusive prefix over
+    ``__pid`` (a window over metadata, never data) is broadcast-joined
+    back.  ``group_cols=[]`` is the global case: the offsets window is
+    then ordered by ``__pid`` alone.
 
-    ``_return_total=True`` additionally returns a ONE-ROW DataFrame
-    carrying the total row count as ``__total`` — derived from the same
-    per-partition counts, so callers that need it (``global_ntile``,
-    percentile thresholds) don't replay the rank plan to count, and
-    nothing round-trips through the driver.
+    ``total_col`` (range arm only) attaches each group's total of the
+    FIRST measure (a broadcast G-row join; ungrouped, a cross join of
+    the one-row total), derived from the same metadata so nothing
+    replays the scan.
 
-    ``bounded=True``: the domain-bounded arm (see
-    :func:`global_running_sum`) — one plain window over a
-    SinglePartition exchange, no range sampler, no offset join.  Pass
-    only with a boundedness argument in hand (not combined with
-    ``_return_total``)."""
+    ``bounded=True`` is the DOMAIN-BOUNDED arm (r12): when the caller
+    can prove ``df`` is bounded by a value domain rather than data
+    volume (whole-dollar price grids, day-index grids, degree
+    histograms — all ≤ ~10^6 rows at ANY corpus size), the measures
+    run as plain windows over one exchange.  That drops the range
+    partitioner (whose boundary sampling is a separate full-scan job
+    per call) and the offsets/broadcast-join scaffolding — measured
+    −0.7 s per call on a 129k-row grid at sf0.1.  Only pass it with a
+    boundedness argument in hand; data-sized inputs keep the
+    range-partitioned default.  There ``row_number()`` stays ``int``
+    (the range arm adds a ``bigint`` offset).
+    """
+    pre = Window.unboundedPreceding
+    pid = [] if bounded else ["__pid"]
+    w = Window.partitionBy(*pid, *group_cols).orderBy(*order_cols)
+
+    def scan(value_col, exclusive):
+        if value_col is None:
+            return F.row_number().over(w)
+        if exclusive:
+            before = F.sum(value_col).over(w.rowsBetween(pre, -1))
+            return F.coalesce(before, F.lit(0))
+        return F.sum(value_col).over(w.rowsBetween(pre, Window.currentRow))
+
     if bounded:
-        return df.withColumn(
-            out_col, F.row_number().over(Window.orderBy(*order_cols))
-        )
-    ranged = _ranged(df, order_cols, num_partitions)
-    cnts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    off = cnts.select(
-        "__pid",
-        F.coalesce(F.sum("__cnt").over(_w_pid()), F.lit(0)).alias("__off"),
+        for out_col, value_col, exclusive in measures:
+            df = df.withColumn(out_col, scan(value_col, exclusive))
+        return df
+    ranged = _ranged(df, [*group_cols, *order_cols], num_partitions)
+    meta = ranged.groupBy("__pid", *group_cols).agg(*[
+        (F.count(F.lit(1)) if v is None else F.coalesce(F.sum(v), F.lit(0)))
+        .alias(f"__m{i}") for i, (_, v, _) in enumerate(measures)
+    ])
+    w_off = (
+        Window.partitionBy(*group_cols).orderBy("__pid").rowsBetween(pre, -1)
     )
-    w = Window.partitionBy("__pid").orderBy(*order_cols)
-    out = (
-        ranged.join(F.broadcast(off), "__pid")
-        .withColumn(out_col, F.row_number().over(w) + F.col("__off"))
-        .drop("__pid", "__off")
-    )
-    if _return_total:
-        total = cnts.agg(F.sum("__cnt").alias("__total"))
-        return out, total
+    offs = [f"__off{i}" for i in range(len(measures))]
+    off = meta.select(*group_cols, "__pid", *[
+        F.coalesce(F.sum(f"__m{i}").over(w_off), F.lit(0)).alias(o)
+        for i, o in enumerate(offs)
+    ])
+    out = ranged.join(F.broadcast(off), ["__pid", *group_cols])
+    for (out_col, value_col, exclusive), o in zip(measures, offs):
+        out = out.withColumn(out_col, scan(value_col, exclusive) + F.col(o))
+    out = out.drop("__pid", *offs)
+    if total_col:
+        tot = meta.groupBy(*group_cols).agg(F.sum("__m0").alias(total_col))
+        tot = F.broadcast(tot)
+        out = out.join(tot, group_cols) if group_cols else out.crossJoin(tot)
     return out
 
 
+def global_row_number(
+    df: DataFrame, order_cols: list[str], out_col: str = "rn",
+    num_partitions: int | None = None, bounded: bool = False,
+) -> DataFrame:
+    """Exact 1-based global row number under ``order_cols`` (which must
+    be a total order for a deterministic result).  ``bounded=True``:
+    the domain-bounded arm (see :func:`_prefix`)."""
+    return _prefix(df, [], order_cols, [(out_col, None, False)],
+                   num_partitions, bounded)
+
+
 def global_ntile(
-    df: DataFrame,
-    order_cols: list[str],
-    n: int,
-    out_col: str = "ntile",
+    df: DataFrame, order_cols: list[str], n: int, out_col: str = "ntile"
 ) -> DataFrame:
     """Exact NTILE(n) from the distributed global rank (same SQL
     semantics: first ``n_rows % n`` tiles get the extra row)."""
-    ranked, total = global_row_number(
-        df, order_cols, out_col="__grn", _return_total=True
-    )
-    # tile arithmetic rides as columns off the 1-row total (broadcast
-    # cross join) — the same integer/double expressions the driver-side
-    # literals produced, now fully lazy
-    withtot = ranked.crossJoin(F.broadcast(total)).withColumn(
+    # the row total comes off the rank's own per-partition counts as a
+    # broadcast 1-row cross join; the tile arithmetic rides as columns
+    ranked = _prefix(df, [], order_cols, [("__grn", None, False)],
+                     total_col="__total")
+    withtot = ranked.withColumn(
         "__base", F.expr(f"__total div {n}")
     ).withColumn("__rem", F.expr(f"__total % {n}"))
     cut = F.col("__rem") * (F.col("__base") + 1)
@@ -136,210 +176,63 @@ def global_ntile(
 
 
 def grouped_global_row_number(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[str],
-    out_col: str = "rn",
-    size_col: str | None = None,
+    df: DataFrame, group_cols: list[str], order_cols: list[str],
+    out_col: str = "rn", size_col: str | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact 1-based row number *within each group* under ``order_cols``
     — without ``Window.partitionBy(group)``'s one-task-per-group sort.
 
     Built for the few-groups/many-rows regime (order priorities,
-    languages, market segments …) where a partitioned window serializes:
-    range-partition on (group, order) so every partition holds a
-    contiguous slice of one-or-more groups' sort order, rank locally,
-    then add per-(partition, group) offsets (≤ P + G - 1 rows of
-    metadata — the ranges overlap at most G-1 group boundaries).
-    ``size_col`` additionally attaches the group's total row count
-    (broadcast G-row join), enabling percent_rank/cume_dist arithmetic.
+    languages, market segments …) where a partitioned window
+    serializes.  ``size_col`` additionally attaches the group's total
+    row count, enabling percent_rank/cume_dist arithmetic.
     """
-    ranged = _ranged(df, [*group_cols, *order_cols], num_partitions)
-    cnts = ranged.groupBy("__pid", *group_cols).agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
-    w_grp = (
-        Window.partitionBy(*group_cols)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off_df = cnts.select(
-        *group_cols,
-        "__pid",
-        F.coalesce(F.sum("__cnt").over(w_grp), F.lit(0)).alias("__off"),
-    )
-    w = Window.partitionBy("__pid", *group_cols).orderBy(*order_cols)
-    out = (
-        ranged.join(F.broadcast(off_df), ["__pid", *group_cols])
-        .withColumn(out_col, F.row_number().over(w) + F.col("__off"))
-        .drop("__pid", "__off")
-    )
-    if size_col:
-        sizes = cnts.groupBy(*group_cols).agg(F.sum("__cnt").alias(size_col))
-        out = out.join(F.broadcast(sizes), group_cols)
-    return out
+    return _prefix(df, group_cols, order_cols, [(out_col, None, False)],
+                   num_partitions, total_col=size_col)
 
 
 def global_running_sum(
-    df: DataFrame,
-    order_cols: list[str],
-    value_col: str,
-    out_col: str = "running",
-    num_partitions: int | None = None,
+    df: DataFrame, order_cols: list[str], value_col: str,
+    out_col: str = "running", num_partitions: int | None = None,
     bounded: bool = False,
 ) -> DataFrame:
     """Exact exclusive prefix sum of ``value_col`` under the global
     order ``order_cols`` (a total order), without a one-partition
-    window.
-
-    Same shape as :func:`global_row_number`: range-partition on the
-    order, per-partition SUMS → exclusive offsets (a P-row window over
-    metadata), then a per-partition running sum plus the offset. Powers
-    order-dependent assignment at scale — sequence packing, quota
-    fills, cumulative budgets.  ``out_col`` excludes the current row
-    (sum of everything strictly before it).
-
-    ``bounded=True`` is the DOMAIN-BOUNDED arm (r12): when the caller
-    can prove ``df`` is bounded by a value domain rather than data
-    volume (whole-dollar price grids, day-index grids, degree
-    histograms — all ≤ ~10^6 rows at ANY corpus size), the prefix runs
-    as one plain window over a single SinglePartition exchange.  That
-    drops the range partitioner (whose boundary sampling is a separate
-    full-scan job per call) and the offsets/broadcast-join scaffolding
-    — measured −0.7 s per call on a 129k-row grid at sf0.1.  Only pass
-    it with a boundedness argument in hand; data-sized inputs keep the
-    range-partitioned default.
-    """
-    if bounded:
-        w = (
-            Window.orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        zero = F.lit(0).cast(df.schema[value_col].dataType)
-        return df.withColumn(
-            out_col, F.coalesce(F.sum(value_col).over(w), zero)
-        )
-    ranged = _ranged(df, order_cols, num_partitions)
-    sums = ranged.groupBy("__pid").agg(F.sum(value_col).alias("__s"))
-    zero = F.lit(0).cast(sums.schema["__s"].dataType)
-    off_df = sums.select(
-        "__pid",
-        F.coalesce(F.sum("__s").over(_w_pid()), zero).alias("__off"),
-    )
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        ranged.join(F.broadcast(off_df), "__pid")
-        .withColumn(
-            out_col,
-            F.coalesce(F.sum(value_col).over(w), zero) + F.col("__off"),
-        )
-        .drop("__pid", "__off")
-    )
+    window: ``out_col`` is the sum of everything strictly before the
+    row.  Powers order-dependent assignment at scale — sequence
+    packing, quota fills, cumulative budgets.  ``bounded=True``: the
+    domain-bounded arm (see :func:`_prefix`)."""
+    return _prefix(df, [], order_cols, [(out_col, value_col, True)],
+                   num_partitions, bounded)
 
 
 def grouped_global_running_sum(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[str],
-    weight_col: str,
-    out_col: str = "cumw",
-    total_col: str | None = None,
+    df: DataFrame, group_cols: list[str], order_cols: list[str],
+    weight_col: str, out_col: str = "cumw", total_col: str | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact INCLUSIVE running sum of ``weight_col`` *within each
     group* under ``order_cols`` — :func:`grouped_global_row_number`
-    for weights instead of row counts, and the grouped form of
-    :func:`global_running_sum`.
-
-    Same shape: range-partition on (group, order) so every partition
-    holds a contiguous slice of one-or-more groups' order, per-
-    (partition, group) weight sums (≤ P + G - 1 rows of metadata) →
-    exclusive offsets, then a per-partition running sum plus the
-    offset. ``total_col`` attaches each group's total weight
-    (broadcast G-row join) — together they power weighted quantiles /
+    for weights instead of row counts.  ``total_col`` attaches each
+    group's total weight — together they power weighted quantiles /
     cumulative-share arithmetic without a one-task-per-group window.
     Weights must be bigint (exactness contract).
     """
-    ranged = _ranged(df, [*group_cols, *order_cols], num_partitions)
-    sums = ranged.groupBy("__pid", *group_cols).agg(
-        F.coalesce(F.sum(weight_col), F.lit(0)).alias("__s")
-    )
-    w_grp = (
-        Window.partitionBy(*group_cols)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off_df = sums.select(
-        *group_cols,
-        "__pid",
-        F.coalesce(F.sum("__s").over(w_grp), F.lit(0)).alias("__off"),
-    )
-    w = (
-        Window.partitionBy("__pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = (
-        ranged.join(F.broadcast(off_df), ["__pid", *group_cols])
-        .withColumn(out_col, F.sum(weight_col).over(w) + F.col("__off"))
-        .drop("__pid", "__off")
-    )
-    if total_col:
-        tots = sums.groupBy(*group_cols).agg(F.sum("__s").alias(total_col))
-        out = out.join(F.broadcast(tots), group_cols)
-    return out
+    return _prefix(df, group_cols, order_cols, [(out_col, weight_col, False)],
+                   num_partitions, total_col=total_col)
 
 
 def global_rank_and_running_sum(
-    df: DataFrame,
-    order_cols: list[str],
-    value_col: str,
-    rank_col: str = "rn",
-    sum_col: str = "running",
-    num_partitions: int | None = None,
-    bounded: bool = False,
+    df: DataFrame, order_cols: list[str], value_col: str,
+    rank_col: str = "rn", sum_col: str = "running",
+    num_partitions: int | None = None, bounded: bool = False,
 ) -> DataFrame:
     """:func:`global_row_number` AND :func:`global_running_sum` from
-    ONE range-partitioned pass: a single ranged frame, one P-row
-    metadata aggregate carrying (count, sum) per partition, then both
-    local windows add their offsets.  Callers that need the rank and
-    the exclusive prefix sum together (change-point scans, Lorenz
-    tails) pay one shuffle instead of two.
-
-    ``bounded=True``: the domain-bounded arm (see
-    :func:`global_running_sum`) — both windows over one plain
-    SinglePartition exchange, no range sampler, no offset join."""
-    if bounded:
-        wr = Window.orderBy(*order_cols)
-        ws = wr.rowsBetween(Window.unboundedPreceding, -1)
-        zero = F.lit(0).cast(df.schema[value_col].dataType)
-        return df.withColumn(rank_col, F.row_number().over(wr)).withColumn(
-            sum_col, F.coalesce(F.sum(value_col).over(ws), zero)
-        )
-    ranged = _ranged(df, order_cols, num_partitions)
-    per = ranged.groupBy("__pid").agg(
-        F.count(F.lit(1)).alias("__cnt"),
-        F.coalesce(F.sum(value_col), F.lit(0)).alias("__s"),
-    )
-    off_df = per.select(
-        "__pid",
-        F.coalesce(F.sum("__cnt").over(_w_pid()), F.lit(0)).alias("__offn"),
-        F.coalesce(F.sum("__s").over(_w_pid()), F.lit(0)).alias("__offs"),
-    )
-    wr = Window.partitionBy("__pid").orderBy(*order_cols)
-    ws = wr.rowsBetween(Window.unboundedPreceding, -1)
-    return (
-        ranged.join(F.broadcast(off_df), "__pid")
-        .withColumn(rank_col, F.row_number().over(wr) + F.col("__offn"))
-        .withColumn(
-            sum_col,
-            F.coalesce(F.sum(value_col).over(ws), F.lit(0))
-            + F.col("__offs"),
-        )
-        .drop("__pid", "__offn", "__offs")
-    )
+    ONE range-partitioned pass: one metadata aggregate carries (count,
+    sum) per partition, then both local windows add their offsets.
+    Callers that need the rank and the exclusive prefix sum together
+    (change-point scans, Lorenz tails) pay one shuffle instead of two.
+    ``bounded=True``: the domain-bounded arm (see :func:`_prefix`)."""
+    measures = [(rank_col, None, False), (sum_col, value_col, True)]
+    return _prefix(df, [], order_cols, measures, num_partitions, bounded)

@@ -975,7 +975,6 @@ def knn_pq(
     n_sub: int = 8,
     n_codewords: int = 16,
     oversample: int = 4,
-    arrow_encode: bool = True,
     coded: DataFrame | None = None,
     codebook: DataFrame | None = None,
 ) -> DataFrame:
@@ -985,17 +984,17 @@ def knn_pq(
     broadcast codebook and folds to ``n_sub`` small codes
     (dim·K fixed-point ops/row, no shuffle) — at rest the codes are
     M bytes/vector vs 4·dim float32, a 32× scan-byte reduction at
-    100 TB. ``arrow_encode`` (default) runs that pass as the
-    bit-identical numpy kernel (:func:`pq_codes_arrow`, ~6× faster
-    than the interpreted SQL fold); False keeps the pure-SQL spec
-    expression. Queries precompute M×K ADC lookup tables once; scoring a
-    vector is then M integer lookups instead of dim multiplies. The
-    top ``oversample·k`` ADC shortlist per query is reranked with the
-    exact fixed-point cosine (the :func:`knn_int8` split: quantization
-    can only cost recall, never within-k order). Every stage is
-    integer-deterministic, so unlike the LSH/int8 tripwires the
-    DuckDB oracle rebuilds codes, tables, shortlist, and rerank
-    bit-for-bit.
+    100 TB. That pass is the numpy kernel :func:`pq_codes_arrow`
+    (~6× faster than the interpreted SQL fold ``pq_encode_expr``, to
+    which it is bit-identical; the SQL expression stays the spec the
+    tests check it against). Queries precompute M×K ADC lookup tables
+    once; scoring a vector is then M integer lookups instead of dim
+    multiplies. The top ``oversample·k`` ADC shortlist per query is
+    reranked with the exact fixed-point cosine (the :func:`knn_int8`
+    split: quantization can only cost recall, never within-k order).
+    Every stage is integer-deterministic, so unlike the LSH/int8
+    tripwires the DuckDB oracle rebuilds codes, tables, shortlist, and
+    rerank bit-for-bit.
 
     ``coded`` / ``codebook``: pre-computed (neighbor_id, codes) table
     and 1-row codebook for the SAME (emb, dim, n_sub, n_codewords) —
@@ -1003,11 +1002,7 @@ def knn_pq(
     (:mod:`locopy_spark.operators.ann_index`): the data-sized encode
     pass and the codebook sample scan are paid at index-build time.
     """
-    from locopy_spark.functions.vectors import (
-        pq_adc_expr,
-        pq_encode_expr,
-        pq_qtab_expr,
-    )
+    from locopy_spark.functions.vectors import pq_adc_expr, pq_qtab_expr
 
     # materialize the one-row codebook (K×dim floats — a bounded
     # collect like the k-means centroid rows) so the coded and qtab
@@ -1019,12 +1014,7 @@ def knn_pq(
     )
     cb_rows = cb_df.collect()
     cb = emb.sparkSession.createDataFrame(cb_rows, schema=cb_df.schema)
-    if coded is not None:
-        pass
-    elif arrow_encode:
-        # bit-identical Arrow kernel (see pq_codes_arrow); the SQL
-        # expression below is the spec twin, kept live for the
-        # equality test and the oracle
+    if coded is None:
         coded = pq_codes_arrow(
             emb,
             [list(v) for v in cb_rows[0].cb],
@@ -1034,13 +1024,6 @@ def knn_pq(
             n_sub,
             n_codewords,
         ).withColumnRenamed(id_col, "neighbor_id")
-    else:
-        coded = emb.crossJoin(F.broadcast(cb)).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.expr(
-                pq_encode_expr(vec_col, "cb", dim, n_sub, n_codewords)
-            ).alias("codes"),
-        )
     coded = coded.select("neighbor_id", "codes")
     q = emb
     if query_ids is not None:

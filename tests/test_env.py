@@ -165,3 +165,39 @@ def test_time_queries_are_session_tz_independent(spark, sf_dir):
         spark.conf.set("spark.sql.session.timeZone", tz)
     assert base_w == shifted_w
     assert base_a == shifted_a
+
+
+def test_udf_helpers_ship_to_workers_without_the_package(tmp_path):
+    """A driver that put the repository only on its own ``sys.path``
+    (run from another directory, no PYTHONPATH) must still run the
+    Arrow UDFs: their module-level helpers (``lsh_sign_bits``) travel
+    with the pickled function instead of being imported by the worker."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+from locopy_spark.operators.similarity import lsh_signatures
+emb = spark.createDataFrame(
+    [(i, [float(i - j) for j in range(64)]) for i in range(3)],
+    "vec_id long, embedding array<float>")
+print("ROWS", lsh_signatures(emb).count())
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    # 3 vectors x 8 hash tables
+    assert "ROWS 24" in run.stdout, run.stderr[-3000:]

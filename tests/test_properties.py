@@ -524,6 +524,172 @@ def test_global_running_sum_matches_serial_accumulation(spark):
         assert got == want, f"num_partitions={n_parts}"
 
 
+def _ranking_cases():
+    """(name, distributed call, serial window twin) for every public
+    wrapper of operators.ranking — grouped and ungrouped, both the
+    range-partitioned and the ``bounded`` arm, ``size_col`` and
+    ``total_col``.  Each call takes (df, num_partitions)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window as W
+
+    from locopy_spark.operators import ranking as R
+
+    wo = W.orderBy("k")
+    wx = wo.rowsBetween(W.unboundedPreceding, -1)
+    wg = W.partitionBy("g").orderBy("k")
+
+    def excl(c):
+        return F.coalesce(F.sum(c).over(wx), F.lit(0))
+
+    def rank_sum(c):
+        return lambda df: df.withColumn("rn", F.row_number().over(wo)).withColumn(
+            "running", excl(c)
+        )
+
+    return [
+        (
+            "global_row_number",
+            lambda df, p: R.global_row_number(df, ["k"], num_partitions=p),
+            lambda df: df.withColumn("rn", F.row_number().over(wo)),
+        ),
+        (
+            "global_row_number/bounded",
+            lambda df, p: R.global_row_number(df, ["k"], bounded=True),
+            lambda df: df.withColumn("rn", F.row_number().over(wo)),
+        ),
+        (
+            "global_ntile",
+            lambda df, p: R.global_ntile(df, ["k"], 7),
+            lambda df: df.withColumn("ntile", F.ntile(7).over(wo)),
+        ),
+        (
+            "grouped_global_row_number",
+            lambda df, p: R.grouped_global_row_number(
+                df, ["g"], ["k"], size_col="n", num_partitions=p
+            ),
+            lambda df: df.withColumn("rn", F.row_number().over(wg)).withColumn(
+                "n", F.count(F.lit(1)).over(W.partitionBy("g"))
+            ),
+        ),
+        (
+            "global_running_sum",
+            lambda df, p: R.global_running_sum(df, ["k"], "v", num_partitions=p),
+            lambda df: df.withColumn("running", excl("v")),
+        ),
+        (
+            "global_running_sum/double",
+            lambda df, p: R.global_running_sum(df, ["k"], "d", num_partitions=p),
+            lambda df: df.withColumn("running", excl("d")),
+        ),
+        (
+            "global_running_sum/bounded",
+            lambda df, p: R.global_running_sum(df, ["k"], "v", bounded=True),
+            lambda df: df.withColumn("running", excl("v")),
+        ),
+        (
+            "grouped_global_running_sum",
+            lambda df, p: R.grouped_global_running_sum(
+                df, ["g"], ["k"], "w", total_col="t", num_partitions=p
+            ),
+            lambda df: df.withColumn(
+                "cumw",
+                F.sum("w").over(
+                    wg.rowsBetween(W.unboundedPreceding, W.currentRow)
+                ),
+            ).withColumn("t", F.sum("w").over(W.partitionBy("g"))),
+        ),
+        (
+            "global_rank_and_running_sum",
+            lambda df, p: R.global_rank_and_running_sum(
+                df, ["k"], "v", num_partitions=p
+            ),
+            rank_sum("v"),
+        ),
+        (
+            "global_rank_and_running_sum/double",
+            lambda df, p: R.global_rank_and_running_sum(
+                df, ["k"], "d", num_partitions=p
+            ),
+            rank_sum("d"),
+        ),
+        (
+            "global_rank_and_running_sum/bounded",
+            lambda df, p: R.global_rank_and_running_sum(
+                df, ["k"], "v", bounded=True
+            ),
+            rank_sum("v"),
+        ),
+    ]
+
+
+# output columns (name:type, in order) of each case, as recorded before
+# the wrappers shared one kernel; the range and bounded arms differ
+# (row_number() alone is int, plus an offset it is bigint)
+_RANKING_DTYPES = {
+    "global_row_number": "k:bigint g:string v:int d:double w:bigint rn:bigint",
+    "global_row_number/bounded": "k:bigint g:string v:int d:double w:bigint rn:int",
+    "global_ntile": "k:bigint g:string v:int d:double w:bigint ntile:int",
+    "grouped_global_row_number": (
+        "g:string k:bigint v:int d:double w:bigint rn:bigint n:bigint"
+    ),
+    "global_running_sum": (
+        "k:bigint g:string v:int d:double w:bigint running:bigint"
+    ),
+    "global_running_sum/double": (
+        "k:bigint g:string v:int d:double w:bigint running:double"
+    ),
+    "global_running_sum/bounded": (
+        "k:bigint g:string v:int d:double w:bigint running:bigint"
+    ),
+    "grouped_global_running_sum": (
+        "g:string k:bigint v:int d:double w:bigint cumw:bigint t:bigint"
+    ),
+    "global_rank_and_running_sum": (
+        "k:bigint g:string v:int d:double w:bigint rn:bigint running:bigint"
+    ),
+    "global_rank_and_running_sum/double": (
+        "k:bigint g:string v:int d:double w:bigint rn:bigint running:double"
+    ),
+    "global_rank_and_running_sum/bounded": (
+        "k:bigint g:string v:int d:double w:bigint rn:int running:bigint"
+    ),
+}
+
+
+def _ranking_frame(spark, n):
+    rnd = random.Random(20261019)
+    rows = [
+        (
+            key,
+            rnd.choice("abcd"),
+            rnd.randint(-50, 50),
+            rnd.randint(-40, 40) * 0.25,  # dyadic: every sum order is exact
+            rnd.randint(0, 9),
+        )
+        for key in rnd.sample(range(100000), n)
+    ]
+    return spark.createDataFrame(
+        rows, "k long, g string, v int, d double, w long"
+    )
+
+
+def test_ranking_wrappers_match_serial_windows(spark):
+    """Every ranking wrapper equals its one-partition window twin on
+    one random frame for num_partitions in {1, 3, 64} (more partitions
+    than some groups have rows) and on an empty frame, and keeps the
+    output column types."""
+    full = _ranking_frame(spark, 211)
+    frames = [(full, 1), (full, 3), (full, 64), (full.limit(0), 3)]
+    for name, call, twin in _ranking_cases():
+        for df, parts in frames:
+            got = call(df, parts)
+            want = twin(df)
+            dtypes = " ".join(f"{c}:{t}" for c, t in got.dtypes)
+            assert dtypes == _RANKING_DTYPES[name], (name, dtypes)
+            rows = sorted(map(tuple, got.select(*want.columns).collect()))
+            assert rows == sorted(map(tuple, want.collect())), (name, parts)
+
+
 # -- the shared two-sample panel grid (cliffs_state → ks/mw/cliffs) ----------
 #
 # Since late r8 all three two-sample finishers (q_ks_test,

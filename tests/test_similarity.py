@@ -224,18 +224,37 @@ def test_knn_pq_codes_and_recall(spark, sf_dir):
 
 def test_knn_pq_arrow_equals_sql_spec(spark, sf_dir):
     """The Arrow encode kernel must be BIT-identical to the SQL spec
-    expression — same codes, same shortlist, same reranked rows."""
-    from locopy_spark.operators.similarity import knn_pq
+    expression — same codes on every embedding, and so the same
+    shortlist and reranked rows as knn_pq over spec-encoded codes."""
+    from pyspark.sql import functions as F
+
+    from locopy_spark.functions.vectors import pq_encode_expr
+    from locopy_spark.operators.similarity import (
+        knn_pq,
+        pq_codebook,
+        pq_codes_arrow,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    kw = dict(query_ids=[0, 1, 2, 3, 4], k=5, n_sub=16, n_codewords=32)
-    a = sorted(
-        map(tuple, knn_pq(emb, arrow_encode=True, **kw).collect())
+    n_sub, n_cw = 16, 32
+    cb_df = pq_codebook(emb, n_codewords=n_cw)
+    cb = spark.createDataFrame(cb_df.collect(), schema=cb_df.schema)
+    spec = emb.crossJoin(F.broadcast(cb)).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.expr(pq_encode_expr("embedding", "cb", 64, n_sub, n_cw)).alias(
+            "codes"
+        ),
     )
-    b = sorted(
-        map(tuple, knn_pq(emb, arrow_encode=False, **kw).collect())
+    arrow = pq_codes_arrow(
+        emb, [list(v) for v in cb.first().cb], n_sub=n_sub, n_codewords=n_cw
     )
-    assert a == b
+    want = sorted((r.neighbor_id, list(r.codes)) for r in spec.collect())
+    got = sorted((r.vec_id, list(r.codes)) for r in arrow.collect())
+    assert len(got) == emb.count() and got == want
+    kw = dict(query_ids=[0, 1, 2, 3, 4], k=5, n_sub=n_sub, n_codewords=n_cw)
+    a = sorted(map(tuple, knn_pq(emb, **kw).collect()))
+    b = sorted(map(tuple, knn_pq(emb, coded=spec, codebook=cb, **kw).collect()))
+    assert a == b and a
 
 
 def test_ann_index_served_results_identical(spark, sf_dir):

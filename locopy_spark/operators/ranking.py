@@ -51,6 +51,22 @@ def _ranged(df: DataFrame, keys: list[str], num_partitions: int | None):
     )
 
 
+def _join_null_safe(df: DataFrame, small: DataFrame, keys: list[str]):
+    """``df.join(broadcast(small), keys)`` (same column order: keys
+    first) with ``<=>`` key matching, so rows whose group key is NULL
+    join their own group's metadata — ``Window.partitionBy`` keeps
+    them as one group, a plain equi-join would drop them."""
+    renamed = [f"__k{i}" for i in range(len(keys))]
+    rest = [c for c in small.columns if c not in keys]
+    right = small.select(
+        *[F.col(k).alias(r) for k, r in zip(keys, renamed)], *rest
+    )
+    on = [F.col(k).eqNullSafe(F.col(r)) for k, r in zip(keys, renamed)]
+    return df.join(F.broadcast(right), on).select(
+        *keys, *[c for c in df.columns if c not in keys], *rest
+    )
+
+
 def _prefix(
     df: DataFrame, group_cols: list[str], order_cols: list[str],
     measures: list[tuple[str, str | None, bool]],
@@ -124,14 +140,16 @@ def _prefix(
         F.coalesce(F.sum(f"__m{i}").over(w_off), F.lit(0)).alias(o)
         for i, o in enumerate(offs)
     ])
-    out = ranged.join(F.broadcast(off), ["__pid", *group_cols])
+    out = _join_null_safe(ranged, off, ["__pid", *group_cols])
     for (out_col, value_col, exclusive), o in zip(measures, offs):
         out = out.withColumn(out_col, scan(value_col, exclusive) + F.col(o))
     out = out.drop("__pid", *offs)
     if total_col:
         tot = meta.groupBy(*group_cols).agg(F.sum("__m0").alias(total_col))
-        tot = F.broadcast(tot)
-        out = out.join(tot, group_cols) if group_cols else out.crossJoin(tot)
+        out = (
+            _join_null_safe(out, tot, group_cols) if group_cols
+            else out.crossJoin(F.broadcast(tot))
+        )
     return out
 
 

@@ -3,32 +3,22 @@
 The load/export surfaces (parity targets: reference locopy/redshift.py
 ``copy``/``unload``) were previously pytest-only; these queries put
 them under the same DuckDB hash gate as everything else. Each query
-writes real files to a throwaway temp dir, reads them back through the
+writes real files to its own temp dir, reads them back through the
 public copy/unload API, and reduces to a result the oracle can compute
 straight off the parquet tables — so any loss in the
 write → parse → infer path (delimiters, headers, gzip, type
 inference, float round-trip) flips the hash.
+
+The reload is materialized (``copy_files(materialize=True)``, the
+PURGE path), so the returned DataFrame no longer reads the files and
+each call removes its dir before returning: nothing accumulates, and
+two processes running the same query cannot delete each other's input.
 """
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
-
-
-def _rt_dir(name: str) -> str:
-    """Fixed per-query scratch dir, wiped on entry.
-
-    ``mkdtemp`` per call leaked a new directory every bench trial /
-    driver run; a stable path bounds accumulation to one dir per query.
-    (The returned DataFrame reads these files lazily, so the dir must
-    outlive the call — cleanup happens on the NEXT invocation.)
-    """
-    d = os.path.join(tempfile.gettempdir(), f"locopy_spark_rt_{name}")
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    return d
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,21 +36,25 @@ def q_copy_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference end-to-end; the oracle is simply the source table, so the
     hash proves the round-trip is lossless.
     """
-    out_dir = _rt_dir("copy_csv")
-    nation = load_table(spark, sf_dir, "nation")
-    (
-        nation.coalesce(1)
-        .write.mode("overwrite")
-        .options(sep="|", header=True, compression="gzip")
-        .csv(out_dir)
-    )
-    loaded = copy_files(
-        spark,
-        out_dir,
-        "copy_rt_nation",
-        delim="|",
-        copy_options=["IGNOREHEADER 1"],
-    )
+    out_dir = tempfile.mkdtemp(prefix="locopy_spark_rt_")
+    try:
+        (
+            load_table(spark, sf_dir, "nation")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .options(sep="|", header=True, compression="gzip")
+            .csv(out_dir)
+        )
+        loaded = copy_files(
+            spark,
+            out_dir,
+            "copy_rt_nation",
+            delim="|",
+            copy_options=["IGNOREHEADER 1"],
+            materialize=True,
+        )
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
     return loaded.select(
         F.col("n_nationkey").cast("bigint").alias("n_nationkey"),
         F.col("n_name").cast("string").alias("n_name"),
@@ -77,24 +71,28 @@ def q_unload_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet — a value mismatch anywhere in the unload→reload path
     (split boundaries, header rows, double text round-trip) shows up.
     """
-    out_dir = _rt_dir("unload")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("unload_rt_orders")
-    unload(
-        spark,
-        "SELECT o_orderkey, o_orderstatus, o_totalprice "
-        "FROM unload_rt_orders WHERE o_orderkey % 10 = 0",
-        out_dir,
-        delim="|",
-        header=True,
-        splits=4,
-    )
-    back = copy_files(
-        spark,
-        out_dir,
-        "unload_rt_back",
-        delim="|",
-        copy_options=["IGNOREHEADER 1"],
-    )
+    out_dir = tempfile.mkdtemp(prefix="locopy_spark_rt_")
+    try:
+        unload(
+            spark,
+            "SELECT o_orderkey, o_orderstatus, o_totalprice "
+            "FROM unload_rt_orders WHERE o_orderkey % 10 = 0",
+            out_dir,
+            delim="|",
+            header=True,
+            splits=4,
+        )
+        back = copy_files(
+            spark,
+            out_dir,
+            "unload_rt_back",
+            delim="|",
+            copy_options=["IGNOREHEADER 1"],
+            materialize=True,
+        )
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
     return (
         back.groupBy(F.col("o_orderstatus").cast("string").alias("o_orderstatus"))
         .agg(

@@ -44,37 +44,28 @@ def load_errors_view(table_name: str) -> str:
     return f"{table_name}__load_errors"
 
 
-def _parse_view(table_name: str) -> str:
-    """Name of the temp view that holds a MAXERROR COPY's cached parse.
-    The session catalog owns the cache through it: the next COPY into
-    ``table_name`` drops the view, and dropping it uncaches."""
-    return f"{table_name}__maxerror_parse"
-
-
 def _apply_maxerror(
     spark: SparkSession, df: DataFrame, table_name: str, max_error: int
 ) -> DataFrame:
-    """Enforce Redshift MAXERROR semantics on a PERMISSIVE csv read:
-    rows whose raw line failed schema parsing are counted; beyond
-    ``max_error`` the load fails (DBError), otherwise the bad rows are
-    dropped from the result and kept queryable in
-    ``<table>__load_errors`` (raw line + a reason placeholder), the
-    STL_LOAD_ERRORS shape.
+    """Enforce Redshift MAXERROR semantics on a PERMISSIVE csv parse
+    that ``copy_files`` has already materialized: rows whose raw line
+    failed schema parsing are counted; beyond ``max_error`` the load
+    fails (DBError), otherwise the bad rows are dropped from the result
+    and kept queryable in ``<table>__load_errors`` (raw line + a reason
+    placeholder), the STL_LOAD_ERRORS shape.
 
-    The frame is persisted before the corrupt-column filter — Spark
-    requires the raw parse to be materialized before a query can
-    reference ONLY the corrupt column (SPARK-38523 semantics), and the
-    count + clean split then reuse one scan. The cache stays for the
-    loaded view's readers and is registered as ``_parse_view`` so the
-    next COPY into ``table_name`` releases it. The (at most
-    ``max_error``) bad lines are collected into a local relation, so
-    the errors view outlives that cache; a clean load collects nothing.
+    ``df`` must be the checkpointed full parse, not the file scan: the
+    csv reader prunes columns and marks a row corrupt only when a
+    column it parses fails, so a filter over the lazy scan would let a
+    row with a bad later column through any narrower projection (and a
+    query of ONLY the corrupt column is refused, SPARK-38523). Over the
+    checkpointed blocks every verdict is fixed. The (at most
+    ``max_error``) bad lines are collected into a local relation; a
+    clean load collects nothing.
     """
-    df = df.cache()
     bad = df.filter(F.col(_CORRUPT_COL).isNotNull())
     n_bad = bad.count()
     if n_bad > max_error:
-        df.unpersist()
         raise DBError(
             f"COPY into {table_name} aborted: {n_bad} unparseable rows "
             f"exceed MAXERROR {max_error}"
@@ -84,7 +75,6 @@ def _apply_maxerror(
         [(r[0], "row failed schema parse") for r in lines],
         "raw_line string, err_reason string",
     ).createOrReplaceTempView(load_errors_view(table_name))
-    df.createOrReplaceTempView(_parse_view(table_name))
     return df.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)
 
 
@@ -175,21 +165,19 @@ def copy_files(
     file_format: str = "csv",
     copy_options: list[str] | None = None,
     schema=None,
-    mode: str = "overwrite",
-    temp_view: bool = True,
     reader_options: dict | None = None,
     materialize: bool = False,
 ) -> DataFrame:
-    """Load file(s) into ``table_name``.
+    """Load file(s) into the temp view ``table_name``.
 
     Parameters mirror the reference ``copy`` (delimiter, options list
     incl. ``IGNOREHEADER n``, gzip transparency); ``file_format`` adds
     the snowflake-style csv/json/parquet choice. ``copy_options`` is a
     list of option strings or a parsed ``CopyOptions``; a ``DELIMITER``
     or format marker among them overrides ``delim``/``file_format``.
-    With ``temp_view`` (default) the loaded data is registered as a
-    temp view — zero-copy; otherwise it is written to a managed table
-    (``saveAsTable``) for cross-session durability.
+    The view is a lazy read of the files, except that a ``MAXERROR``
+    load or ``materialize=True`` stores the loaded blocks once
+    (``localCheckpoint``) and the view reads those instead.
     """
     opts = (
         copy_options
@@ -228,6 +216,8 @@ def copy_files(
             if opts.null_as is not None:
                 reader = reader.option("nullValue", opts.null_as)
             if max_error is not None:
+                if isinstance(schema, str):  # DDL, as Warehouse.copy takes
+                    schema = T._parse_datatype_string(schema)
                 reader = (
                     reader.schema(
                         T.StructType(
@@ -293,26 +283,22 @@ def copy_files(
             raise ValueError(f"unsupported file_format: {file_format}")
     except Exception as e:
         raise DBError(f"Error loading {path} into {table_name}.") from e
-    # this load replaces table_name: release the parse a previous
-    # MAXERROR COPY into it cached, and its error rows
-    spark.catalog.dropTempView(_parse_view(table_name))
+    # this load replaces table_name, and the error rows of a previous
+    # MAXERROR COPY into it
     spark.catalog.dropTempView(load_errors_view(table_name))
-    if fmt == "csv" and max_error is not None:
-        # outside the wrapper: a MAXERROR abort is its own diagnosis,
-        # not a generic load failure
-        df = _apply_maxerror(spark, df, table_name, max_error)
-    if materialize:
-        # Break lineage to the source files BEFORE registering: the
-        # PURGE / delete_stage_after callers delete the staged sources
-        # right after the load, and a lazy view would silently re-scan
-        # the (now missing) files on first read.  localCheckpoint
-        # stores the loaded blocks and drops the file lineage — a lost
-        # block then fails loudly instead of re-reading.  Cross-session
-        # durability uses temp_view=False (saveAsTable) instead.
+    if max_error is not None or materialize:
+        # The one materialization point: store the loaded blocks and
+        # drop the file lineage (a lost block then fails loudly instead
+        # of re-reading).  The PURGE / delete_stage_after callers
+        # delete the staged sources right after the load, and a lazy
+        # view would re-scan the missing files on first read.  A
+        # MAXERROR load checkpoints the whole PERMISSIVE parse, so
+        # every column passes the parser once and each row's verdict
+        # is fixed in the blocks for any later projection.
         df = df.localCheckpoint(eager=True)
-    if temp_view:
-        df.createOrReplaceTempView(table_name)
-    else:
-        df.write.mode(mode).saveAsTable(table_name)
-        df = spark.table(table_name)
+        if max_error is not None:
+            # outside the wrapper: a MAXERROR abort is its own
+            # diagnosis, not a generic load failure
+            df = _apply_maxerror(spark, df, table_name, max_error)
+    df.createOrReplaceTempView(table_name)
     return df

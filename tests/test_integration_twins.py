@@ -18,7 +18,7 @@ Mapping (reference file:test → twin below):
   test_integration.py:test_insert_dataframe_to_table      → test_insert_dataframe_roundtrip
   test_integration_sf.py:test_snowflake_execute_*_rows    → (same execute twins)
   test_integration_sf.py:test_upload_download_internal    → test_upload_download_internal
-  test_integration_sf.py:test_copy (PURGE = TRUE)         → test_copy_purge
+  test_integration_sf.py:test_copy (PURGE = TRUE)         → test_copy_purge[plain]
   test_integration_sf.py:test_copy_json                   → test_copy_json_nested
   test_integration_sf.py:test_copy_file_format_name       → test_copy_file_format_name
   test_integration_sf.py:test_to_dataframe (size/non-select) → test_to_dataframe_sizes
@@ -273,17 +273,28 @@ def test_upload_download_internal(spark, tmp_path):
 # -- Snowflake COPY with PURGE (test_integration_sf.py:113) ------------
 
 
-def test_copy_purge(spark, tmp_path):
+@pytest.mark.parametrize(
+    "bad_line", [None, "not_an_id|pátý řádek"], ids=["plain", "maxerror"]
+)
+def test_copy_purge(spark, tmp_path, bad_line):
+    """PURGE, alone and with MAXERROR: one materialized load serves
+    both, so the table reads after its staged file is gone and the
+    bad line stays in ``<table>__load_errors``."""
     sf = Snowflake(spark=spark, stage_root=str(tmp_path / "internal"))
     sf.connect()
     local = _write_delim(tmp_path / "mock.txt")
+    copy_options = ["PURGE = TRUE"]
+    if bad_line:
+        with open(local, "a", encoding="utf-8") as f:
+            f.write(bad_line + "\n")
+        copy_options.append("MAXERROR 1")
     staged = sf.upload_to_internal(local, "staged/")  # auto_compress → .gz
     assert staged[0].endswith(".gz")
     sf.copy(
         "purge_testing",
         staged[0],
         delim="|",
-        copy_options=["PURGE = TRUE"],
+        copy_options=copy_options,
         schema="id INT, variable STRING",
     )
     sf.execute("SELECT * FROM purge_testing ORDER BY id")
@@ -293,6 +304,11 @@ def test_copy_purge(spark, tmp_path):
     assert sf._stage.list("staged/*") == []
     sf.execute("SELECT count(*) AS n FROM purge_testing")
     assert int(sf.to_dataframe()["n"][0]) == len(ROWS)
+    if bad_line:
+        sf.execute("SELECT count(id) AS n FROM purge_testing")
+        assert int(sf.to_dataframe()["n"][0]) == len(ROWS)
+        errs = spark.table("purge_testing__load_errors").collect()
+        assert [e.raw_line for e in errs] == [bad_line]
     sf.disconnect()
 
 

@@ -676,10 +676,17 @@ def _ranking_frame(spark, n):
 def test_ranking_wrappers_match_serial_windows(spark):
     """Every ranking wrapper equals its one-partition window twin on
     one random frame for num_partitions in {1, 3, 64} (more partitions
-    than some groups have rows) and on an empty frame, and keeps the
-    output column types."""
+    than some groups have rows), on an empty frame and on a frame with
+    NULL group keys, and keeps the output column types."""
+    from pyspark.sql import functions as F
+
     full = _ranking_frame(spark, 211)
-    frames = [(full, 1), (full, 3), (full, 64), (full.limit(0), 3)]
+    # a third of the rows with a NULL group key: one group, as in the
+    # serial Window.partitionBy
+    null_g = full.withColumn("g", F.when(F.col("k") % 3 > 0, F.col("g")))
+    frames = [
+        (full, 1), (full, 3), (full, 64), (full.limit(0), 3), (null_g, 3)
+    ]
     for name, call, twin in _ranking_cases():
         for df, parts in frames:
             got = call(df, parts)

@@ -443,7 +443,7 @@ def test_copy_maxerror_tolerates_bad_rows(spark, tmp_path):
     <table>__load_errors view (STL_LOAD_ERRORS analog)."""
     from pyspark.sql import types as T
 
-    from locopy_spark.sources.copy import _parse_view, load_errors_view
+    from locopy_spark.sources.copy import load_errors_view
 
     f = tmp_path / "m.csv"
     f.write_text("1|x\n2|y\nnot_an_int|z\n3|w\n")
@@ -462,8 +462,8 @@ def test_copy_maxerror_tolerates_bad_rows(spark, tmp_path):
     assert rows == [(1, "x"), (2, "y"), (3, "w")]
     errs = spark.table(load_errors_view("t_maxerr")).collect()
     assert len(errs) == 1 and "not_an_int" in errs[0].raw_line
-    # the error rows outlive the cached parse ...
-    spark.catalog.uncacheTable(_parse_view("t_maxerr"))
+    # the error rows outlive any cache ...
+    spark.catalog.clearCache()
     errs = spark.table(load_errors_view("t_maxerr")).collect()
     assert len(errs) == 1 and "not_an_int" in errs[0].raw_line
     # ... and a later COPY into the name replaces them
@@ -501,40 +501,65 @@ def test_copy_maxerror_bad_later_column_excluded(spark, tmp_path):
     assert spark.table("t_maxerr_col").select("a").count() == 2
 
 
-def test_copy_releases_previous_maxerror_parse(spark, tmp_path):
-    """A MAXERROR COPY caches its parse for the loaded view's readers;
-    the next COPY into the same name releases it."""
-    from pyspark import StorageLevel
+def test_copy_maxerror_view_survives_clear_cache_and_deleted_source(
+    spark, tmp_path
+):
+    """The MAXERROR-loaded view excludes a row whose bad value sits in a
+    later column under a one-column projection, with no cache and no
+    source file left to re-read."""
     from pyspark.sql import types as T
 
-    from locopy_spark.sources.copy import _parse_view
+    f = tmp_path / "m4.csv"
+    f.write_text("1|10|x\n2|oops|y\n3|30|z\n")
+    schema = T.StructType(
+        [
+            T.StructField("a", T.LongType()),
+            T.StructField("b", T.LongType()),
+            T.StructField("c", T.StringType()),
+        ]
+    )
+    copy_files(
+        spark, str(f), "t_maxerr_gone", delim="|", schema=schema,
+        copy_options=["MAXERROR 1"],
+    )
+    f.unlink()
+    spark.catalog.clearCache()
+    got = spark.sql("SELECT count(a), sum(a) FROM t_maxerr_gone").first()
+    assert tuple(got) == (2, 4)
+    assert spark.table("t_maxerr_gone").count() == 2
+
+
+def test_copy_maxerror_leaves_no_cache(spark, tmp_path):
+    """MAXERROR COPYs own nothing process-wide: after six loads into
+    one name the cache manager is empty, no parse view is registered,
+    and every load read its own rows."""
+    from pyspark.sql import types as T
 
     schema = T.StructType(
         [T.StructField("a", T.LongType()), T.StructField("b", T.StringType())]
     )
-    f1, f2, f3 = (tmp_path / f"r{i}.csv" for i in range(3))
-    f1.write_text("1|x\nbad|y\n")
-    f2.write_text("2|z\n3|w\n")
-    f3.write_text("4|v\n")
-
-    def load(f, opts):
-        return copy_files(
+    spark.catalog.clearCache()
+    for i in range(6):
+        f = tmp_path / f"r{i}.csv"
+        f.write_text(f"{i}|x\nbad|y\n{i + 10}|z\n")
+        df = copy_files(
             spark, str(f), "t_maxerr_rel", delim="|", schema=schema,
-            copy_options=opts,
+            copy_options=["MAXERROR 5"],
         )
-
-    load(f1, ["MAXERROR 5"])
-    first = spark.table(_parse_view("t_maxerr_rel"))
-    assert first.storageLevel != StorageLevel.NONE
-    df = load(f2, ["MAXERROR 5"])
-    assert first.storageLevel == StorageLevel.NONE
-    second = spark.table(_parse_view("t_maxerr_rel"))
-    assert second.storageLevel != StorageLevel.NONE
-    assert sorted((r.a, r.b) for r in df.collect()) == [(2, "z"), (3, "w")]
+        assert sorted((r.a, r.b) for r in df.collect()) == [
+            (i, "x"), (i + 10, "z")
+        ]
+        assert spark.table("t_maxerr_rel").count() == 2
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    names = [t.name for t in spark.catalog.listTables()]
+    assert not [n for n in names if "__maxerror_parse" in n], names
     # a COPY without MAXERROR replaces the name too
-    load(f3, [])
-    assert second.storageLevel == StorageLevel.NONE
-    assert not spark.catalog.tableExists(_parse_view("t_maxerr_rel"))
+    f = tmp_path / "plain.csv"
+    f.write_text("4|v\n")
+    copy_files(spark, str(f), "t_maxerr_rel", delim="|", schema=schema)
+    assert [tuple(r) for r in spark.table("t_maxerr_rel").collect()] == [
+        (4, "v")
+    ]
 
 
 def test_copy_maxerror_exceeded_fails(spark, tmp_path):

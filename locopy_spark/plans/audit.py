@@ -79,16 +79,3 @@ def codegen_stage_count(df: DataFrame) -> int:
     df.collect()  # count() would wrap a new plan; collect finalizes THIS one
     text = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     return len(set(re.findall(r"\*\((\d+)\)", text)))
-
-
-def audit_report(df: DataFrame) -> dict:
-    """One-stop summary used by tests and tuning sessions."""
-    return {
-        "pushed_filters": pushed_filters(df),
-        "read_schemas": read_schemas(df),
-        "broadcast_join": has_broadcast_join(df),
-        "cartesian": has_cartesian(df),
-        "bnl_join": has_broadcast_nested_loop(df),
-        "shuffles": shuffle_count(df),
-        "codegen_stages": codegen_stage_count(df),
-    }

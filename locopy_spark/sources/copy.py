@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 from locopy_spark.errors import DBError
 from locopy_spark.sources.options import (
     CopyOptions,
+    file_format_options,
     parse_copy_options,
     split_option,
 )
@@ -116,33 +117,38 @@ def _lines_after_header(spark: SparkSession, path, n_skip: int):
     return sc.union(rdds) if rdds else sc.emptyRDD()
 
 
+def _hidden(name: str) -> bool:
+    return name.startswith(".") or name.startswith("_") and "=" not in name
+
+
 def _leaf_files(spark: SparkSession, path) -> list[str]:
     """Enumerate leaf data files under ``path`` (a file, dir, glob, or
     list thereof) via the Hadoop FileSystem API — metadata-only, no
     data read (a ``spark.read.text`` + ``input_file_name`` scan would
     read every byte just to learn the file list).  Mirrors Spark's own
-    listing rules: hidden files (``_``/``.`` prefixes) are skipped.
+    listing rules: directories are descended (``year=1/`` partition
+    dirs included) and hidden names are skipped — ``.`` prefixes, and
+    ``_`` prefixes without an ``=``.  This is the one listing of what
+    a COPY reads: the IGNOREHEADER n>1 path reads it, PURGE deletes it.
     """
     sc = spark.sparkContext
-    jvm = sc._jvm
     hconf = sc._jsc.hadoopConfiguration()
     out: list[str] = []
+
+    def walk(fs, st) -> None:
+        if not st.isDirectory():
+            out.append(st.getPath().toString())
+            return
+        for sub in fs.listStatus(st.getPath()):
+            if not _hidden(sub.getPath().getName()):
+                walk(fs, sub)
+
     for p in path if isinstance(path, list) else [path]:
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
+        hpath = sc._jvm.org.apache.hadoop.fs.Path(p)
         fs = hpath.getFileSystem(hconf)
-        statuses = fs.globStatus(hpath)
-        if statuses is None:
-            continue
-        for st in statuses:
-            if st.isDirectory():
-                for sub in fs.listStatus(st.getPath()):
-                    name = sub.getPath().getName()
-                    if sub.isFile() and not name.startswith(("_", ".")):
-                        out.append(sub.getPath().toString())
-            else:
-                name = st.getPath().getName()
-                if not name.startswith(("_", ".")):
-                    out.append(st.getPath().toString())
+        for st in fs.globStatus(hpath) or []:
+            if st.isDirectory() or not _hidden(st.getPath().getName()):
+                walk(fs, st)
     return out
 
 
@@ -172,7 +178,8 @@ def copy_files(
 
     Parameters mirror the reference ``copy`` (delimiter, options list
     incl. ``IGNOREHEADER n``, gzip transparency); ``file_format`` adds
-    the snowflake-style csv/json/parquet choice. ``copy_options`` is a
+    the snowflake-style format choice, any name in
+    ``sources.options.FILE_FORMATS``. ``copy_options`` is a
     list of option strings or a parsed ``CopyOptions``; a ``DELIMITER``
     or format marker among them overrides ``delim``/``file_format``.
     The view is a lazy read of the files, except that a ``MAXERROR``
@@ -185,7 +192,7 @@ def copy_files(
         else parse_copy_options(copy_options)
     )
     ignore_header, max_error = opts.ignore_header, opts.max_error
-    fmt = (opts.file_format or file_format).lower()
+    fmt, defaults = file_format_options(opts.file_format or file_format, "COPY")
     if max_error is not None and (fmt != "csv" or schema is None):
         # Redshift MAXERROR semantics need per-row parse verdicts: only
         # the csv reader in PERMISSIVE mode against an EXPLICIT schema
@@ -195,12 +202,12 @@ def copy_files(
             "MAXERROR requires file_format='csv' and an explicit schema"
         )
     try:
-        reader = spark.read
+        reader = spark.read.options(**defaults)
         if schema is not None:
             reader = reader.schema(schema)
         if reader_options:
             # passthrough for format-specific knobs (mergeSchema,
-            # recursiveFileLookup, pathGlobFilter, ...)
+            # recursiveFileLookup, pathGlobFilter, rowTag, ...)
             reader = reader.options(**reader_options)
         if fmt == "csv":
             reader = reader.options(
@@ -228,59 +235,26 @@ def copy_files(
                     .option("mode", "PERMISSIVE")
                     .option("columnNameOfCorruptRecord", _CORRUPT_COL)
                 )
-            if ignore_header > 1:
-                # per-file exact n-line skip; the resulting string RDD
-                # goes through the same csv parser (all options incl.
-                # PERMISSIVE/corrupt-record apply)
-                df = reader.csv(
-                    _lines_after_header(spark, path, ignore_header)
-                )
-            else:
-                df = reader.csv(path)
-        elif fmt == "json":
-            df = reader.json(path)
-        elif fmt == "parquet":
-            df = reader.parquet(*path if isinstance(path, list) else [path])
-        elif fmt == "orc":
-            df = reader.orc(path)
-        elif fmt == "text":
-            # raw line-per-row ingestion (column: value) — corpus landing
-            df = reader.text(path)
-        elif fmt == "xml":
-            # native in Spark 4 (SPARK-44265); rowTag defaults to "row",
-            # override via reader_options={"rowTag": ...}. Spark reader
-            # options are case-INsensitive, so match the user's key that
-            # way — a later .option("rowTag", "row") would clobber a
-            # user-supplied "rowtag".
-            xml_reader = reader.format("xml")
-            has_rowtag = reader_options and any(
-                k.lower() == "rowtag" for k in reader_options
-            )
-            if not has_rowtag:
-                xml_reader = xml_reader.option("rowTag", "row")
-            df = xml_reader.load(path)
-        elif fmt == "binaryfile":
-            # whole-file payload ingestion (path, modificationTime,
-            # length, content binary) — the multimodal landing format;
-            # pathGlobFilter via reader_options scopes the scan
-            df = reader.format("binaryFile").load(path)
-        elif fmt == "avro":
-            # built-in but an EXTERNAL module (spark-avro jar) since
-            # Spark 2.4: try it — deployments that ship the jar just
-            # work — and on the classpath-miss enrich the error with
-            # the full resolvable coordinate
+        if fmt == "csv" and ignore_header > 1:
+            # per-file exact n-line skip; the resulting string RDD goes
+            # through the same csv parser (all options incl.
+            # PERMISSIVE/corrupt-record apply)
+            df = reader.csv(_lines_after_header(spark, path, ignore_header))
+        else:
             try:
-                df = reader.format("avro").load(path)
-            except Exception as avro_err:
-                if "avro" in str(avro_err).lower():
+                df = reader.format(fmt).load(path)
+            except Exception as load_err:
+                if fmt == "avro" and "avro" in str(load_err).lower():
+                    # built-in but an EXTERNAL module (spark-avro jar)
+                    # since Spark 2.4: deployments that ship the jar
+                    # just work; on the classpath miss, name the
+                    # resolvable coordinate
                     raise ValueError(
                         "file_format='avro' needs the spark-avro package "
                         "on the session classpath, e.g. --packages "
                         "org.apache.spark:spark-avro_2.13:<spark-version>"
-                    ) from avro_err
+                    ) from load_err
                 raise
-        else:
-            raise ValueError(f"unsupported file_format: {file_format}")
     except Exception as e:
         raise DBError(f"Error loading {path} into {table_name}.") from e
     # this load replaces table_name, and the error rows of a previous

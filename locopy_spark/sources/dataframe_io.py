@@ -60,7 +60,6 @@ def insert_dataframe_to_table(
     columns: list[str] | None = None,
     create: bool = True,
     metadata: dict[str, str] | None = None,
-    mode: str = "append",
     temp_view: bool = False,
 ) -> DataFrame:
     """Insert a pandas DataFrame into a Spark table.
@@ -94,9 +93,7 @@ def insert_dataframe_to_table(
             return sdf
         writer = sdf.write
         if create:
-            writer.mode("overwrite" if mode == "overwrite" else "errorifexists").saveAsTable(
-                table_name
-            ) if mode != "append" else writer.mode("append").saveAsTable(table_name)
+            writer.mode("append").saveAsTable(table_name)
         else:
             writer.insertInto(table_name)
         return spark.table(table_name)

@@ -117,6 +117,33 @@ def _megabytes(value: str) -> float:
 
 _FORMATS = {f: f.lower() for f in ("CSV", "JSON", "PARQUET", "ORC", "AVRO")}
 
+# file format → (UNLOAD writes it, the reader/writer options every COPY
+# or UNLOAD of it gets). Spark's DataSource lookup resolves the name
+# itself (case-insensitively), and a caller's reader option applied
+# after these overrides one whatever its case (``rowtag``).
+FILE_FORMATS: dict[str, tuple[bool, dict[str, str]]] = {
+    "csv": (True, {}),
+    "json": (True, {}),
+    "parquet": (True, {}),
+    "orc": (True, {}),
+    "xml": (True, {"rowTag": "row"}),  # native since Spark 4
+    "text": (False, {}),  # one row per line, column ``value``
+    "binaryfile": (False, {}),  # one row per file: path, length, content
+    "avro": (False, {}),  # needs the external spark-avro module
+}
+
+
+def file_format_options(file_format: str, statement: str) -> tuple[str, dict]:
+    """The lower-cased name of a format ``statement`` (COPY or UNLOAD)
+    moves, and its fixed options; a DBError naming any other."""
+    fmt = file_format.lower()
+    if fmt not in FILE_FORMATS or (
+        statement == "UNLOAD" and not FILE_FORMATS[fmt][0]
+    ):
+        raise DBError(f"Unsupported {statement} file_format: {file_format!r}")
+    return fmt, FILE_FORMATS[fmt][1]
+
+
 # statement → keyword → (class, record field, value parser). Classes:
 #   semantic — sets the record field its consumer applies
 #   marker   — names the file format (``PARQUET``, ``JSON 'auto'``)

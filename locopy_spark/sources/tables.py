@@ -1,14 +1,11 @@
 """Canonical testdata table loader.
 
 All tables are plain parquet scans (columnar, predicate-pushdown-able).
-``events`` stores ``TIMESTAMP(NANOS)``, which reads differently across
-runtimes: Spark 4.1 reads it natively as µs-truncated TIMESTAMP_NTZ
-(and ignores the legacy conf); older runtimes need
-``spark.sql.legacy.parquet.nanosAsLong`` and deliver bigint nanos, from
-which we derive a microsecond ``ts`` by integer division. Both paths
-match DuckDB's native ns→µs truncation, keeping oracle comparisons
-bit-identical; queries consume ``ts`` through the type-robust
-``functions.numeric.epoch_us`` helper.
+``events`` stores ``TIMESTAMP(NANOS)``, which the pinned Spark 4.1
+reads natively as µs-truncated TIMESTAMP_NTZ — DuckDB's own ns→µs
+truncation, so oracle comparisons stay bit-identical. Queries consume
+``ts`` through the type-robust ``functions.numeric.epoch_us`` helper.
+A load sets no session conf.
 """
 
 from __future__ import annotations
@@ -16,7 +13,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 CORE_TABLES = [
     "region",
@@ -39,25 +35,7 @@ BROADCAST_TABLES = {"region", "nation", "supplier", "part"}
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            # keep raw nanos; expose µs-truncated timestamp as `ts`
-            df = df.withColumn("ts_ns", F.col("ts")).withColumn(
-                "ts", F.expr("timestamp_micros(ts_ns div 1000)")
-            )
-        return df
-    return spark.read.parquet(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=None) -> dict[str, DataFrame]:
-    """Load several tables; defaults to the full star schema."""
-    return {n: load_table(spark, sf_dir, n) for n in (names or CORE_TABLES)}
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=None) -> list[str]:

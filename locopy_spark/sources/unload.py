@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from locopy_spark.errors import DBError
+from locopy_spark.sources.options import file_format_options
 
 
 def _estimate_row_bytes(df: DataFrame, delim: str, sample_rows: int = 10_000) -> float:
@@ -51,14 +52,18 @@ def unload(
 ) -> DataFrame:
     """Run ``query`` and write the result under ``path``.
 
+    ``file_format`` is csv, json, parquet, orc or xml (the UNLOAD
+    formats of ``sources.options.FILE_FORMATS``).
     ``splits=None`` keeps the plan's natural partitioning (cluster
-    decides); an int forces that many output files; ``partition_by``
+    decides); an int forces that many output files (``coalesce(1)``
+    for one, the reference's concatenate); ``partition_by``
     produces hive-style directory partitioning for pruning on re-read.
     ``max_file_mb`` bounds output file size (Redshift UNLOAD
     ``MAXFILESIZE``): translated to Spark's per-file record cap using a
     sampled row-size estimate, so it composes with ``splits`` (each
     partition rolls to a new file when the cap is hit).
     """
+    fmt, defaults = file_format_options(file_format, "UNLOAD")
     try:
         df = spark.sql(query)
         out = df
@@ -76,20 +81,9 @@ def unload(
             writer = writer.option("compression", compression)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        fmt = file_format.lower()
         if fmt == "csv":
-            writer.options(sep=delim, header=header).csv(path)
-        elif fmt == "json":
-            writer.json(path)
-        elif fmt == "parquet":
-            writer.parquet(path)
-        elif fmt == "orc":
-            writer.orc(path)
-        elif fmt == "xml":
-            # native Spark-4 XML writer; <row> elements under <rows>
-            writer.format("xml").option("rowTag", "row").save(path)
-        else:
-            raise ValueError(f"unsupported file_format: {file_format}")
+            writer = writer.options(sep=delim, header=header)
+        writer.format(fmt).options(**defaults).save(path)
         return df
     except Exception as e:
         raise DBError(f"Error unloading query to {path}.") from e

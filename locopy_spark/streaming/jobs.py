@@ -5,19 +5,15 @@ swap ``readStream.format``). Watermarks bound state; the batch twins in
 ``queries.events`` define the expected results, which the tests check
 via the memory sink + ``processAllAvailable``.
 
-The nanosecond-timestamp parquet reads differently across runtimes:
-legacy Spark needs ``nanosAsLong`` (ts arrives as bigint nanos), while
-Spark 4.1 reads it natively as µs-truncated TIMESTAMP_NTZ and ignores
-the legacy conf. The stream source probes the batch reader's schema
-for the same file and adapts, then normalizes ``ts`` to an LTZ
-timestamp whose epoch micros equal the naive parquet micros — so every
-downstream job can use ``unix_micros`` and match the batch twins
-bit-for-bit in any session time zone.
+The nanosecond-timestamp parquet reads as µs-truncated TIMESTAMP_NTZ
+(as the batch loader reads it). A watermark needs an LTZ timestamp, so
+the stream source rebases ``ts`` to the LTZ timestamp whose epoch
+micros equal the naive parquet micros — every downstream job can use
+``unix_micros`` and match the batch twins bit-for-bit in any session
+time zone.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,54 +21,37 @@ from pyspark.sql import types as T
 
 from locopy_spark.functions.numeric import exact_sum
 
-_EVENT_FIELDS = [
-    ("event_id", T.LongType()),
-    ("ts", None),  # runtime-dependent: bigint nanos or TIMESTAMP_NTZ
-    ("user_id", T.LongType()),
-    ("event_type", T.StringType()),
-    ("value", T.DoubleType()),
-    ("props", T.StringType()),
-]
+_EVENT_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampNTZType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
 
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    # Probe how THIS runtime reads the ts column (footer-only batch
-    # read): a wrong explicit schema silently mis-scales the values.
-    path = os.path.join(sf_dir, "events.parquet")
-    ts_type = spark.read.parquet(path).schema["ts"].dataType
-    schema = T.StructType(
-        [
-            T.StructField(name, ts_type if name == "ts" else dtype)
-            for name, dtype in _EVENT_FIELDS
-        ]
-    )
     # the file source wants a directory: stream the sf dir, filtered to
     # the events file (in production this is a landing directory)
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_EVENT_SCHEMA)
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
-    if isinstance(ts_type, T.LongType):
-        # legacy nanosAsLong runtime: raw int64 nanos
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if isinstance(ts_type, T.TimestampNTZType):
-        # Spark 4 native read (µs-truncated NTZ): rebase to LTZ at the
-        # same integer micros, independent of the session time zone
-        return raw.withColumn(
-            "ts",
-            F.expr(
-                "timestamp_micros(timestampdiff(MICROSECOND,"
-                " timestamp_ntz'1970-01-01 00:00:00', ts))"
-            ),
-        )
-    return raw  # already an LTZ timestamp
+    # rebase NTZ to LTZ at the same integer micros, independent of the
+    # session time zone (a watermark on an NTZ column is refused)
+    return raw.withColumn(
+        "ts",
+        F.expr(
+            "timestamp_micros(timestampdiff(MICROSECOND,"
+            " timestamp_ntz'1970-01-01 00:00:00', ts))"
+        ),
+    )
 
 
 def stream_window_agg(

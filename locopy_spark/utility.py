@@ -2,9 +2,10 @@
 
 Parity targets: reference locopy/utility.py:49-537. The file-shaping
 utilities (split/compress/concatenate) exist here for API parity on
-local files, but the Spark-first equivalents live in
-``locopy_spark.sources.files`` — on a cluster you shape files by
-controlling write partitioning and codecs, not by re-reading bytes.
+local files, but the Spark-first equivalent is
+``locopy_spark.sources.unload.unload`` (``splits``, ``compression``) —
+on a cluster you shape files by controlling write partitioning and
+codecs, not by re-reading bytes.
 """
 
 from __future__ import annotations

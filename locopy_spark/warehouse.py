@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 
 from locopy_spark.database import Database
 from locopy_spark.errors import DBError
-from locopy_spark.sources.copy import copy_files
+from locopy_spark.sources.copy import _leaf_files, copy_files
 from locopy_spark.sources.dataframe_io import insert_dataframe_to_table
 from locopy_spark.sources.options import (
     CopyOptions,
@@ -233,23 +233,22 @@ class Warehouse(Database):
         purge_keys: list[str] = []
         if opts.purge:
             # fail fast: PURGE needs the stage transport AND every
-            # load path must live under the stage root — discovering
-            # either AFTER a successful load would leave the caller
-            # with a loaded table, an error, and (worse, silently)
-            # staged data it believes was purged
-            import glob as _glob
-
+            # file the load reads must live under the stage root —
+            # discovering either AFTER a successful load would leave
+            # the caller with a loaded table, an error, and (worse,
+            # silently) staged data it believes was purged.  The keys
+            # are the files the load reads, listed as Spark lists them
             st = self._require_stage()
-            for p in path if isinstance(path, list) else [path]:
-                for m in _glob.glob(p) or [p]:
-                    key = os.path.relpath(m, st.root)
-                    if key.startswith(".."):
-                        raise DBError(
-                            f"PURGE = TRUE but load path {m!r} is outside "
-                            f"the stage root {st.root!r}; the stage "
-                            "transport cannot purge it"
-                        )
-                    purge_keys.append(key)
+            for f in _leaf_files(self.spark, path):
+                local = f.removeprefix("file:")
+                key = os.path.relpath(local, st.root)
+                if key.startswith(".."):
+                    raise DBError(
+                        f"PURGE = TRUE but load path {local!r} is outside "
+                        f"the stage root {st.root!r}; the stage "
+                        "transport cannot purge it"
+                    )
+                purge_keys.append(key)
         result = copy_files(
             self.spark,
             path,
@@ -261,8 +260,8 @@ class Warehouse(Database):
             materialize=opts.purge,
         )
         if opts.purge:
-            # keys were glob-expanded and root-validated BEFORE the
-            # copy (see above) — a failure here would otherwise strand
+            # keys were listed and root-validated BEFORE the copy
+            # (see above) — a failure here would otherwise strand
             # staged data after a successful load
             st = self._require_stage()
             for key in purge_keys:

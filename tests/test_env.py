@@ -148,6 +148,18 @@ def test_stream_ts_matches_batch_ts(spark, sf_dir):
     assert got == want
 
 
+def test_event_loads_leave_session_conf_unset(spark, sf_dir):
+    """Loading events, batch or stream, sets no conf on the caller's
+    session (the runtime reads the nanos column without one)."""
+    from locopy_spark.streaming.jobs import read_event_stream
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    load_table(spark, sf_dir, "events")
+    read_event_stream(spark, sf_dir)
+    assert spark.conf.get(key, None) is None
+
+
 def test_time_queries_are_session_tz_independent(spark, sf_dir):
     """The whole time family claims session-TZ independence (pure
     integer epoch math through epoch_us). Prove it: the same queries

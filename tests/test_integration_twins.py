@@ -456,6 +456,29 @@ def test_copy_purge_glob_path(wh, tmp_path):
     assert wh._stage.list("gl/*") == []
 
 
+def test_copy_purge_directory_path(wh, tmp_path):
+    """PURGE of a staged directory deletes the files the load read,
+    partition subdirs included, and leaves the marker file the reader
+    skipped."""
+    for i in range(2):
+        local = tmp_path / f"d{i}.txt"
+        _write_delim(local)
+        wh.upload_to_internal(str(local), f"dirp/year={i}/", auto_compress=False)
+    marker = os.path.join(wh._stage.root, "dirp", "_SUCCESS")
+    open(marker, "w").close()
+    wh.copy(
+        "dir_purge_testing",
+        os.path.join(wh._stage.root, "dirp"),
+        delim="|",
+        copy_options=["PURGE = TRUE"],
+        schema="id INT, variable STRING",
+    )
+    wh.execute("SELECT count(*) AS n FROM dir_purge_testing")
+    assert int(wh.to_dataframe()["n"][0]) == 2 * len(ROWS)
+    assert wh._stage.list("dirp/year=*/*") == []
+    assert wh._stage.list("dirp/*") == ["dirp/_SUCCESS", "dirp/year=0", "dirp/year=1"]
+
+
 def test_copy_purge_outside_stage_root_fails_fast(wh, tmp_path, spark):
     """PURGE = TRUE with a load path OUTSIDE the stage root must fail
     BEFORE loading (Snowflake PURGE semantics promise the staged data

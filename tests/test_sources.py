@@ -8,7 +8,6 @@ import pytest
 from locopy_spark.errors import DBError, StageDeletionError, StageError
 from locopy_spark.sources.copy import add_default_copy_options, copy_files
 from locopy_spark.sources.dataframe_io import insert_dataframe_to_table
-from locopy_spark.sources.files import write_single, write_split
 from locopy_spark.sources.stage import (
     Stage,
     generate_unload_path,
@@ -44,9 +43,16 @@ def test_copy_json_and_parquet(spark, tmp_path, sf_dir):
     assert copy_files(spark, p, "t_parq", file_format="parquet").count() == 5
 
 
-def test_copy_bad_format(spark):
+def test_copy_bad_format(spark, tmp_path):
     with pytest.raises(DBError):
         copy_files(spark, "/nonexistent", "t_bad", file_format="xml")
+    # a format outside the COPY or UNLOAD set fails before Spark runs,
+    # with a DBError naming it; UNLOAD writes no COPY-only format
+    with pytest.raises(DBError, match="Unsupported COPY file_format: 'delta'"):
+        copy_files(spark, str(tmp_path), "t_delta", file_format="delta")
+    with pytest.raises(DBError, match="Unsupported UNLOAD file_format: 'text'"):
+        unload(spark, "SELECT 1 AS a", str(tmp_path / "u"), file_format="text")
+    assert not (tmp_path / "u").exists()
 
 
 def test_default_copy_options():
@@ -166,12 +172,14 @@ def test_insert_empty_raises(spark):
         insert_dataframe_to_table(spark, pd.DataFrame(), "t_e")
 
 
-def test_write_split_and_single(spark, tmp_path):
-    df = spark.range(100).toDF("n")
-    parts = write_split(df, str(tmp_path / "s"), splits=4)
-    assert len(parts) == 4
-    one = write_single(df, str(tmp_path / "one"))
-    assert len(one) == 1
+def test_unload_split_and_single(spark, tmp_path):
+    """UNLOAD is the cluster-side split (``splits=n``: n files) and
+    concatenate (``splits=1``: one file) of the reference's utility."""
+    spark.range(100).toDF("n").createOrReplaceTempView("t_split_src")
+    unload(spark, "SELECT * FROM t_split_src", str(tmp_path / "s"), splits=4)
+    assert len(glob.glob(str(tmp_path / "s" / "part-*"))) == 4
+    unload(spark, "SELECT * FROM t_split_src", str(tmp_path / "one"), splits=1)
+    assert len(glob.glob(str(tmp_path / "one" / "part-*"))) == 1
     assert spark.read.csv(str(tmp_path / "one")).count() == 100
 
 
@@ -273,6 +281,34 @@ def test_ignoreheader_gt1_comma_in_filename(spark, tmp_path):
     )
     got = sorted((r.a, r.b) for r in df.collect())
     assert got == [(1, 2), (3, 4)]
+
+
+def test_ignoreheader_gt1_descends_partition_dirs(spark, tmp_path):
+    """IGNOREHEADER n>1 reads the files of nested partition dirs, as
+    the n == 1 native reader does; hidden dirs stay skipped."""
+    from pyspark.sql import types as T
+
+    d = tmp_path / "nested"
+    for sub in ("year=1", "year=2", "_tmp", ".staging"):
+        (d / sub).mkdir(parents=True)
+        (d / sub / "p.csv").write_text("h1\nh2\n1|2\n3|4\n5|6\n")
+    schema = T.StructType(
+        [T.StructField("a", T.LongType()), T.StructField("b", T.LongType())]
+    )
+    two = copy_files(
+        spark, str(d), "t_hdr_nested2", delim="|", schema=schema,
+        copy_options=["IGNOREHEADER 2"],
+    )
+    assert sorted((r.a, r.b) for r in two.collect()) == sorted(
+        [(1, 2), (3, 4), (5, 6)] * 2
+    )
+    (d / "year=1" / "p.csv").write_text("h\n1|2\n3|4\n5|6\n")
+    (d / "year=2" / "p.csv").write_text("h\n1|2\n3|4\n5|6\n")
+    one = copy_files(
+        spark, str(d), "t_hdr_nested1", delim="|", schema=schema,
+        copy_options=["IGNOREHEADER 1"],
+    )
+    assert one.count() == 6
 
 
 def test_ignoreheader_gt1_with_inference_and_gzip(spark, tmp_path):
@@ -597,6 +633,20 @@ def test_copy_xml_native(spark, tmp_path):
     )
     df = copy_files(spark, str(f), "t_xml", file_format="xml")
     assert sorted((r.a, r.b) for r in df.collect()) == [(1, "x"), (2, "y")]
+    # the format name is case-insensitive
+    df = copy_files(spark, str(f), "t_xml", file_format="XML")
+    assert sorted((r.a, r.b) for r in df.collect()) == [(1, "x"), (2, "y")]
+    # a caller's rowTag overrides the default in any case of the key
+    g = tmp_path / "items.xml"
+    g.write_text(
+        "<items><item><a>3</a></item><item><a>4</a></item></items>"
+    )
+    for key in ("rowTag", "rowtag", "ROWTAG"):
+        df = copy_files(
+            spark, str(g), "t_xml_item", file_format="xml",
+            reader_options={key: "item"},
+        )
+        assert sorted(r.a for r in df.collect()) == [3, 4]
 
 
 def test_copy_binaryfile_payloads(spark, tmp_path):
